@@ -1506,7 +1506,8 @@ def _bloom_wb(sh: F.Column, m: int) -> F.Column:
     # Double division is bit-exact only while pos < 2^53, and pos < m
     # always — fail loudly instead of diverging from the build side if
     # a caller ever asks for a bitmap that large.
-    assert m <= 1 << 52, f"bloom m={m} exceeds the exact float-div range"
+    if m > 1 << 52:
+        raise ValueError(f"bloom m={m} exceeds the exact float-div range")
     md = F.md5(sh)
     out = []
     for j in range(3):

@@ -21,6 +21,12 @@ from pyspark.sql import functions as F
 from finance_data_pipeline_spark.extensions.dedup import _spread
 
 
+# Rounds between lineage-cutting localCheckpoints in the lazily chained
+# iterative operators (pagerank, label_propagation): the default round
+# counts never reach it, and iters ≫ 6 still cannot stack deep plans.
+_CHECKPOINT_EVERY = 6
+
+
 def pagerank(
     edges: DataFrame,
     iters: int = 5,
@@ -28,109 +34,12 @@ def pagerank(
     scale: int = 1_000_000_000,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 6,
 ) -> DataFrame:
     """Fixed-iteration integer PageRank over directed (src, dst) long
-    edges. Returns (node, rank_scaled, pagerank) where rank_scaled is
-    the exact integer state (rank ≈ rank_scaled / scale).
-
-    The update is the textbook r' = (1-d)/N + d·Σ r(u)/outdeg(u), but
-    every division is integer floor division and the damping factor is
-    a percentage — ``r' = teleport + (damping_pct · Σ (r(u) div
-    deg(u))) div 100`` with ``teleport = ((100-damping_pct)·scale div
-    100) div N`` — so partial-aggregation order cannot perturb a single
-    bit (long addition is associative; a float formulation differs
-    between engines in last-ulp bits that compound across iterations).
-    Dangling mass is dropped (nodes without out-edges redistribute
-    nothing — the standard simplification; with symmetrized edges every
-    node has outdeg ≥ 1 and no mass is lost).
-
-    Scale shape per iteration: one join of the edge list against the
-    N-row rank vector (shuffle on src), one map-side-combined sum into
-    dst, one left join back onto nodes. Rounds CHAIN LAZILY — each
-    round references the previous rank vector exactly once, so the
-    plan grows linearly, and running all rounds as ONE job lets the
-    scheduler pipeline stages instead of paying a blocking
-    materialization barrier per round (guide §2.4/§1.2 — the former
-    per-round localCheckpoint cost one eager job each: measured 5.6 s
-    → 3.1 s for the 5-round bench query). ``checkpoint_every`` cuts
-    lineage with localCheckpoint every that-many rounds so iters ≫ 5
-    still cannot stack deep plans (connected_components' discipline;
-    the default re-checkpoints only past round 6). The only
-    driver-side values are N (one count) and the constant teleport —
-    no rank data ever collects.
-
-    Overflow headroom: Σ contribs ≤ N·scale and the damping multiply
-    stays < 2^63 while N·scale·damping_pct < 9.2e18 — at scale=1e9
-    that is ~10⁸ nodes; shrink ``scale`` for larger graphs.
-    """
-    # The edge list is materialized ONCE up front (guide §1.2 — don't
-    # compute things twice): nd and ed_deg are both eager
-    # localCheckpoints, and without this seam each re-derived the whole
-    # upstream edge pipeline (for the supplier↔customer graph that is
-    # the lineitem⋈orders distinct join) in its own job. Edges are two
-    # longs per row — materializing them is the same safe trade the
-    # ed_deg checkpoint below already makes.
-    ed = _spread(
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    ).localCheckpoint()
-    # Fused node-set + out-degree pass (guide §2.4): each edge emits
-    # its endpoints row-locally (src tagged 1, dst tagged 0) and ONE
-    # map-side-combined groupBy yields both the distinct node set and
-    # every node's out-degree — the former shape paid two full passes
-    # over the edge stream (a union+distinct for nodes, a separate
-    # groupBy for deg) plus a third in the ed⋈deg join's deg side.
-    # sum(tag) = count of src occurrences = the old count(*) per src.
-    nd = (
-        ed.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("src").alias("node"), F.lit(1).alias("_o")),
-                    F.struct(F.col("dst").alias("node"), F.lit(0).alias("_o")),
-                )
-            ).alias("_n")
-        )
-        .select("_n.node", "_n._o")
-        .groupBy("node")
-        .agg(F.sum("_o").cast("long").alias("deg"))
-        .localCheckpoint()
-    )
-    n_nodes = nd.count()
-    nodes = nd.select("node")
-    if n_nodes == 0:
-        return nodes.select(
-            "node",
-            F.lit(0).cast("long").alias("rank_scaled"),
-            F.lit(0.0).alias("pagerank"),
-        )
-    deg = nd.filter(F.col("deg") > 0).select(F.col("node").alias("src"), "deg")
-    ed_deg = ed.join(deg, "src").localCheckpoint()
-    teleport = ((100 - damping_pct) * scale // 100) // n_nodes
-
-    ranks = nodes.select(
-        "node", F.lit(scale // n_nodes).cast("long").alias("r")
-    )
-    for i in range(iters):
-        contrib = ed_deg.join(ranks, ed_deg["src"] == ranks["node"]).select(
-            F.col("dst").alias("node"), F.expr("r div deg").alias("c")
-        )
-        sums = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        ranks = nodes.join(sums, "node", "left").select(
-            "node",
-            (
-                F.lit(teleport)
-                + F.expr(
-                    f"({damping_pct} * coalesce(s, CAST(0 AS BIGINT))) div 100"
-                )
-            ).cast("long").alias("r"),
-        )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0 and (i + 1) < iters:
-            ranks = ranks.localCheckpoint()
-    return ranks.select(
-        "node",
-        F.col("r").alias("rank_scaled"),
-        (F.col("r") / F.lit(float(scale))).alias("pagerank"),
-    )
+    edges: personalized_pagerank with every node a seed. Returns (node,
+    rank_scaled, pagerank) where rank_scaled is the exact integer state
+    (rank ≈ rank_scaled / scale)."""
+    return personalized_pagerank(edges, None, iters, damping_pct, scale, src, dst)
 
 
 def triangles(pairs: DataFrame, a: str = "id_a", b: str = "id_b") -> DataFrame:
@@ -158,7 +67,7 @@ def triangles(pairs: DataFrame, a: str = "id_a", b: str = "id_b") -> DataFrame:
     once per reference: the static plan for dup_triangles was 265
     shuffles before, ~10 after. The edge list of a similarity graph is
     orders of magnitude smaller than the corpus it came from, so
-    materializing it is the same safe trade pagerank() above and the
+    materializing it is the same safe trade pagerank() and the
     fixed-point Lloyd trainer make.
     """
     und = pairs.select(F.col(a).alias("u"), F.col(b).alias("v")).distinct().localCheckpoint()
@@ -256,7 +165,6 @@ def label_propagation(
     rounds: int = 3,
     a: str = "id_a",
     b: str = "id_b",
-    checkpoint_every: int = 6,
 ) -> DataFrame:
     """Synchronous frequency label propagation over an undirected pair
     graph — community detection that, unlike connected components
@@ -286,8 +194,9 @@ def label_propagation(
     (the dup_triangles lesson). Rounds CHAIN LAZILY — each round
     references the previous label vector exactly once, so the former
     per-round eager localCheckpoint (one blocking job per round) is
-    pure overhead (pagerank's r9 lesson, guide §2.4/§1.2);
-    ``checkpoint_every`` bounds lineage for rounds ≫ the default.
+    pure overhead (pagerank's r9 lesson, guide §2.4/§1.2); a
+    localCheckpoint every _CHECKPOINT_EVERY rounds bounds lineage for
+    rounds ≫ the default.
 
     Returns (node, community) for every node in the pair graph.
     """
@@ -322,48 +231,82 @@ def label_propagation(
             .filter(F.col("_rn") == 1)
             .select("node", "lbl")
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0 and (i + 1) < rounds:
+        if (i + 1) % _CHECKPOINT_EVERY == 0 and (i + 1) < rounds:
             labels = labels.localCheckpoint()
     return labels.select("node", F.col("lbl").alias("community"))
 
 
 def personalized_pagerank(
     edges: DataFrame,
-    seeds: DataFrame,
+    seeds: DataFrame | None,
     iters: int = 5,
     damping_pct: int = 85,
     scale: int = 1_000_000_000,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 6,
 ) -> DataFrame:
     """Personalized PageRank (the topic-sensitive variant, Haveliwala
-    2002): teleport mass returns ONLY to the seed set, so ranks measure
-    proximity to the seeds rather than global centrality — the
-    "more like these" expansion primitive (seed domains → related
-    domains; seed customers → similar customers). Same integer
-    fixed-point discipline as pagerank(): every division is integer
-    floor division, so the whole iteration replays bit-exactly in an
-    unrolled SQL oracle.
+    2002) over directed (src, dst) long edges: teleport mass returns
+    ONLY to the seed set, so ranks measure proximity to the seeds
+    rather than global centrality — the "more like these" expansion
+    primitive (seed domains → related domains; seed customers → similar
+    customers). ``seeds=None`` makes every node a seed, which is plain
+    PageRank (pagerank() above). Returns (node, rank_scaled, pagerank)
+    where rank_scaled is the exact integer state (rank ≈ rank_scaled /
+    scale).
+
+    The update is the textbook r' = teleport + d·Σ r(u)/outdeg(u), but
+    every division is integer floor division and the damping factor is
+    a percentage — ``r' = teleport + (damping_pct · Σ (r(u) div
+    deg(u))) div 100`` with ``teleport = ((100-damping_pct)·scale div
+    100) div S`` on the S seeds (0 elsewhere) — so partial-aggregation
+    order cannot perturb a single bit (long addition is associative; a
+    float formulation differs between engines in last-ulp bits that
+    compound across iterations) and the whole iteration replays
+    bit-exactly in an unrolled SQL oracle. Initial rank: scale div S on
+    seeds, 0 elsewhere. Dangling mass is dropped (nodes without
+    out-edges redistribute nothing — the standard simplification; with
+    symmetrized edges every node has outdeg ≥ 1 and no mass is lost).
 
     ``seeds`` is a one-column (node) frame; it is intersected with the
-    graph's node set, counted once on the driver (a bounded count, like
-    pagerank's N), and broadcast into the per-round teleport term.
-    Initial rank: scale // n_seeds on seeds, 0 elsewhere — total mass
-    conserved up to floor rounding exactly as the oracle computes it.
+    graph's node set and counted once on the driver. With seeds=None,
+    S is the node count N and no seed join is built.
 
-    Scale shape per round: identical to pagerank() — one edge⋈rank
-    shuffle, one map-side-combined sum, one left join onto nodes, with
-    rounds chaining lazily into one job and ``checkpoint_every``
-    truncating lineage past round 6 (see pagerank's docstring for the
-    measured per-round-barrier cost this removes).
+    Scale shape per iteration: one join of the edge list against the
+    N-row rank vector (shuffle on src), one map-side-combined sum into
+    dst, one left join back onto nodes. Rounds CHAIN LAZILY — each
+    round references the previous rank vector exactly once, so the
+    plan grows linearly, and running all rounds as ONE job lets the
+    scheduler pipeline stages instead of paying a blocking
+    materialization barrier per round (guide §2.4/§1.2 — the former
+    per-round localCheckpoint cost one eager job each: measured 5.6 s
+    → 3.1 s for the 5-round bench query). A localCheckpoint every
+    _CHECKPOINT_EVERY rounds cuts lineage for iters ≫ 5
+    (connected_components' discipline). The only driver-side values
+    are S (one count) and the constant teleport — no rank data ever
+    collects.
+
+    Overflow headroom: Σ contribs ≤ N·scale and the damping multiply
+    stays < 2^63 while N·scale·damping_pct < 9.2e18 — at scale=1e9
+    that is ~10⁸ nodes; shrink ``scale`` for larger graphs.
     """
-    # Edge list materialized once — see pagerank() above (nd, seed_nodes
-    # and ed_deg all sit downstream of it).
+    # The edge list is materialized ONCE up front (guide §1.2 — don't
+    # compute things twice): nd, the seed set and ed_deg are all eager
+    # localCheckpoints downstream of it, and without this seam each
+    # re-derived the whole upstream edge pipeline (for the
+    # supplier↔customer graph that is the lineitem⋈orders distinct
+    # join) in its own job. Edges are two longs per row — materializing
+    # them is the same safe trade the ed_deg checkpoint below makes.
     ed = _spread(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     ).localCheckpoint()
-    # Fused node-set + out-degree pass — see pagerank() above.
+    # Fused node-set + out-degree pass (guide §2.4): each edge emits
+    # its endpoints row-locally (src tagged 1, dst tagged 0) and ONE
+    # map-side-combined groupBy yields both the distinct node set and
+    # every node's out-degree — the former shape paid two full passes
+    # over the edge stream (a union+distinct for nodes, a separate
+    # groupBy for deg) plus a third in the ed⋈deg join's deg side.
+    # sum(tag) = count of src occurrences = the old count(*) per src.
     nd = (
         ed.select(
             F.explode(
@@ -379,12 +322,27 @@ def personalized_pagerank(
         .localCheckpoint()
     )
     nodes = nd.select("node")
-    seed_nodes = (
-        nodes.join(seeds.select(F.col(seeds.columns[0]).alias("node")), "node")
-        .select("node")
-        .localCheckpoint()
-    )
-    n_seeds = seed_nodes.count()
+    if seeds is None:
+        base = nodes
+        n_seeds = nd.count()
+
+        def on_seeds(x: int) -> F.Column:
+            return F.lit(x)
+
+    else:
+        seed_nodes = (
+            nodes.join(seeds.select(F.col(seeds.columns[0]).alias("node")), "node")
+            .select("node")
+            .localCheckpoint()
+        )
+        n_seeds = seed_nodes.count()
+        base = nodes.join(
+            seed_nodes.withColumn("_is_seed", F.lit(True)), "node", "left"
+        ).select("node", F.coalesce("_is_seed", F.lit(False)).alias("_is_seed"))
+
+        def on_seeds(x: int) -> F.Column:
+            return F.when(F.col("_is_seed"), F.lit(x)).otherwise(F.lit(0))
+
     if n_seeds == 0:
         return nodes.select(
             "node",
@@ -393,28 +351,20 @@ def personalized_pagerank(
         )
     deg = nd.filter(F.col("deg") > 0).select(F.col("node").alias("src"), "deg")
     ed_deg = ed.join(deg, "src").localCheckpoint()
+    if seeds is not None:
+        base = base.localCheckpoint()
     teleport = ((100 - damping_pct) * scale // 100) // n_seeds
 
-    flagged = nodes.join(
-        seed_nodes.withColumn("_is_seed", F.lit(True)), "node", "left"
-    ).select("node", F.coalesce("_is_seed", F.lit(False)).alias("_is_seed"))
-    flagged = flagged.localCheckpoint()
-    ranks = flagged.select(
-        "node",
-        F.when(F.col("_is_seed"), F.lit(scale // n_seeds))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("r"),
-    )
+    ranks = base.select("node", on_seeds(scale // n_seeds).cast("long").alias("r"))
     for i in range(iters):
         contrib = ed_deg.join(ranks, ed_deg["src"] == ranks["node"]).select(
             F.col("dst").alias("node"), F.expr("r div deg").alias("c")
         )
         sums = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        ranks = flagged.join(sums, "node", "left").select(
+        ranks = base.join(sums, "node", "left").select(
             "node",
             (
-                F.when(F.col("_is_seed"), F.lit(teleport)).otherwise(F.lit(0))
+                on_seeds(teleport)
                 + F.expr(
                     f"({damping_pct} * coalesce(s, CAST(0 AS BIGINT))) div 100"
                 )
@@ -422,7 +372,7 @@ def personalized_pagerank(
             .cast("long")
             .alias("r"),
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0 and (i + 1) < iters:
+        if (i + 1) % _CHECKPOINT_EVERY == 0 and (i + 1) < iters:
             ranks = ranks.localCheckpoint()
     return ranks.select(
         "node",

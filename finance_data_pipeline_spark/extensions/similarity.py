@@ -41,6 +41,18 @@ def valid_vectors(vectors: DataFrame, vec_col: str = "embedding") -> DataFrame:
     )
 
 
+def _vectors(vectors: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(_id, _e array<double>) spread to full parallelism — the input
+    shape of every Lloyd/assignment pass below (per-row scoring is
+    interpreted HOF math, and small files scan as one partition)."""
+    return _spread(
+        vectors.select(
+            F.col(id_col).alias("_id"),
+            F.transform(vec_col, lambda x: x.cast("double")).alias("_e"),
+        )
+    )
+
+
 def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -507,9 +519,7 @@ def semantic_dedup(
     rows. NULL / zero-norm vectors are excluded up front (valid_vectors).
     """
     vectors = valid_vectors(vectors, vec_col)
-    v = _spread(
-        vectors.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_e"))
-    )
+    v = _vectors(vectors, id_col, vec_col)
     if centroids is None:
         centroids = vectors.filter(F.col(id_col) < k_centroids).select(
             F.col(id_col).alias("_cid"), F.col(vec_col).alias("_ce")
@@ -572,31 +582,18 @@ def _let(col: F.Column, fn) -> F.Column:
     return F.element_at(F.transform(F.array(col), fn), 1)
 
 
-def _packed_centroids(centroids: DataFrame) -> DataFrame:
-    """One-row frame holding every (_cid, _ce, _cn) struct sorted by
-    _cid — the broadcastable form a ROW-LOCAL argmax iterates. k is
-    bounded (centroid/codebook frames are k ≤ a few thousand rows by
-    construction), so the packed array is a few hundred KB at most."""
-    cn = centroids.select("_cid", "_ce", l2_norm("_ce").alias("_cn"))
-    return cn.groupBy().agg(
-        F.array_sort(
-            F.collect_list(F.struct("_cid", "_ce", "_cn"))
-        ).alias("_cents")
-    )
-
-
 def _row_local_scores(
-    vec_norm: F.Column, vec: F.Column, cents_arr: F.Column | None = None
+    vec_norm: F.Column, vec: F.Column, cents_arr: F.Column
 ) -> F.Column:
     """array<struct<s,n,cid>> of cosine scores of one vector against
-    a packed centroid array (default: the ``_cents`` column): per
-    centroid the IDENTICAL float ops as the former crossJoin
+    a packed codeword array (one _packed_codebooks block): per
+    codeword the IDENTICAL float ops as the former crossJoin
     formulation (one dot fold, the precomputed norms' product, round
     to 6 dp; zero-norm pairs score 0.0), so the argmax — array_max
     struct ordering = (max sim, then lowest cid) — is bit-equal to the
     old max_by(struct(_sim, -_cid))."""
     return F.transform(
-        F.col("_cents") if cents_arr is None else cents_arr,
+        cents_arr,
         lambda c: F.struct(
             F.round(
                 F.when(
@@ -611,49 +608,158 @@ def _row_local_scores(
     )
 
 
-def _assign_to_centroids(v: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment by cosine (rounded to 6 dp; argmax
-    ties → lowest centroid id). ``v`` carries (_id, _e); centroids
-    carry (_cid, _ce).
+def _packed_codebooks(cents: DataFrame) -> DataFrame:
+    """One-row frame holding map<_b → array<(_cid,_ce,_cn)> sorted by
+    _cid> — the broadcastable per-block codebook a ROW-LOCAL
+    assignment indexes by its block id (k-means centroids are the
+    one-block case, _b = 0). ONE global aggregate collects the sorted
+    flat codeword array and the per-block map is a projection over
+    that single row: a per-block groupBy first would add an exchange,
+    i.e. one more eager job in every trainer's checkpoint. n_blocks·k
+    is bounded (≤ a few thousand codewords by construction), so the
+    packed row is a few hundred KB at most."""
+    flat = cents.groupBy().agg(
+        F.array_sort(
+            F.collect_list(
+                F.struct("_b", "_cid", "_ce", l2_norm("_ce").alias("_cn"))
+            )
+        ).alias("_all")
+    )
+    blocks = F.array_distinct(F.transform("_all", lambda c: c["_b"]))
+    return flat.select(
+        F.map_from_arrays(
+            blocks,
+            F.transform(
+                blocks,
+                lambda b: F.transform(
+                    F.filter("_all", lambda c: c["_b"] == b),
+                    lambda c: c.dropFields("_b"),
+                ),
+            ),
+        ).alias("_books")
+    )
 
-    PRECONDITION: ``v`` has one row per ``_id``. This projection emits
-    exactly one output row per INPUT ROW (the pre-r9 groupBy('_id')
-    collapsed duplicates; the row-local form does not) — every current
-    caller passes a one-row-per-id frame (valid_vectors output), and a
-    duplicate-id input would silently double rows downstream.
 
-    ROW-LOCAL argmax (guide §2.4 — remove shuffles outright): the k
-    centroids are packed into ONE broadcast row and every vector scores
-    them inside a single projection — the former broadcast crossJoin
-    (k-fold row fan-out) + max_by hash-aggregate needed a corpus-sized
-    shuffle of k·N rows back to one row per vector; this needs NO
-    exchange at all. Per-pair float ops are identical (one interpreted
-    HOF dot fold each — same count as before), so assignments are
-    bit-equal; only the plan shape changes (measured: 2 exchanges + a
-    sort-aggregate removed per assignment pass).
+def _assign_blocks(vb: DataFrame, cents: DataFrame) -> DataFrame:
+    """Per-block nearest-codeword assignment (cosine, 6 dp, ties to the
+    lowest code): ``vb`` carries (_id, _b, _be), ``cents`` the (_b,
+    _cid, _ce) codebook, so ONE distributed pass assigns every block of
+    every vector. A zero-norm sub-vector (or codeword) scores 0 to
+    everything instead of NULL/NaN — never a job-failing ANSI division
+    — so the argmax stays well-defined and lands on the lowest code in
+    both engines.
 
-    Zero-norm guard: same rule as _assign_blocks — scores 0, never a
-    job-failing ANSI division (a zero vector lands on the lowest id).
-    """
-    vn = v.select("_id", "_e", l2_norm("_e").alias("_vn"))
-    # The 0/1-element explode is (a) the empty-centroid guard — the old
-    # inner join emitted no rows when the centroid frame was empty, and
-    # array_max over the empty packed array is NULL — and (b) a
-    # projection barrier: the argmax lands as a Generate output
-    # attribute, so downstream field accesses are cheap references
-    # instead of re-inlined copies of the k-fold scoring expression.
-    return vn.crossJoin(F.broadcast(_packed_centroids(centroids))).select(
+    PRECONDITION: one row per (_id, _b). The projection emits exactly
+    one output row per INPUT ROW (the pre-r9 groupBy collapsed
+    duplicates; the row-local form does not) — every caller passes
+    valid_vectors output, and a duplicate-id input would silently
+    double rows downstream.
+
+    ROW-LOCAL argmax (guide §2.4): the whole codebook packs into one
+    broadcast map<block → codewords> and each row scores ONLY its
+    block's codewords in place — the former shape broadcast-joined the
+    codebook on _b (k-fold row fan-out) and hash-aggregated
+    k·n_blocks·N rows back down, a corpus-sized exchange this
+    formulation never performs. Per-pair float ops are identical →
+    bit-equal codes."""
+    vn = vb.withColumn("_vn", l2_norm("_be"))
+    # A block id absent from the codebook (an empty codebook, e.g. from
+    # empty training input) yields NULL from element_at, array_max over
+    # it is NULL, and the 0/1-element explode drops the row (no
+    # assignment, as an inner join would give). The explode doubles as
+    # the projection barrier so the argmax is computed once per row.
+    return vn.crossJoin(F.broadcast(_packed_codebooks(cents))).select(
         "_id",
-        "_e",
+        "_b",
+        "_be",
         F.explode(
             F.filter(
                 F.array(
-                    F.array_max(_row_local_scores(F.col("_vn"), F.col("_e")))
+                    F.array_max(
+                        _row_local_scores(
+                            F.col("_vn"),
+                            F.col("_be"),
+                            F.element_at("_books", F.col("_b")),
+                        )
+                    )
                 ),
                 lambda e: e.isNotNull(),
             )
         ).alias("_best"),
-    ).select("_id", F.col("_best")["cid"].alias("cluster_id"), "_e")
+    ).select("_id", "_b", F.col("_best")["cid"].alias("code"), "_be")
+
+
+def _assign_to_centroids(v: DataFrame, centroids: DataFrame) -> DataFrame:
+    """Nearest-centroid assignment by cosine — the one-block case of
+    _assign_blocks. ``v`` carries (_id, _e), centroids (_cid, _ce);
+    returns (_id, cluster_id, _e)."""
+    return _assign_blocks(
+        v.select("_id", F.lit(0).alias("_b"), F.col("_e").alias("_be")),
+        centroids.select(F.lit(0).alias("_b"), "_cid", "_ce"),
+    ).select("_id", F.col("code").alias("cluster_id"), F.col("_be").alias("_e"))
+
+
+def _fixed_point_means(
+    df: DataFrame, keys: list[str], vec: str, scale: int
+) -> DataFrame:
+    """Exact elementwise mean of the ``vec`` arrays per ``keys`` group:
+    (*keys, _ce). Each component is scaled by ``scale``, rounded to a
+    long and summed exactly (long addition is associative/commutative,
+    so Spark's partial-aggregation order vs DuckDB's scan order cannot
+    differ), then divided once — the same move as
+    functions.fixed_point_sum for the TPC-H money columns. A naive
+    avg() over doubles differs between engines in the last bits, and
+    those bits can flip a downstream argmax.
+
+    Shape: one posexplode → groupBy(keys, pos) keyed on
+    |groups|·dim (map-side combined), then a |groups|-row collect_list
+    rebuild of each mean vector."""
+    means = (
+        df.select(*keys, F.posexplode(vec).alias("_pos", "_c"))
+        .groupBy(*keys, "_pos")
+        .agg(
+            F.sum(F.round(F.col("_c") * scale, 0).cast("long")).alias("_s"),
+            F.count("*").alias("_n"),
+        )
+        .select(
+            *keys,
+            "_pos",
+            (F.col("_s").cast("double") / (F.lit(float(scale)) * F.col("_n"))).alias("_m"),
+        )
+    )
+    return (
+        means.groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(F.struct("_pos", "_m"))).alias("_pm"))
+        .select(*keys, F.transform("_pm", lambda s: s["_m"]).alias("_ce"))
+    )
+
+
+def _lloyd(vb: DataFrame, k: int, iters: int, scale: int) -> DataFrame:
+    """The fixed-point Lloyd trainer behind kmeans_centroids (one
+    block, _b = 0) and pq_codebooks (one block per sub-vector slice):
+    over (_id, _b, _be) rows, every block learns its own k-codeword
+    quantizer from deterministic seeds (the k lowest ids' rows), by
+    cosine assignment at 6 dp with ties to the lowest code
+    (_assign_blocks) and exact fixed-point means (_fixed_point_means)
+    — a pure function of the input, so the SQL oracle replays each
+    iteration exactly.
+
+    All blocks train in ONE distributed pass per iteration (the block
+    is just another grouping key), not n_blocks sequential trainers.
+    Empty clusters drop out of the next round (both engines compute
+    means over member-bearing clusters only). Returns (_b, _cid, _ce),
+    materialized with localCheckpoint (connected_components' move):
+    consumers reference the codebook several times (assignment, probe
+    scoring, GEMM candidates), and without the cut each reference
+    re-derives the whole iterative trainer inside one plan."""
+    cents = vb.filter(F.col("_id") < k).select(
+        "_b", F.col("_id").alias("_cid"), F.col("_be").alias("_ce")
+    )
+    for _ in range(iters):
+        cents = _fixed_point_means(
+            _assign_blocks(vb, cents), ["_b", "code"], "_be", scale
+        ).withColumnRenamed("code", "_cid")
+    return cents.localCheckpoint()
 
 
 def kmeans_clusters(
@@ -668,25 +774,14 @@ def kmeans_clusters(
     """Spherical k-means (Lloyd's algorithm), run for a FIXED number of
     iterations from deterministic seeds (the ``k`` lowest-id vectors) —
     an iterative distributed ML algorithm that is still a pure function
-    of its input, so the SQL oracle replays each iteration exactly.
+    of its input, so the SQL oracle replays each iteration exactly: the
+    centroid update is an element-wise mean computed in FIXED POINT
+    (_lloyd, _fixed_point_means).
 
-    The trick that makes cross-engine exactness possible: the centroid
-    update is an element-wise mean computed in FIXED POINT — each
-    component is scaled by ``scale``, rounded to a long, summed exactly
-    (long addition is associative/commutative, so Spark's partial-
-    aggregation order vs DuckDB's scan order cannot differ), and
-    divided once — same move as functions.fixed_point_sum uses for the
-    TPC-H money columns. A naive avg() over doubles differs between
-    engines in the last bits and those bits can flip an argmax.
-
-    Scale shape per iteration: one broadcast crossJoin (k centroid
-    rows), one map-side-combined max_by (assignment), one posexplode →
-    groupBy(cluster, pos) — keyed on k·dim ≤ a few thousand groups —
-    and a k-row collect_list rebuild. No driver state; iterations
-    extend the lineage, so production runs (iters ≫ 2) would
-    localCheckpoint per round exactly as connected_components does.
-    Empty clusters drop out of the next round (both engines compute
-    means over member-bearing clusters only).
+    Scale shape per iteration: one row-local assignment against the
+    broadcast packed centroids, one posexplode → groupBy(cluster, pos)
+    — keyed on k·dim ≤ a few thousand groups — and a k-row
+    collect_list rebuild. No driver state.
 
     ``train_n`` bounds the TRAINING set to the train_n lowest-id
     vectors (the 100 TB form — centroids need a representative sample,
@@ -698,12 +793,7 @@ def kmeans_clusters(
     NULL / zero-norm vectors are excluded up front (valid_vectors).
     """
     vectors = valid_vectors(vectors, vec_col)
-    v = _spread(
-        vectors.select(
-            F.col(id_col).alias("_id"),
-            F.transform(vec_col, lambda x: x.cast("double")).alias("_e"),
-        )
-    )
+    v = _vectors(vectors, id_col, vec_col)
     cents = kmeans_centroids(vectors, k, iters, id_col, vec_col, scale, train_n)
     return _assign_to_centroids(v, cents).select(
         F.col("_id").alias(id_col), "cluster_id"
@@ -746,58 +836,19 @@ def kmeans_centroids(
 ) -> DataFrame:
     """The Lloyd trainer behind kmeans_clusters, exposed so downstream
     operators (semantic_dedup's ``centroids=``, the deterministic IVF
-    quantizer) can reuse the trained (_cid, _ce) frame. Deterministic
-    rules per kmeans_clusters' docstring: seeds = k lowest-id vectors,
-    cosine assignment rounded to 6 dp with ties to the lowest cid,
-    exact fixed-point elementwise means. ``train_n`` bounds the
-    training set to ids below train_n (deterministic and
-    SQL-replayable — the pq_codebooks discipline; assumes DENSE
-    0-BASED ids and fails fast via _bounded_train_set when the bound
-    selects fewer than k vectors); None = full corpus, the
-    oracle-checked default. NULL / zero-norm vectors are excluded up
-    front (valid_vectors)."""
+    quantizer) can reuse the trained (_cid, _ce) frame: _lloyd over a
+    single block (seeds = k lowest-id vectors, cosine assignment
+    rounded to 6 dp with ties to the lowest cid, exact fixed-point
+    elementwise means). ``train_n`` bounds the training set to ids
+    below train_n (deterministic and SQL-replayable — the pq_codebooks
+    discipline; assumes DENSE 0-BASED ids and fails fast via
+    _bounded_train_set when the bound selects fewer than k vectors);
+    None = full corpus, the oracle-checked default. NULL / zero-norm
+    vectors are excluded up front (valid_vectors)."""
     vectors = valid_vectors(vectors, vec_col)
-    v = _spread(
-        vectors.select(
-            F.col(id_col).alias("_id"),
-            F.transform(vec_col, lambda x: x.cast("double")).alias("_e"),
-        )
-    )
-    v = _bounded_train_set(v, train_n, k)
-    cents = v.filter(F.col("_id") < k).select(
-        F.col("_id").alias("_cid"), F.col("_e").alias("_ce")
-    )
-    for _ in range(iters):
-        assigned = _assign_to_centroids(v, cents)
-        comp = assigned.select(
-            "cluster_id", F.posexplode("_e").alias("_pos", "_c")
-        )
-        means = (
-            comp.groupBy("cluster_id", "_pos")
-            .agg(
-                F.sum(F.round(F.col("_c") * scale, 0).cast("long")).alias("_s"),
-                F.count("*").alias("_n"),
-            )
-            .select(
-                "cluster_id",
-                "_pos",
-                (F.col("_s").cast("double") / (F.lit(float(scale)) * F.col("_n"))).alias("_m"),
-            )
-        )
-        cents = (
-            means.groupBy("cluster_id")
-            .agg(F.array_sort(F.collect_list(F.struct("_pos", "_m"))).alias("_pm"))
-            .select(
-                F.col("cluster_id").alias("_cid"),
-                F.transform("_pm", lambda s: s["_m"]).alias("_ce"),
-            )
-        )
-    # Materialize the k-row centroid frame (same move as
-    # connected_components' per-round localCheckpoint): consumers
-    # reference it several times (assignment, probe scoring, GEMM
-    # candidates), and without the cut each reference re-derives the
-    # whole iterative trainer inside one plan.
-    return cents.localCheckpoint()
+    v = _bounded_train_set(_vectors(vectors, id_col, vec_col), train_n, k)
+    vb = v.select("_id", F.lit(0).alias("_b"), F.col("_e").alias("_be"))
+    return _lloyd(vb, k, iters, scale).drop("_b")
 
 
 def kmeans_cluster_quality(
@@ -825,12 +876,7 @@ def kmeans_cluster_quality(
     NULL / zero-norm vectors are excluded up front (valid_vectors).
     """
     vectors = valid_vectors(vectors, vec_col)
-    v = _spread(
-        vectors.select(
-            F.col(id_col).alias("_id"),
-            F.transform(vec_col, lambda x: x.cast("double")).alias("_e"),
-        )
-    )
+    v = _vectors(vectors, id_col, vec_col)
     cents = kmeans_centroids(vectors, k, iters, id_col, vec_col, scale)
     # ROW-LOCAL own/other extraction (guide §2.4): score the packed
     # broadcast centroids inside one projection, take the argmax struct
@@ -843,7 +889,9 @@ def kmeans_cluster_quality(
     # argmax, same micro-unit sums.
     vn = v.select("_id", "_e", l2_norm("_e").alias("_vn"))
     rep = _let(
-        _row_local_scores(F.col("_vn"), F.col("_e")),
+        _row_local_scores(
+            F.col("_vn"), F.col("_e"), F.element_at("_books", F.lit(0))
+        ),
         lambda arr: _let(
             F.array_max(arr),
             lambda best: F.struct(
@@ -859,7 +907,8 @@ def kmeans_cluster_quality(
     # other-centroid max emitted no rows when there was no other
     # centroid — the 0/1-element explode drops those rows (and doubles
     # as the projection barrier so the scoring array is computed once).
-    scored = vn.crossJoin(F.broadcast(_packed_centroids(cents))).select(
+    books = _packed_codebooks(cents.select(F.lit(0).alias("_b"), "_cid", "_ce"))
+    scored = vn.crossJoin(F.broadcast(books)).select(
         F.explode(
             F.filter(F.array(rep), lambda e: e["_other"].isNotNull())
         ).alias("_r")
@@ -908,13 +957,7 @@ def ivf_topk_deterministic(
     vectors = valid_vectors(vectors, vec_col)
     queries = valid_vectors(queries, vec_col)
     cents = kmeans_centroids(vectors, n_cells, train_iters, id_col, vec_col)
-    v = _spread(
-        vectors.select(
-            F.col(id_col).alias("_id"),
-            F.transform(vec_col, lambda x: x.cast("double")).alias("_e"),
-        )
-    )
-    cells = _assign_to_centroids(v, cents).select(
+    cells = _assign_to_centroids(_vectors(vectors, id_col, vec_col), cents).select(
         F.col("_id").alias("neighbor_id"),
         F.col("cluster_id").alias("cell"),
         F.col("_e").alias("_nv"),
@@ -1015,9 +1058,9 @@ def label_outliers(
     mislabeling or junk embeddings.
 
     The centroid is the exact fixed-point elementwise mean
-    (kmeans_centroids' trick: scaled-long sums are order-independent,
-    so the result is a pure function of the input and the whole
-    operator — argmin ranks included — replays in the SQL oracle).
+    (_fixed_point_means: scaled-long sums are order-independent, so the
+    result is a pure function of the input and the whole operator —
+    argmin ranks included — replays in the SQL oracle).
 
     Scale shape: one posexplode → groupBy(label, pos) keyed on
     |labels|·dim groups (map-side combined), a broadcast join of the
@@ -1039,26 +1082,8 @@ def label_outliers(
             F.transform(vec_col, lambda x: x.cast("double")).alias("_e"),
         )
     ).filter(dot("_e", "_e") > 0)
-    comp = v.select(label_col, F.posexplode("_e").alias("_pos", "_c"))
-    means = (
-        comp.groupBy(label_col, "_pos")
-        .agg(
-            F.sum(F.round(F.col("_c") * scale, 0).cast("long")).alias("_s"),
-            F.count("*").alias("_n"),
-        )
-        .select(
-            label_col,
-            "_pos",
-            (F.col("_s").cast("double") / (F.lit(float(scale)) * F.col("_n"))).alias(
-                "_m"
-            ),
-        )
-    )
-    cents = (
-        means.groupBy(label_col)
-        .agg(F.array_sort(F.collect_list(F.struct("_pos", "_m"))).alias("_pm"))
-        .select(label_col, F.transform("_pm", lambda s: s["_m"]).alias("_ce"))
-        .filter(dot("_ce", "_ce") > 0)
+    cents = _fixed_point_means(v, [label_col], "_e", scale).filter(
+        dot("_ce", "_ce") > 0
     )
     scored = v.join(F.broadcast(cents), label_col).select(
         id_col,
@@ -1082,62 +1107,6 @@ def _block_slices(vec: F.Column, n_blocks: int, sub_dim: int) -> F.Column:
     )
 
 
-def _packed_codebooks(cents: DataFrame) -> DataFrame:
-    """One-row frame holding map<_b → sorted array<(_cid,_ce,_cn)>> —
-    the broadcastable per-block codebook a ROW-LOCAL block assignment
-    indexes by its block id. n_blocks·k is bounded (≤ a few thousand
-    codewords by construction)."""
-    cn = cents.select("_b", "_cid", "_ce", l2_norm("_ce").alias("_cn"))
-    per_block = cn.groupBy("_b").agg(
-        F.array_sort(F.collect_list(F.struct("_cid", "_ce", "_cn"))).alias("_cb")
-    )
-    return per_block.groupBy().agg(
-        F.map_from_entries(F.collect_list(F.struct("_b", "_cb"))).alias("_books")
-    )
-
-
-def _assign_blocks(vb: DataFrame, cents: DataFrame) -> DataFrame:
-    """Per-block nearest-codeword assignment (cosine, 6 dp, ties to the
-    lowest code) — _assign_to_centroids generalized to a (block, code)
-    codebook, so ONE distributed pass assigns every block of every
-    vector. A zero-norm sub-vector (or codeword) scores 0 to everything
-    instead of NULL/NaN, so the argmax stays well-defined and lands on
-    the lowest code in both engines.
-
-    ROW-LOCAL argmax (guide §2.4): the whole codebook packs into one
-    broadcast map<block → codewords> and each exploded (_id, _b, _be)
-    row scores ONLY its block's codewords in place — the former shape
-    broadcast-joined the codebook on _b (k-fold row fan-out) and
-    hash-aggregated k·n_blocks·N rows back down, a corpus-sized
-    exchange this formulation never performs. Per-pair float ops are
-    identical → bit-equal codes."""
-    vn = vb.withColumn("_vn", l2_norm("_be"))
-    # A block id absent from the codebook (impossible for non-empty
-    # training input) previously emitted no row via the inner join;
-    # element_at yields NULL there and the 0/1-element explode drops
-    # the row — and doubles as the projection barrier so the argmax is
-    # computed once per row.
-    return vn.crossJoin(F.broadcast(_packed_codebooks(cents))).select(
-        "_id",
-        "_b",
-        "_be",
-        F.explode(
-            F.filter(
-                F.array(
-                    F.array_max(
-                        _row_local_scores(
-                            F.col("_vn"),
-                            F.col("_be"),
-                            F.element_at("_books", F.col("_b")),
-                        )
-                    )
-                ),
-                lambda e: e.isNotNull(),
-            )
-        ).alias("_best"),
-    ).select("_id", "_b", F.col("_best")["cid"].alias("code"), "_be")
-
-
 def pq_codebooks(
     vectors: DataFrame,
     n_blocks: int = 8,
@@ -1151,16 +1120,13 @@ def pq_codebooks(
 ) -> DataFrame:
     """Train the PQ codebooks: each vector splits into ``n_blocks``
     contiguous ``sub_dim``-dim sub-vectors and every block learns its
-    own ``k``-codeword quantizer by the SAME deterministic fixed-point
-    Lloyd recipe as kmeans_centroids (seeds = the k lowest-id vectors'
-    slices, cosine assignment at 6 dp with ties to the lowest code,
-    exact scaled-long means) — so the full trainer replays in SQL.
-
-    All blocks train in ONE distributed job per iteration (block is
-    just another grouping key: assignment joins the n_blocks·k-row
-    codebook on ``_b``; the mean groups on (block, code, pos)) — not
-    n_blocks sequential trainers. Returns (_b, _cid, _ce),
+    own ``k``-codeword quantizer with the fixed-point Lloyd trainer
+    (_lloyd — the one kmeans_centroids runs on a single block), so the
+    full trainer replays in SQL. Returns (_b, _cid, _ce),
     localCheckpointed for its many downstream references.
+
+    ``k`` ≤ 256: ann_topk_pq's ADC lookup packs (block, code) as
+    block·256 + code, so more codewords per block would collide.
 
     ``train_n`` bounds the TRAINING SET to the ``train_n`` lowest-id
     vectors — the 100 TB deployment form (standard PQ practice, same
@@ -1169,54 +1135,23 @@ def pq_codebooks(
     instead of O(corpus); encode/score still sweep everything). The
     bound is deterministic and SQL-replayable (``WHERE {id} <
     train_n``) and assumes DENSE 0-BASED ids — _bounded_train_set
-    fails fast when it selects fewer than k vectors. Default None trains on the full corpus — the
-    oracle-checked registry configuration at test SFs, where the
-    corpus IS sample-sized.
+    fails fast when it selects fewer than k vectors. Default None
+    trains on the full corpus — the oracle-checked registry
+    configuration at test SFs, where the corpus IS sample-sized.
     """
-    v = _spread(
-        vectors.select(
-            F.col(id_col).alias("_id"),
-            F.transform(vec_col, lambda x: x.cast("double")).alias("_e"),
+    if k > 256:
+        raise ValueError(
+            f"pq_codebooks k={k} exceeds 256, the ADC packing stride of "
+            "ann_topk_pq (block·256 + code)"
         )
-    )
-    v = _bounded_train_set(v, train_n, k)
+    v = _bounded_train_set(_vectors(vectors, id_col, vec_col), train_n, k)
     vb = v.select(
         "_id",
         F.posexplode(_block_slices(F.col("_e"), n_blocks, sub_dim)).alias(
             "_b", "_be"
         ),
     )
-    cents = vb.filter(F.col("_id") < k).select(
-        "_b", F.col("_id").alias("_cid"), F.col("_be").alias("_ce")
-    )
-    for _ in range(iters):
-        assigned = _assign_blocks(vb, cents)
-        comp = assigned.select("_b", "code", F.posexplode("_be").alias("_pos", "_c"))
-        means = (
-            comp.groupBy("_b", "code", "_pos")
-            .agg(
-                F.sum(F.round(F.col("_c") * scale, 0).cast("long")).alias("_s"),
-                F.count("*").alias("_n"),
-            )
-            .select(
-                "_b",
-                "code",
-                "_pos",
-                (
-                    F.col("_s").cast("double") / (F.lit(float(scale)) * F.col("_n"))
-                ).alias("_m"),
-            )
-        )
-        cents = (
-            means.groupBy("_b", "code")
-            .agg(F.array_sort(F.collect_list(F.struct("_pos", "_m"))).alias("_pm"))
-            .select(
-                "_b",
-                F.col("code").alias("_cid"),
-                F.transform("_pm", lambda s: s["_m"]).alias("_ce"),
-            )
-        )
-    return cents.localCheckpoint()
+    return _lloyd(vb, k, iters, scale)
 
 
 def pq_encode(
@@ -1241,12 +1176,7 @@ def pq_encode(
     (_row_local_scores = the old join-form scoring), so codes are
     bit-equal; block order is the natural 0..n_blocks-1, matching the
     old array_sort(collect_list(struct(_b, code)))."""
-    v = _spread(
-        vectors.select(
-            F.col(id_col).alias("_id"),
-            F.transform(vec_col, lambda x: x.cast("double")).alias("_e"),
-        )
-    )
+    v = _vectors(vectors, id_col, vec_col)
     # Two-step transform: the per-block struct (slice, norm) is
     # materialized first so the norm fold runs once per block, not once
     # per (block, codeword) score.
@@ -1298,27 +1228,13 @@ def ann_topk_pq(
     """
     vectors = valid_vectors(vectors, vec_col)
     queries = valid_vectors(queries, vec_col)
-    # The ADC map key packs (_b, _cid) as _b·256+_cid, which collides
-    # (silently wrong scores) if the codebooks ever carry more than 256
-    # codewords per block — fail loudly if pq_codebooks' default k is
-    # raised past the packing stride.
-    import inspect
-
-    assert inspect.signature(pq_codebooks).parameters["k"].default <= 256, (
-        "ADC packing stride 256 requires pq_codebooks k <= 256"
-    )
     books = pq_codebooks(
         vectors, n_blocks, sub_dim, id_col=id_col, vec_col=vec_col,
         train_n=train_n,
     )
     codes = pq_encode(vectors, books, n_blocks, sub_dim, id_col, vec_col)
-    qb = _spread(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.transform(vec_col, lambda x: x.cast("double")).alias("_e"),
-        )
-    ).select(
-        "query_id",
+    qb = _vectors(queries, id_col, vec_col).select(
+        F.col("_id").alias("query_id"),
         F.posexplode(_block_slices(F.col("_e"), n_blocks, sub_dim)).alias(
             "_b", "_qe"
         ),

@@ -108,11 +108,3 @@ bars AS (
 )
 """.strip()
 
-
-def with_stocks_cte(body: str) -> str:
-    """Wrap an oracle query body with the stocks CTE."""
-    return f"WITH {STOCKS_CTE}\n{body}"
-
-
-def with_bars_cte(body: str) -> str:
-    return f"WITH {BARS_HOURLY_CTE}\n{body}"

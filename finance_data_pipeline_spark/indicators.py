@@ -141,13 +141,6 @@ def last_row_per_symbol(df: DataFrame, time_col: str = "date") -> DataFrame:
     return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
 
-def rank_within_symbol(df: DataFrame, order_col: str, method: str = "rank") -> DataFrame:
-    """W16 — ranking surface (not in reference; built-in completeness)."""
-    w = Window.partitionBy("symbol").orderBy(F.desc(order_col))
-    fn = {"rank": F.rank, "dense_rank": F.dense_rank, "row_number": F.row_number}[method]
-    return df.withColumn(method, fn().over(w))
-
-
 # --- EMA family (W3-W6): exact pandas ewm(adjust=True) ------------------
 
 

@@ -16,31 +16,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-# --- projections / filters (P1-P5, P7) ----------------------------------
+# --- projections (P1) ----------------------------------------------------
 
 def project(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """P1 — column projection; prunes the Parquet scan to these columns."""
     return df.select(*cols)
-
-
-def where_symbol(df: DataFrame, symbol: str) -> DataFrame:
-    """P3 — equality predicate (partition-pruned when layout partitions by symbol)."""
-    return df.filter(F.col("symbol") == symbol)
-
-
-def where_since(df: DataFrame, col: str, lower) -> DataFrame:
-    """P4 — lower-bound predicate (analyze_visualize.py:71-75)."""
-    return df.filter(F.col(col) >= lower)
-
-
-def where_between(df: DataFrame, col: str, lo, hi) -> DataFrame:
-    """P5 — between predicate (dashboard.py:64-65)."""
-    return df.filter(F.col(col).between(lo, hi))
-
-
-def validate_membership(df: DataFrame, universe: DataFrame, key: str) -> DataFrame:
-    """P7/J3 — keep rows whose key exists in the universe (left semi)."""
-    return df.join(universe.select(key).distinct(), key, "left_semi")
 
 
 # --- joins (J1-J7) -------------------------------------------------------
@@ -339,16 +319,8 @@ def top_k(df: DataFrame, order: Sequence[Column], k: int) -> DataFrame:
 
 # --- set ops (§2.7) -------------------------------------------------------
 
-def union_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.unionByName(b)
-
-
 def intersect(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.intersect(b)
-
-
-def except_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.exceptAll(b)
 
 
 # --- temporal versioning (SCD2 / gaps-and-islands) ------------------------

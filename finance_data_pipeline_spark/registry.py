@@ -589,7 +589,7 @@ ret AS (SELECT symbol, bar_ts,
           close / lag(close) OVER ({_W_BAR}) - 1 AS ret
         FROM bars)
 SELECT a.symbol AS symbol_a, b.symbol AS symbol_b,
-       round(corr(a.ret, b.ret), 4) AS corr_ab,
+       round(corr(a.ret, b.ret), 4) + 0.0 AS corr_ab,
        count(*) AS n_obs
 FROM ret a JOIN ret b ON a.bar_ts = b.bar_ts AND a.symbol < b.symbol
 WHERE a.ret IS NOT NULL AND b.ret IS NOT NULL
@@ -617,7 +617,9 @@ def q_pairwise_correlation(spark, sf_dir):
             F.col("a.symbol").alias("symbol_a"), F.col("b.symbol").alias("symbol_b")
         )
         .agg(
-            F.round(F.corr("a.ret", "b.ret"), 4).alias("corr_ab"),
+            # + 0.0 on both engines: a correlation in (-5e-5, 0) rounds
+            # to -0.0 in DuckDB but +0.0 in Spark (signed-zero convention).
+            (F.round(F.corr("a.ret", "b.ret"), 4) + 0.0).alias("corr_ab"),
             F.count("*").alias("n_obs"),
         )
         .orderBy("symbol_a", "symbol_b")

@@ -36,6 +36,7 @@ RUN_SLOW = os.environ.get("SPARK_GRAFT_SLOW_TESTS", "") == "1"
 # Queries whose parity test ALWAYS runs (restructured in recent rounds —
 # the highest-value regression guards).
 _PARITY_ALWAYS = {
+    "ann_topk_ivf_exact",
     "ann_topk_pq",
     "ann_topk_pq_rerank",
     "bm25_topk",
@@ -45,8 +46,10 @@ _PARITY_ALWAYS = {
     "bloom_decontaminate",
     "decontaminate_spans",
     "dedup_keep_best",
+    "embedding_outliers",
     "kmeans_clusters",
     "kmeans_cluster_quality",
+    "label_prop_communities",
     "line_dedup",
     "near_dup_pairs",
     "ngram_sim_join",
@@ -54,6 +57,7 @@ _PARITY_ALWAYS = {
     "pricing_summary",
     "remove_dup_spans",
     "semantic_dedup",
+    "semantic_dedup_kmeans",
     "source_ngram_overlap",
     "string_sim_join",
     "supplier_customer_pagerank",

@@ -443,6 +443,15 @@ def test_bloom_flags_planted_contamination(spark):
     assert out[train_ids[1]].exact_hit == 0 and out[train_ids[1]].bloom_hit == 0
 
 
+def test_bloom_probe_rejects_bitmap_past_exact_float_division(spark):
+    """The probe side's floor(pos / 63) is exact only below 2^53, so a
+    bitmap wider than 2^52 bits must raise — a ValueError, which unlike
+    an assert survives ``python -O``."""
+    dedup._bloom_wb(F.lit("a b c"), 1 << 52)
+    with pytest.raises(ValueError, match="exact float-div range"):
+        dedup._bloom_wb(F.lit("a b c"), (1 << 52) + 1)
+
+
 # --- label_outliers -------------------------------------------------------
 
 
@@ -609,6 +618,18 @@ def test_train_n_fails_fast_on_sparse_or_offset_ids(spark):
         similarity.kmeans_centroids(vecs, k=8, train_n=32)
     with _pt.raises(ValueError, match="dense 0-based ids"):
         similarity.pq_codebooks(vecs, n_blocks=2, sub_dim=8, train_n=32)
+
+
+def test_pq_codebooks_rejects_k_past_adc_packing_stride(spark):
+    """ann_topk_pq packs (block, code) as block·256 + code, so the k
+    actually passed to pq_codebooks (not its default) must be ≤ 256 —
+    checked with a ValueError that survives ``python -O``."""
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 3 + 1)] * 16) for i in range(4)],
+        "vec_id long, embedding array<double>",
+    )
+    with pytest.raises(ValueError, match="exceeds 256"):
+        similarity.pq_codebooks(vecs, n_blocks=2, sub_dim=8, k=257)
 
 
 def test_pq_adc_score_is_the_quantized_inner_product(spark):

@@ -512,6 +512,23 @@ def test_personalized_pagerank_empty_seed_set(spark):
     assert all(r.rank_scaled == 0 for r in out)
 
 
+def test_personalized_pagerank_seeded_on_every_node_is_pagerank(spark):
+    """Seeding every node (the seed-join path) and seeds=None (the path
+    pagerank takes) run the same integer arithmetic — teleport and
+    initial rank both divide by N — so the rank vectors are equal."""
+    from finance_data_pipeline_spark.extensions import graph
+
+    edges = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 3), (5, 3)]
+    e = spark.createDataFrame(edges, "src long, dst long")
+    every = spark.createDataFrame([(n,) for n in range(1, 6)], "node long")
+    seeded = {
+        r.node: r.rank_scaled
+        for r in graph.personalized_pagerank(e, every, iters=7).collect()
+    }
+    plain = {r.node: r.rank_scaled for r in graph.pagerank(e, iters=7).collect()}
+    assert seeded == plain and len(plain) == 5 and min(plain.values()) > 0
+
+
 def test_effective_token_mass_weights_clusters_once(spark):
     from finance_data_pipeline_spark.extensions import dedup
 

@@ -126,3 +126,45 @@ def test_parity_comparator_is_signbit_sensitive():
     big_b = np.zeros(600)
     big_b[599] = 1e-12  # str() of both truncates to the same "[0. 0. ... 0.]"
     assert not _values_match(big_a, big_b)
+
+
+def test_pairwise_correlation_tiny_negative_corr_is_plus_zero(spark, tmp_path):
+    """A return correlation in (-5e-5, 0) rounds to -0.0 in DuckDB and
+    +0.0 in Spark; the registry query and its oracle both carry the
+    terminal ``+ 0.0``, so the two engines hash-equal on it."""
+    import pandas as pd
+
+    from finance_data_pipeline_spark.registry import ORACLES, QUERIES
+    from tests.test_oracle_parity import _values_match
+
+    # Designed hourly returns: a alternates, b is orthogonal to a with
+    # zero mean, minus eps·a — so corr(a, b) ≈ -eps, a tiny negative.
+    eps = 2e-5
+    a = [0.01, -0.01] * 4
+    b = [r - eps * x for r, x in zip([0.01, 0.01, -0.01, -0.01] * 2, a)]
+    rows = []
+    for uid, rets in ((0, a), (1, b)):
+        close = 100.0
+        for h in range(len(rets) + 1):
+            if h:
+                close *= 1 + rets[h - 1]
+            rows.append((uid, pd.Timestamp("2024-01-01") + pd.Timedelta(hours=h), close))
+    events = pd.DataFrame(rows, columns=["user_id", "ts", "value"])
+    con = duckdb.connect()
+    con.register("ev", events)
+    con.sql(f"COPY ev TO '{tmp_path}/events.parquet' (FORMAT PARQUET)")
+    con.sql(f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet'")
+
+    raw = con.sql(
+        "WITH b AS (SELECT user_id, ts, value / lag(value) OVER "
+        "(PARTITION BY user_id ORDER BY ts) - 1 AS r FROM events) "
+        "SELECT corr(x.r, y.r) FROM b x JOIN b y ON x.ts = y.ts "
+        "WHERE x.user_id = 0 AND y.user_id = 1"
+    ).fetchone()[0]
+    assert -5e-5 < raw < 0, raw
+
+    got = QUERIES["pairwise_correlation"](spark, str(tmp_path)).collect()
+    want = con.sql(ORACLES["pairwise_correlation"]).fetchall()
+    assert len(got) == len(want) == 1
+    assert got[0].corr_ab == 0.0 and not _signbit(got[0].corr_ab)
+    assert _values_match(got[0].corr_ab, want[0][2])
