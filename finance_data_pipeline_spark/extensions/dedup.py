@@ -19,6 +19,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from finance_data_pipeline_spark.extensions.sampling import hash_nibble
+from finance_data_pipeline_spark.functions import let_
+
+# Documents whose md5(doc_id) starts with this nibble (~1/16 of the
+# corpus) are the held-out benchmark split of the decontamination
+# operators and their oracles.
+BENCH_NIBBLE = "f"
+
 # --- normalization / shingling ------------------------------------------
 
 
@@ -31,31 +39,28 @@ def tokens(col="text"):
     return F.split(normalized(col), r"\s+")
 
 
-def _let(col, fn):
-    """Expression-level let-binding (see functions.let_): evaluate
-    ``col`` once per row; reference it as a bound VALUE inside ``fn``.
-    HOF lambda bodies are interpreted with NO invariant hoisting — a
-    sliding-window transform whose lambda references the tokenizer
-    expression re-runs the regex split once PER WINDOW (quadratic in
-    doc length); binding the token array first makes it once per row
-    (measured ~25% off the shingle-explode stage at sf0.1 on short
-    docs; the gap grows with document length)."""
-    return F.element_at(F.transform(F.array(col), fn), 1)
+def _windows(tk, k: int):
+    """The one k-gram window builder: every length-``k`` window of the
+    bound token array ``tk``, joined with single spaces; ``[whole
+    text]`` when ``tk`` is shorter than ``k``. Callers bind ``tk`` with
+    ``let_`` — a HOF lambda body has no invariant hoisting, so an
+    unbound tokenizer would re-run the regex split once PER WINDOW
+    (quadratic in doc length) instead of once per row."""
+    n = F.size(tk)
+    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
+    grams = F.transform(idx, lambda i: F.array_join(F.slice(tk, i + 1, k), " "))
+    return F.when(n >= k, grams).otherwise(F.array(F.array_join(tk, " ")))
 
 
 def word_shingles(col="text", k: int = 3):
     """Distinct k-word shingles per document (X2 candidate unit)."""
+    return let_(tokens(col), lambda tk: F.array_distinct(_windows(tk, k)))
 
-    def build(tk):
-        n = F.size(tk)
-        idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-        sh = F.transform(idx, lambda i: F.array_join(F.slice(tk, i + 1, k), " "))
-        # A doc shorter than k words yields its whole text as one shingle.
-        return F.array_distinct(
-            F.when(n >= k, sh).otherwise(F.array(F.array_join(tk, " ")))
-        )
 
-    return _let(tokens(col), build)
+def raw_word_ngrams(col: str = "text", k: int = 3):
+    """Non-distinct k-word grams of the normalized text (frequency
+    carries signal — unlike word_shingles, nothing is deduped)."""
+    return let_(tokens(col), lambda tk: _windows(tk, k))
 
 
 def char_ngrams(col="text", n: int = 4):
@@ -69,7 +74,7 @@ def char_ngrams(col="text", n: int = 4):
             F.transform(idx, lambda i: F.substring(s, i, F.lit(n)))
         )
 
-    return _let(normalized(col), build)
+    return let_(normalized(col), build)
 
 
 # --- X1: exact dedup ------------------------------------------------------
@@ -77,19 +82,13 @@ def char_ngrams(col="text", n: int = 4):
 
 def _sliding_grams(text_col: str, n: int):
     """Non-distinct length-``n`` token windows joined with single
-    spaces; [] for docs shorter than n tokens. The token array is
-    _let-bound so the regex split runs once per row, not once per
-    window (the word_shingles fix)."""
-
-    def build(tk):
-        cnt = F.size(tk)
-        idx = F.sequence(F.lit(0), cnt - n)
-        return F.when(
-            cnt >= n,
-            F.transform(idx, lambda i: F.array_join(F.slice(tk, i + 1, n), " ")),
-        ).otherwise(F.array().cast("array<string>"))
-
-    return _let(tokens(text_col), build)
+    spaces; [] for docs shorter than n tokens."""
+    return let_(
+        tokens(text_col),
+        lambda tk: F.when(F.size(tk) >= n, _windows(tk, n)).otherwise(
+            F.array().cast("array<string>")
+        ),
+    )
 
 
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -361,7 +360,9 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     SoCC 2014) drops in with the same (id, label) contract.
 
     Returns (doc_id, cluster_id) for every node appearing in ``pairs``,
-    cluster_id = min doc_id of the component.
+    cluster_id = min doc_id of the component. Raises ValueError when
+    ``max_iter`` rounds end before a fixpoint (the labels would be a
+    partial propagation, not components).
     """
     # Row-local symmetrization: each pair emits both orientations via
     # one explode — the former two-branch union evaluated the upstream
@@ -399,6 +400,10 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
         labels = new_labels
         if changed == 0:
             break
+    else:
+        raise ValueError(
+            f"connected_components: labels still changing after max_iter={max_iter}"
+        )
     return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
@@ -418,7 +423,8 @@ def connected_components_star(pairs: DataFrame, max_iter: int = 20) -> DataFrame
     Each phase strictly lowers edge endpoints toward component minima;
     at fixpoint the edge set IS the star {(root, v)}. Convergence is
     detected by an order-independent edge-set fingerprint (sum of
-    per-edge hashes + count) — one tiny aggregate per round.
+    per-edge hashes + count) — one tiny aggregate per round. Raises
+    ValueError when ``max_iter`` rounds end before that fixpoint.
     """
     E = (
         pairs.select(
@@ -461,6 +467,10 @@ def connected_components_star(pairs: DataFrame, max_iter: int = 20) -> DataFrame
         if new_fp == fp:
             break
         fp = new_fp
+    else:
+        raise ValueError(
+            f"connected_components_star: edges still changing after max_iter={max_iter}"
+        )
     # At fixpoint every edge is (root, member); roots label themselves.
     members = E.select(F.col("b").alias("doc_id"), F.col("a").alias("cluster_id"))
     roots = E.select(F.col("a").alias("doc_id"), F.col("a").alias("cluster_id")).distinct()
@@ -523,7 +533,6 @@ def training_corpus(
 
 def decontaminate(
     docs: DataFrame,
-    bench_nibble: str = "f",
     k: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
@@ -534,7 +543,7 @@ def decontaminate(
     for public-benchmark contamination checks).
 
     The benchmark membership is hash-deterministic here (docs whose
-    md5(doc_id) starts with ``bench_nibble``, ~1/16 of the corpus) so
+    md5(doc_id) starts with ``BENCH_NIBBLE``, ~1/16 of the corpus) so
     the operator is self-contained on the driver tables; a real run
     passes the eval set as the benchmark side.
 
@@ -544,23 +553,21 @@ def decontaminate(
     build side is small), and the final anti-join is on doc_id. Every
     shuffle key is a long; no strings cross the wire.
     """
-    nib = F.substring(F.md5(F.col(id_col).cast("string")), 1, 1)
-    is_bench = nib == bench_nibble
-
-    def shingle_stream(side: DataFrame) -> DataFrame:
-        return side.select(
-            F.col(id_col), F.explode(word_shingles(text_col, k)).alias("_sh")
-        ).select(id_col, md5_token_hash("_sh").alias("_h"))
+    is_bench = hash_nibble(id_col) == BENCH_NIBBLE
 
     # Filter each side BEFORE shingling: the bench slice (1/16 of docs)
     # is shingled alone rather than shingling the full corpus and
     # filtering after — at 100 TB that is the difference between
     # exploding the eval set and exploding everything twice. The filter
     # is a pushed-down scan predicate on both branches.
-    bench_sh = shingle_stream(_spread(docs.filter(is_bench))).select("_h").distinct()
+    bench_sh = (
+        shingle_hashes(_spread(docs.filter(is_bench)), k, id_col, text_col)
+        .select("_h")
+        .distinct()
+    )
     train = docs.filter(~is_bench)
     contaminated = (
-        shingle_stream(_spread(train))
+        shingle_hashes(_spread(train), k, id_col, text_col)
         .join(bench_sh, "_h", "left_semi")
         .select(id_col)
         .distinct()
@@ -570,7 +577,6 @@ def decontaminate(
 
 def contamination_scores(
     docs: DataFrame,
-    bench_nibble: str = "f",
     k: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
@@ -595,21 +601,16 @@ def contamination_scores(
     (reference fetch_and_store.py validation pass) to the corpus level.
     Returns (doc_id, n_shingles, overlap_shingles, overlap_frac).
     """
-    nib = F.substring(F.md5(F.col(id_col).cast("string")), 1, 1)
-    is_bench = nib == bench_nibble
-
-    def shingle_stream(side: DataFrame) -> DataFrame:
-        return side.select(
-            F.col(id_col), F.explode(word_shingles(text_col, k)).alias("_sh")
-        ).select(id_col, md5_token_hash("_sh").alias("_h"))
-
+    is_bench = hash_nibble(id_col) == BENCH_NIBBLE
     bench_sh = (
-        shingle_stream(_spread(docs.filter(is_bench)))
+        shingle_hashes(_spread(docs.filter(is_bench)), k, id_col, text_col)
         .select("_h")
         .distinct()
         .withColumn("_m", F.lit(1))
     )
-    train_sh = shingle_stream(_spread(docs.filter(~is_bench)))
+    train_sh = shingle_hashes(
+        _spread(docs.filter(~is_bench)), k, id_col, text_col
+    )
     return (
         train_sh.join(bench_sh, "_h", "left")
         .groupBy(id_col)
@@ -1318,12 +1319,48 @@ def simhash(
     return th.groupBy("_id").agg(*bit_sums).select("_id", sig.alias("simhash"))
 
 
-def md5_token_hash(col: str = "tok", hex_chars: int = 15):
+def md5_token_hash(col="tok"):
     """Engine-portable token hash: the first 15 hex chars (60 bits) of
     md5 — bit-identical in Spark (conv base 16→10) and DuckDB/ANSI SQL
     (positional hex-digit shifts), unlike xxhash64. 15 chars keeps the
     value inside a signed 64-bit long in both engines."""
-    return F.conv(F.substring(F.md5(col), 1, hex_chars), 16, 10).cast("long")
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
+def shingle_hashes(
+    docs: DataFrame, k: int, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """(id, _h): one row per distinct k-word shingle of each doc, as its
+    md5_token_hash — the shingle stream the batch and streaming
+    decontamination paths semi-join on."""
+    return docs.select(
+        F.col(id_col), F.explode(word_shingles(text_col, k)).alias("_sh")
+    ).select(id_col, md5_token_hash("_sh").alias("_h"))
+
+
+def token_hash_positions(
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """(_id, _p, _h): every token of each doc with its 0-based position
+    and md5_token_hash — the stream the n-gram language models lag over."""
+    base = _spread(docs.select(F.col(id_col).alias("_id"), F.col(text_col)))
+    return base.select(
+        "_id", F.posexplode(tokens(text_col)).alias("_p", "_w")
+    ).select("_id", "_p", md5_token_hash("_w").alias("_h"))
+
+
+def token_buckets(
+    docs: DataFrame, key_col: str, key: str, n_buckets: int, text_col: str = "text"
+) -> DataFrame:
+    """(key, _b): every token of each doc keyed by ``key_col`` (renamed
+    ``key``), as its md5_token_hash bucket in [0, n_buckets) — the
+    hashed-unigram stream of the bucket distributions (DSIR, source KL
+    and JS divergence)."""
+    return (
+        _spread(docs.select(F.col(key_col).alias(key), F.col(text_col)))
+        .select(key, F.explode(tokens(text_col)).alias("_w"))
+        .select(key, (md5_token_hash("_w") % n_buckets).alias("_b"))
+    )
 
 
 def simhash_near_dups(
@@ -1413,8 +1450,8 @@ def line_dedup(
             ),
         ).otherwise(F.array().cast("array<string>"))
 
-    # token array _let-bound: one regex split per row, not per segment
-    segs = _let(tokens(text_col), _build_segs)
+    # token array let_-bound: one regex split per row, not per segment
+    segs = let_(tokens(text_col), _build_segs)
     seg_rows = _spread(docs).select(
         F.col(id_col), F.posexplode(segs).alias("seg_idx", "seg")
     ).withColumn("_h", md5_token_hash("seg"))
@@ -1439,8 +1476,6 @@ def line_dedup(
         .groupBy(id_col)
         .agg(F.collect_list("seg_idx").alias("_ri"))
     )
-    from finance_data_pipeline_spark.functions import let_
-
     ri = F.coalesce(F.col("_ri"), F.array().cast("array<int>"))
     # let_-bind the segment array so the (interpreted) segmentation
     # transform runs ONCE per row across all three consumers (size,
@@ -1482,30 +1517,18 @@ def line_dedup(
 # --- X6++: Bloom-filter decontamination (constant-size build side) --------
 
 
-def _bloom_positions(sh: F.Column, m: int) -> F.Column:
-    """Three independent bit positions per shingle from ONE md5: hex
-    digits 1-10 / 11-20 / 21-30 are disjoint 40-bit slices of the
-    digest, reduced mod ``m``. Engine-portable (DuckDB rebuilds the
-    identical values with positional hex shifts)."""
-    md = F.md5(sh)
-    return F.array(
-        *[
-            F.conv(F.substring(md, 1 + 10 * j, 10), 16, 10).cast("long") % m
-            for j in range(3)
-        ]
-    )
-
-
 def _bloom_wb(sh: F.Column, m: int) -> F.Column:
-    """_bloom_positions pre-split into array<struct<w,b>> (word index,
-    bit-in-word) — the row-local probe form. Same md5-slice positions,
-    same 63-bit word layout as the build side."""
-    # The build side computes the word index with integer 'pos div 63';
-    # this probe side uses floor(pos / 63) (double division) because
-    # its pos is an anonymous expression where SQL div is unreachable.
-    # Double division is bit-exact only while pos < 2^53, and pos < m
-    # always — fail loudly instead of diverging from the build side if
-    # a caller ever asks for a bitmap that large.
+    """The three Bloom bit positions of a shingle as array<struct<w,b>>
+    (word index, bit-in-word of the 63-bit word layout), from ONE md5:
+    hex digits 1-10 / 11-20 / 21-30 are disjoint 40-bit slices of the
+    digest, reduced mod ``m``. Engine-portable (DuckDB rebuilds the
+    identical values with positional hex shifts). Both the bitmap build
+    and the probe explode/test these same structs."""
+    # The word index is floor(pos / 63) (double division) because pos
+    # is an anonymous expression where SQL div is unreachable. Double
+    # division is bit-exact only while pos < 2^53, and pos < m always —
+    # fail loudly instead of mis-placing bits if a caller ever asks for
+    # a bitmap that large.
     if m > 1 << 52:
         raise ValueError(f"bloom m={m} exceeds the exact float-div range")
     md = F.md5(sh)
@@ -1523,7 +1546,6 @@ def _bloom_wb(sh: F.Column, m: int) -> F.Column:
 
 def bloom_decontaminate(
     docs: DataFrame,
-    bench_nibble: str = "f",
     k: int = 3,
     n_words: int = 2048,
     id_col: str = "doc_id",
@@ -1554,8 +1576,7 @@ def bloom_decontaminate(
     clear), sidestepping engine-specific overflow on ``1 << 63``.
     """
     m = 63 * n_words
-    nib = F.substring(F.md5(F.col(id_col).cast("string")), 1, 1)
-    is_bench = nib == bench_nibble
+    is_bench = hash_nibble(id_col) == BENCH_NIBBLE
 
     bench_sh = (
         _spread(docs.filter(is_bench))
@@ -1563,11 +1584,8 @@ def bloom_decontaminate(
         .distinct()
     )
     bloom = (
-        bench_sh.select(F.explode(_bloom_positions(F.col("sh"), m)).alias("pos"))
-        .select(
-            F.expr("pos div 63").alias("w"),
-            (F.col("pos") % 63).cast("int").alias("b"),
-        )
+        bench_sh.select(F.explode(_bloom_wb(F.col("sh"), m)).alias("_wb"))
+        .select("_wb.w", "_wb.b")
         .groupBy("w")
         .agg(F.expr("bit_or(shiftleft(CAST(1 AS BIGINT), b))").alias("mask"))
     )

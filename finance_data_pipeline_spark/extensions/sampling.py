@@ -149,9 +149,9 @@ def weighted_hash_sample(
     Row-local pure Column filter — zero shuffles at any scale; the
     decision replays verbatim in SQL (60-bit md5 + integer compare).
     """
-    h = F.conv(
-        F.substring(F.md5(F.col(key_col).cast("string")), 1, 15), 16, 10
-    ).cast("long")
+    from finance_data_pipeline_spark.extensions.dedup import md5_token_hash
+
+    h = md5_token_hash(F.col(key_col).cast("string"))
     thr = (
         F.round(
             F.greatest(F.lit(0.0), F.least(weight, F.lit(1.0))) * resolution, 0
@@ -290,7 +290,6 @@ def dsir_select(
     docs: DataFrame,
     n_buckets: int = 64,
     top_n: int = 100,
-    bench_nibble: str = "f",
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
@@ -319,23 +318,13 @@ def dsir_select(
     nothing corpus-sized shuffles except the per-doc fold on doc_id.
     """
     from finance_data_pipeline_spark.extensions.dedup import (
-        _spread,
-        md5_token_hash,
-        tokens,
+        BENCH_NIBBLE,
+        token_buckets,
     )
 
-    nib = hash_nibble(id_col)
-    is_bench = nib == bench_nibble
-
-    def bucket_stream(side: DataFrame) -> DataFrame:
-        return (
-            _spread(side.select(F.col(id_col).alias("_id"), F.col(text_col)))
-            .select("_id", F.explode(tokens(text_col)).alias("_w"))
-            .select("_id", (md5_token_hash("_w") % n_buckets).alias("_b"))
-        )
-
-    tgt = bucket_stream(docs.filter(is_bench))
-    src = bucket_stream(docs.filter(~is_bench))
+    is_bench = hash_nibble(id_col) == BENCH_NIBBLE
+    tgt = token_buckets(docs.filter(is_bench), id_col, "_id", n_buckets, text_col)
+    src = token_buckets(docs.filter(~is_bench), id_col, "_id", n_buckets, text_col)
     buckets = docs.sparkSession.range(n_buckets).select(
         F.col("id").alias("_b")
     )

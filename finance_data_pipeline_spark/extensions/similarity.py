@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from finance_data_pipeline_spark.extensions.dedup import _spread
-from finance_data_pipeline_spark.functions import cosine, dot, l2_norm, micro_avg
+from finance_data_pipeline_spark.functions import cosine, dot, l2_norm, let_, micro_avg
 
 
 def valid_vectors(vectors: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -572,16 +572,6 @@ def semantic_dedup(
     )
 
 
-def _let(col: F.Column, fn) -> F.Column:
-    """Single-use let-binding at the expression level: evaluate ``col``
-    ONCE per row and reference it any number of times inside ``fn`` (a
-    lambda Column → Column). HOF lambda variables are bound VALUES, so
-    this survives CollapseProject / predicate pushdown, which re-inline
-    a plain column alias into every downstream reference and would
-    re-evaluate an expensive fold per reference."""
-    return F.element_at(F.transform(F.array(col), fn), 1)
-
-
 def _row_local_scores(
     vec_norm: F.Column, vec: F.Column, cents_arr: F.Column
 ) -> F.Column:
@@ -888,11 +878,11 @@ def kmeans_cluster_quality(
     # k-row rollup. Per-pair float ops are unchanged → same sims, same
     # argmax, same micro-unit sums.
     vn = v.select("_id", "_e", l2_norm("_e").alias("_vn"))
-    rep = _let(
+    rep = let_(
         _row_local_scores(
             F.col("_vn"), F.col("_e"), F.element_at("_books", F.lit(0))
         ),
-        lambda arr: _let(
+        lambda arr: let_(
             F.array_max(arr),
             lambda best: F.struct(
                 best["cid"].alias("cluster_id"),

@@ -10,7 +10,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from finance_data_pipeline_spark.extensions.dedup import normalized, tokens, word_shingles
+from finance_data_pipeline_spark.extensions.dedup import (
+    _spread,
+    md5_token_hash,
+    normalized,
+    raw_word_ngrams,
+    token_buckets,
+    token_hash_positions,
+    tokens,
+    word_shingles,
+)
 from finance_data_pipeline_spark.functions import let_, micro_avg
 
 # Tiny per-language stopword kernels for the n-gram/stopword language
@@ -114,8 +123,6 @@ def quality_cdf(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     emits ≤ 8 distinct values), then windows over that aggregated frame
     — a handful of rows regardless of corpus size, so the unpartitioned
     window is NOT a scale hazard (it never sees raw rows)."""
-    from pyspark.sql import Window
-
     counts = (
         quality_score(docs, id_col, text_col)
         .groupBy("quality_score")
@@ -210,7 +217,7 @@ def gopher_quality(docs: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     # job on any single-token document.
     # token array let_-bound: the per-element element_at would
     # otherwise re-run the regex split twice per bigram (quadratic in
-    # doc length) — see dedup._let.
+    # doc length) — see functions.let_.
     bigrams = let_(
         toks,
         lambda tk: F.when(
@@ -278,8 +285,6 @@ def tfidf_top_terms(
     and doc_id only; document frequency is a second aggregate over the
     term dimension (vocabulary-sized, ≪ corpus).
     """
-    from pyspark.sql import Window
-
     # N as a broadcast 1-row aggregate, not a driver-side count() — the
     # whole query stays one lazy plan.
     n_df = docs.agg(F.count("*").cast("double").alias("_n"))
@@ -374,8 +379,6 @@ def unigram_logprob(docs: DataFrame, id_col: str = "doc_id", text_col: str = "te
     the freq table (tokens travel as 64-bit hashes), one per-doc fold.
     Linear in corpus token count.
     """
-    from finance_data_pipeline_spark.extensions.dedup import _spread
-
     stream = (
         _spread(docs.select(F.col(id_col).alias("_id"), F.col(text_col)))
         .select("_id", F.explode(tokens(text_col)).alias("_w"))
@@ -432,8 +435,6 @@ def hashed_tf(
     Hashes are the engine-portable 60-bit md5 (bucket = h mod dim,
     sign from the next bit), so the whole featurization replays in SQL.
     """
-    from finance_data_pipeline_spark.extensions.dedup import _spread, md5_token_hash
-
     tok = _spread(docs.select(F.col(id_col), F.col(text_col))).select(
         F.col(id_col), F.explode(tokens(text_col)).alias("_t")
     )
@@ -497,8 +498,6 @@ def _bpe_learn(docs: DataFrame, n_merges: int, text_col: str = "text"):
     """Shared BPE learning loop: returns (final vocab DataFrame with
     columns (w, freq, s) where s is the post-merge paren-delimited
     symbol string, learned merges as (rank, a, b, weight) tuples)."""
-    from finance_data_pipeline_spark.extensions.dedup import _spread
-
     spark = docs.sparkSession
     vocab = (
         _spread(docs.select(F.col(text_col)))
@@ -547,7 +546,7 @@ def _bpe_learn(docs: DataFrame, n_merges: int, text_col: str = "text"):
     for rank in range(1, n_merges + 1):
         # symbol array let_-bound: element_at per pair would otherwise
         # re-run the regexp_extract_all twice per adjacent pair
-        # (quadratic in word length) — see dedup._let.
+        # (quadratic in word length) — see functions.let_.
         pair_arr = let_(
             F.expr(r"regexp_extract_all(s, '\\(([^)]*)\\)', 1)"),
             lambda sy: F.when(
@@ -618,8 +617,6 @@ def bpe_encode(
     compression = n_units/n_chars rounded to 6 dp. Docs with no
     alphanumeric tokens are absent (nothing to encode).
     """
-    from finance_data_pipeline_spark.extensions.dedup import _spread, tokens as _toks
-
     vocab, _ = _bpe_learn(docs, n_merges, text_col)
     enc = vocab.select(
         "w",
@@ -630,7 +627,7 @@ def bpe_encode(
     )
     stream = (
         _spread(docs.select(F.col(id_col), F.col(text_col)))
-        .select(F.col(id_col), F.explode(_toks(text_col)).alias("w"))
+        .select(F.col(id_col), F.explode(tokens(text_col)).alias("w"))
         .filter(F.col("w").rlike("^[a-z0-9]+$"))
     )
     return (
@@ -683,8 +680,6 @@ def bm25_topk(
     Returns (query_id, neighbor_id, score) — score rounded to 6 dp,
     ties broken by ascending neighbor_id.
     """
-    from pyspark.sql import Window
-
     toks = docs.select(
         F.col(id_col), F.explode(tokens(text_col)).alias("_t")
     ).select(F.col(id_col), F.xxhash64("_t").alias("_h"))
@@ -766,8 +761,6 @@ def quality_percentile_by_lang(
     Returns (doc_id, lang, quality_score, pct_rank) — pct_rank in
     [0, 1], rounded to 6 dp.
     """
-    from pyspark.sql import Window
-
     # Row-local score projection — the former quality_score ⋈ docs
     # self-join shuffled the corpus twice by id for a pure function of
     # the text column (guide §2.4).
@@ -810,8 +803,6 @@ def cms_term_counts(
     Returns (term, exact_cnt, est_cnt), heaviest first — property:
     est_cnt ≥ exact_cnt for every term.
     """
-    from pyspark.sql import Window
-
     toks = docs.select(F.explode(tokens(text_col)).alias("t"))
     cells = toks.select(
         "t",
@@ -886,18 +877,8 @@ def bigram_logprob(
     doc's bigram stream against the count tables, one per-doc fold.
     Linear in corpus token count.
     """
-    from finance_data_pipeline_spark.extensions.dedup import (
-        _spread,
-        md5_token_hash,
-        tokens,
-    )
-
     lam = lambda_pct / 100.0
-    toks = tokens(text_col)
-    base = _spread(docs.select(F.col(id_col).alias("_id"), F.col(text_col)))
-    stream = base.select(
-        "_id", F.posexplode(toks).alias("_p", "_w")
-    ).select("_id", "_p", md5_token_hash("_w").alias("_h"))
+    stream = token_hash_positions(docs, id_col, text_col)
     w = Window.partitionBy("_id").orderBy("_p")
     pairs = stream.select(
         "_id", "_p", F.lag("_h").over(w).alias("_h1"), F.col("_h").alias("_h2")
@@ -974,17 +955,7 @@ def source_unigram_kl(
     Scale: one (source, bucket) count aggregate — bounded keys — plus
     a bucket-level corpus rollup; nothing corpus-sized shuffles twice.
     """
-    from finance_data_pipeline_spark.extensions.dedup import (
-        _spread,
-        md5_token_hash,
-        tokens,
-    )
-
-    stream = (
-        _spread(docs.select(F.col(source_col).alias("_src"), F.col(text_col)))
-        .select("_src", F.explode(tokens(text_col)).alias("_w"))
-        .select("_src", (md5_token_hash("_w") % n_buckets).alias("_b"))
-    )
+    stream = token_buckets(docs, source_col, "_src", n_buckets, text_col)
     sc = stream.groupBy("_src", "_b").agg(F.count("*").alias("_c"))
     stot = sc.groupBy("_src").agg(F.sum("_c").alias("_ts"))
     cc = sc.groupBy("_b").agg(F.sum("_c").alias("_cc"))
@@ -1049,7 +1020,6 @@ def build_text_index(
     serve queries with no session state, and incremental maintenance
     is a partition-wise merge of new postings.
     """
-    from finance_data_pipeline_spark.extensions.dedup import tokens
     from finance_data_pipeline_spark.io import write_parquet_bloom
 
     toks = docs.select(
@@ -1094,8 +1064,6 @@ def bm25_topk_indexed(
     stats and the query's own term hashes, both bounded by the query,
     never the corpus.
     """
-    from finance_data_pipeline_spark.extensions.dedup import tokens
-
     q = spark.createDataFrame([(query_text,)], "text string")
     hashes = [
         r._h
@@ -1157,7 +1125,6 @@ def merge_text_index(
     through the range-repartition with the new ones so the merged
     layout keeps its `_h` pruning property.
     """
-    from finance_data_pipeline_spark.extensions.dedup import tokens
     from finance_data_pipeline_spark.io import write_parquet_bloom
 
     toks = new_docs.select(
@@ -1394,22 +1361,6 @@ t AS (SELECT *, CAST({total} AS BIGINT) AS n_sym,
 SELECT doc_id, n_sym, round({terms}, 6) AS entropy_bits FROM t"""
 
 
-def raw_word_ngrams(col: str = "text", k: int = 3) -> Column:
-    """Non-distinct k-word grams of the normalized text (frequency
-    carries signal — unlike dedup.word_shingles, nothing is deduped).
-    A doc shorter than k words yields its whole text as the one gram."""
-    from finance_data_pipeline_spark.functions import let_
-
-    def _build(tk):
-        n = F.size(tk)
-        idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-        grams = F.transform(idx, lambda i: F.array_join(F.slice(tk, i + 1, k), " "))
-        return F.when(n >= k, grams).otherwise(F.array(F.array_join(tk, " ")))
-
-    # token array let_-bound: one regex split per row, not per gram
-    return let_(tokens(col), _build)
-
-
 def distinct_ngram_frac(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3
 ) -> DataFrame:
@@ -1497,17 +1448,7 @@ def trigram_backoff_logprob(
     tables, one per-doc fold. Linear in corpus tokens; no windows
     beyond the per-doc position lags.
     """
-    from finance_data_pipeline_spark.extensions.dedup import (
-        _spread,
-        md5_token_hash,
-        tokens,
-    )
-
-    toks = tokens(text_col)
-    base = _spread(docs.select(F.col(id_col).alias("_id"), F.col(text_col)))
-    stream = base.select(
-        "_id", F.posexplode(toks).alias("_p", "_w")
-    ).select("_id", "_p", md5_token_hash("_w").alias("_h"))
+    stream = token_hash_positions(docs, id_col, text_col)
     w = Window.partitionBy("_id").orderBy("_p")
     trips = stream.select(
         "_id",
@@ -1580,17 +1521,7 @@ def js_divergence_sources(
     C(n_sources, 2) × n_buckets grid (sources are a bounded key), each
     JS term quantized to a nano-unit long before the per-pair sum so
     the float statistic replays exactly in SQL."""
-    from finance_data_pipeline_spark.extensions.dedup import (
-        _spread,
-        md5_token_hash,
-        tokens,
-    )
-
-    stream = (
-        _spread(docs.select(F.col(source_col).alias("_src"), F.col(text_col)))
-        .select("_src", F.explode(tokens(text_col)).alias("_w"))
-        .select("_src", (md5_token_hash("_w") % n_buckets).alias("_b"))
-    )
+    stream = token_buckets(docs, source_col, "_src", n_buckets, text_col)
     sc = stream.groupBy("_src", "_b").agg(F.count("*").alias("_c"))
     stot = sc.groupBy("_src").agg(F.sum("_c").alias("_ts"))
     pairs = (

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from finance_data_pipeline_spark.extensions.dedup import md5_token_hash, tokens
+from finance_data_pipeline_spark.extensions.dedup import md5_token_hash, raw_word_ngrams
 
 # pos is encoded descending as (_POS_BASE - pos) so the lexicographic
 # string min prefers the RIGHTMOST position among equal hashes — the
@@ -38,17 +38,8 @@ _POS_BASE = 2_000_000_000
 def _grams_with_pos(docs: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
     """(id, pos, gram) for every overlapping k-gram, 1-based positions.
     Docs shorter than k tokens contribute their whole text at pos 1."""
-    from finance_data_pipeline_spark.functions import let_
-
-    def _build(tk):
-        n = F.size(tk)
-        idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
-        return F.transform(idx, lambda i: F.array_join(F.slice(tk, i, k), " "))
-
-    # token array let_-bound: one regex split per row, not per window
-    grams = let_(tokens(text_col), _build)
     return docs.select(
-        F.col(id_col), F.posexplode(grams).alias("_p0", "gram")
+        F.col(id_col), F.posexplode(raw_word_ngrams(text_col, k)).alias("_p0", "gram")
     ).select(
         F.col(id_col),
         (F.col("_p0") + 1).cast("long").alias("pos"),

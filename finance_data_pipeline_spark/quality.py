@@ -232,9 +232,9 @@ def hll_distinct(
     if hash_col is not None:
         h = F.col(hash_col).cast("long")
     else:
-        h = F.conv(
-            F.substring(F.md5(F.col(key_col).cast("string")), 1, 15), 16, 10
-        ).cast("long")
+        from finance_data_pipeline_spark.extensions.dedup import md5_token_hash
+
+        h = md5_token_hash(F.col(key_col).cast("string"))
     by = list(by or [])
     # integer div, NOT float division — h has 60 bits and doubles hold 53
     b = df.select(*by, h.alias("_h")).select(

@@ -5262,7 +5262,7 @@ def q_orders_snapshot_diff(spark, sf_dir):
     null-safe struct equality (rel.snapshot_diff). One co-partitioned
     shuffle per side regardless of column count."""
     orders = table(spark, sf_dir, "orders")
-    nib = F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 1)
+    nib = sampling.hash_nibble("o_orderkey")
     old = orders.filter(F.col("o_orderdate") < _date("1997-01-01"))
     new = (
         orders.filter(F.col("o_orderdate") < _date("1997-07-01"))
@@ -5706,9 +5706,7 @@ def q_ab_value_ttest(spark, sf_dir):
     identically-ordered IEEE doubles in both engines, so even this
     float statistic hash-checks. One map-side-combined aggregate."""
     ev = table(spark, sf_dir, "events")
-    h = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 15), 16, 10
-    ).cast("long")
+    h = dedup.md5_token_hash(F.col("user_id").cast("string"))
     g = ev.select(
         F.when(h % 2 == 0, F.lit("A")).otherwise(F.lit("B")).alias("grp"),
         "value",
@@ -6582,7 +6580,7 @@ def q_decontaminate_spans(spark, sf_dir):
     dedup.decontaminate_spans."""
     docs = table(spark, sf_dir, "documents")
     bench = docs.filter(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1) == "f"
+        sampling.hash_nibble("doc_id") == dedup.BENCH_NIBBLE
     ).select("doc_id")
     return dedup.decontaminate_spans(docs, bench, n=4)
 
@@ -7143,15 +7141,14 @@ def q_streaming_decontaminated_intake(spark, sf_dir):
     from finance_data_pipeline_spark.streaming import pipeline as sp
 
     docs = table(spark, sf_dir, "documents")
-    nib = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
+    nib = sampling.hash_nibble("doc_id")
     bench_sh = (
-        dedup._spread(docs.filter(nib == "f"))
-        .select(F.explode(dedup.word_shingles("text", 3)).alias("_sh"))
-        .select(dedup.md5_token_hash("_sh").alias("_h"))
+        dedup.shingle_hashes(dedup._spread(docs.filter(nib == dedup.BENCH_NIBBLE)), 3)
+        .select("_h")
         .distinct()
         .localCheckpoint()
     )
-    train = docs.filter(nib != "f")
+    train = docs.filter(nib != dedup.BENCH_NIBBLE)
     staged = tempfile.mkdtemp(prefix="fdps_decon_stream_")
     train.filter(F.col("doc_id") % 2 == 0).write.mode("overwrite").parquet(
         f"{staged}/b0"

@@ -342,17 +342,14 @@ def decontaminate_gate(
     store. Each batch overwrites its own ``batch=<id>`` partition, so
     foreachBatch re-delivery after a crash is idempotent.
     """
-    from finance_data_pipeline_spark.extensions.dedup import (
-        md5_token_hash,
-        word_shingles,
-    )
+    from finance_data_pipeline_spark.extensions.dedup import shingle_hashes
 
     def gate(batch: DataFrame, batch_id: int) -> None:
-        sh = batch.select(
-            "doc_id", F.explode(word_shingles("text", k)).alias("_sh")
-        ).select("doc_id", md5_token_hash("_sh").alias("_h"))
         contaminated = (
-            sh.join(bench_hashes, "_h", "left_semi").select("doc_id").distinct()
+            shingle_hashes(batch, k)
+            .join(bench_hashes, "_h", "left_semi")
+            .select("doc_id")
+            .distinct()
         )
         admitted = batch.join(contaminated, "doc_id", "left_anti")
         admitted.select("doc_id").write.mode("overwrite").parquet(

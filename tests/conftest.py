@@ -39,14 +39,19 @@ _PARITY_ALWAYS = {
     "ann_topk_ivf_exact",
     "ann_topk_pq",
     "ann_topk_pq_rerank",
+    "bigram_logprob",
     "bm25_topk",
     "bm25_context_pack",
     "bpe_merges",
     "bpe_encode",
     "bloom_decontaminate",
+    "contamination_overlap",
     "decontaminate_spans",
+    "decontaminated_corpus",
     "dedup_keep_best",
+    "dsir_selected_corpus",
     "embedding_outliers",
+    "js_divergence_sources",
     "kmeans_clusters",
     "kmeans_cluster_quality",
     "label_prop_communities",
@@ -56,12 +61,16 @@ _PARITY_ALWAYS = {
     "personalized_pagerank",
     "pricing_summary",
     "remove_dup_spans",
+    "repeated_ngram_spans",
     "semantic_dedup",
     "semantic_dedup_kmeans",
     "source_ngram_overlap",
+    "source_unigram_kl",
     "string_sim_join",
     "supplier_customer_pagerank",
     "training_corpus",
+    "trigram_backoff_logprob",
+    "winnowing_fingerprints",
     "winnowing_shared_spans",
 }
 

@@ -357,3 +357,61 @@ def test_quantile_bins_constant_values(spark, tmp_path):
     assert [round(r.est, 6) for r in out] == [
         round(v, 6) for v in oracle["est"].tolist()
     ]
+
+
+# Per k: (word_shingles, raw_word_ngrams, _sliding_grams) for each row of
+# _KGRAM_ROWS, then for a text of exactly k tokens. A doc shorter than k
+# keeps its whole text as its one shingle/raw gram and has no sliding
+# gram; the tab/newline row tokenizes to x y x y x.
+_KGRAM_ROWS = [None, "", "   ", "Hello", "X\tY\nx\ty  X"]
+_KGRAM_EXPECTED = {
+    1: [
+        ([None], [None], []),
+        ([""], [""], [""]),
+        ([""], [""], [""]),
+        (["hello"], ["hello"], ["hello"]),
+        (["x", "y"], ["x", "y", "x", "y", "x"], ["x", "y", "x", "y", "x"]),
+        (["a"], ["a"], ["a"]),
+    ],
+    3: [
+        ([None], [None], []),
+        ([""], [""], []),
+        ([""], [""], []),
+        (["hello"], ["hello"], []),
+        (
+            ["x y x", "y x y"],
+            ["x y x", "y x y", "x y x"],
+            ["x y x", "y x y", "x y x"],
+        ),
+        (["a b c"], ["a b c"], ["a b c"]),
+    ],
+    7: [
+        ([None], [None], []),
+        ([""], [""], []),
+        ([""], [""], []),
+        (["hello"], ["hello"], []),
+        (["x y x y x"], ["x y x y x"], []),
+        (["a b c d e f g"], ["a b c d e f g"], ["a b c d e f g"]),
+    ],
+}
+
+
+@pytest.mark.parametrize("k", sorted(_KGRAM_EXPECTED))
+def test_kgram_short_doc_rules(spark, k):
+    """word_shingles, raw_word_ngrams and _sliding_grams all come from
+    one window builder; pin how each treats null, empty, whitespace-only,
+    one-token, tab/newline-separated and exactly-k text."""
+    texts = _KGRAM_ROWS + [" ".join("abcdefg"[:k])]
+    df = spark.createDataFrame(list(enumerate(texts)), "id int, text string")
+    got = [
+        (r.s, r.r, r.g)
+        for r in df.select(
+            "id",
+            dedup.word_shingles("text", k).alias("s"),
+            dedup.raw_word_ngrams("text", k).alias("r"),
+            dedup._sliding_grams("text", k).alias("g"),
+        )
+        .orderBy("id")
+        .collect()
+    ]
+    assert got == _KGRAM_EXPECTED[k]

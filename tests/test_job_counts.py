@@ -1,12 +1,16 @@
-"""Job-count guard for the iterative kernels.
+"""Job-count guard for the iterative kernels and the decontamination
+operators.
 
 Spark jobs are counted by job group (``statusTracker().getJobIdsForGroup``)
 while each kernel is built and collected at sf0.001. Unlike wall time,
 a job count does not move with host load, so it is a regression signal
 that co-tenant load cannot fake. Each bound is the count measured on
-the code before the rank loop and the Lloyd trainer were each folded
-into one implementation (the highest of three runs); a change that adds
-an eager job or an AQE query stage to one of these kernels fails here.
+the code before that kernel's latest refactor, the highest of three
+runs: before the rank loop and the Lloyd trainer were each folded into
+one implementation, and before the decontamination operators moved onto
+the shared shingle-hash and benchmark-split definitions. A change that
+adds an eager job or an AQE query stage to one of these kernels fails
+here.
 """
 
 from __future__ import annotations
@@ -14,7 +18,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from finance_data_pipeline_spark.extensions import graph, similarity
+from finance_data_pipeline_spark.extensions import dedup, graph, similarity
 from finance_data_pipeline_spark.io import table
 from tests.conftest import SF_SMALL as SF_DIR
 
@@ -23,6 +27,8 @@ _MAX_JOBS = {
     "personalized_pagerank": 41,
     "kmeans_centroids": 13,
     "pq_codebooks": 15,
+    "bloom_decontaminate": 11,
+    "decontaminate": 8,
 }
 
 
@@ -67,6 +73,12 @@ _KERNELS = {
     ),
     "pq_codebooks": lambda spark: similarity.pq_codebooks(
         table(spark, SF_DIR, "embeddings")
+    ),
+    "bloom_decontaminate": lambda spark: dedup.bloom_decontaminate(
+        table(spark, SF_DIR, "documents")
+    ),
+    "decontaminate": lambda spark: dedup.decontaminate(
+        table(spark, SF_DIR, "documents")
     ),
 }
 

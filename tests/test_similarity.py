@@ -217,6 +217,32 @@ def test_connected_components_long_chain_converges(spark):
     assert len(out) == 13
 
 
+def _path_pairs(spark, n):
+    return spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
+    )
+
+
+def test_connected_components_raises_when_max_iter_runs_out(spark):
+    """An 8-node path needs more than 2 propagation rounds: stopping
+    there would leave node 7 outside cluster 0, so it must raise."""
+    from finance_data_pipeline_spark.extensions.dedup import connected_components
+
+    with pytest.raises(ValueError, match="max_iter=2"):
+        connected_components(_path_pairs(spark, 8), max_iter=2)
+
+
+def test_connected_components_star_raises_when_max_iter_runs_out(spark):
+    """One large-star/small-star round leaves an 8-node path's middle
+    nodes in two clusters each, so it must raise."""
+    from finance_data_pipeline_spark.extensions.dedup import (
+        connected_components_star,
+    )
+
+    with pytest.raises(ValueError, match="max_iter=1"):
+        connected_components_star(_path_pairs(spark, 8), max_iter=1)
+
+
 def test_ivf_deterministic_rescores_exactly_and_recalls(spark, vectors):
     """Every IVF-exact hit must carry the identical cosine brute force
     computes for that pair (the quantizer prunes, never rescores), and
