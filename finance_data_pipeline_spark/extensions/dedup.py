@@ -1598,35 +1598,36 @@ def bloom_decontaminate(
     tsh = _spread(docs.filter(~is_bench)).select(
         F.col(id_col), F.explode(word_shingles(text_col, k)).alias("sh")
     )
-    # ROW-LOCAL probe (guide §2.4): the 16 KiB bitmap packs into one
-    # broadcast map<word → mask> and every shingle tests its 3 bits in
-    # place — the former shape exploded the probe stream ×3, joined the
-    # word table and re-aggregated 3·|shingles| rows through a
-    # (doc, shingle-hash) exchange before the per-doc rollup. forall
-    # over the 3 (w, b) probes ⇔ the old sum(bit) == 3 (duplicate
-    # positions cannot break the equivalence: sum hits 3 iff every
-    # exploded row's bit is set). All-integer ops — bit-identical
-    # hits, including the Bloom false positives the oracle replays.
+    # ROW-LOCAL probe (guide §2.4): the 16 KiB bitmap is packed once into
+    # a zero-filled dense array<bigint> indexed by word (one broadcast
+    # row), and every shingle tests its 3 bits in place. The three tests
+    # are unrolled over _bloom_wb(sh, m)[j]; the optimizer folds each
+    # [j].w / [j].b down to its slice of md5(sh), so whole-stage codegen
+    # evaluates ONE md5(sh) per shingle for the probe and md5_token_hash.
+    # (A map<word, mask> probed inside a forall scanned the keys
+    # linearly in an interpreted lambda; the 3-bit AND is the same test,
+    # so hits stay bit-identical, including the Bloom false positives
+    # the oracle replays.)
     packed = bloom.groupBy().agg(
-        F.map_from_entries(F.collect_list(F.struct("w", "mask"))).alias("_bm")
+        F.map_from_entries(F.collect_list(F.struct("w", "mask"))).alias("_m")
+    ).select(
+        F.transform(
+            F.sequence(F.lit(0), F.lit(n_words - 1)),
+            lambda w: F.coalesce(F.element_at("_m", w), F.lit(0).cast("bigint")),
+        ).alias("_bm")
     )
+    wb = _bloom_wb(F.col("sh"), m)
+    in_bloom = [
+        F.call_function("shiftright", F.col("_bm")[wb[j]["w"]], wb[j]["b"]).bitwiseAND(
+            F.lit(1).cast("bigint")
+        )
+        == 1
+        for j in range(3)
+    ]
     probed = tsh.crossJoin(F.broadcast(packed)).select(
         id_col,
         md5_token_hash("sh").alias("_h"),
-        F.forall(
-            _bloom_wb(F.col("sh"), m),
-            lambda e: F.call_function(
-                "shiftright",
-                F.coalesce(
-                    F.element_at(F.col("_bm"), e["w"]),
-                    F.lit(0).cast("bigint"),
-                ),
-                e["b"],
-            ).bitwiseAND(F.lit(1).cast("bigint"))
-            == 1,
-        )
-        .cast("int")
-        .alias("_in_bloom"),
+        (in_bloom[0] & in_bloom[1] & in_bloom[2]).cast("int").alias("_in_bloom"),
     )
     return (
         probed.join(bench_h, "_h", "left")

@@ -1,5 +1,5 @@
-"""Job-count guard for the iterative kernels and the decontamination
-operators.
+"""Job-count guard for the iterative kernels, the decontamination
+operators and the registry queries over the bar fixtures.
 
 Spark jobs are counted by job group (``statusTracker().getJobIdsForGroup``)
 while each kernel is built and collected at sf0.001. Unlike wall time,
@@ -7,8 +7,9 @@ a job count does not move with host load, so it is a regression signal
 that co-tenant load cannot fake. Each bound is the count measured on
 the code before that kernel's latest refactor, the highest of three
 runs: before the rank loop and the Lloyd trainer were each folded into
-one implementation, and before the decontamination operators moved onto
-the shared shingle-hash and benchmark-split definitions. A change that
+one implementation, before the decontamination operators moved onto
+the shared shingle-hash and benchmark-split definitions, and before the
+bar fixtures were memoized. A change that
 adds an eager job or an AQE query stage to one of these kernels fails
 here.
 """
@@ -20,7 +21,9 @@ from pyspark.sql import functions as F
 
 from finance_data_pipeline_spark.extensions import dedup, graph, similarity
 from finance_data_pipeline_spark.io import table
+from finance_data_pipeline_spark.registry import QUERIES
 from tests.conftest import SF_SMALL as SF_DIR
+from tests.conftest import spark_jobs
 
 _MAX_JOBS = {
     "pagerank": 30,
@@ -29,6 +32,13 @@ _MAX_JOBS = {
     "pq_codebooks": 15,
     "bloom_decontaminate": 11,
     "decontaminate": 8,
+}
+
+# Registry queries over the daily and hourly bar fixtures, measured
+# before the fixtures were memoized (3 of 3 runs).
+_MAX_QUERY_JOBS = {
+    "ma_warmup": 4,
+    "sma": 4,
 }
 
 
@@ -85,18 +95,20 @@ _KERNELS = {
 
 @pytest.mark.parametrize("name", sorted(_MAX_JOBS))
 def test_kernel_job_count_does_not_grow(spark, name):
-    sc = spark.sparkContext
-    group = f"job-count-{name}"
-    sc.setJobGroup(group, name)
-    try:
-        rows = _KERNELS[name](spark).collect()
-    finally:
-        sc.setJobGroup("job-count-idle", "")
+    rows, jobs = spark_jobs(spark, name, lambda: _KERNELS[name](spark).collect())
     assert rows
-    # The status store is filled from the listener bus asynchronously,
-    # after the action has returned.
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert jobs <= _MAX_JOBS[name], (
         f"{name}: {jobs} Spark jobs to build and collect, bound {_MAX_JOBS[name]}"
+    )
+
+
+@pytest.mark.parametrize("name", sorted(_MAX_QUERY_JOBS))
+def test_fixture_query_job_count_does_not_grow(spark, name):
+    """A registry query over the memoized bar fixtures, built and
+    collected once the memo is warm, as on a dashboard's second chart."""
+    QUERIES[name](spark, SF_DIR).collect()
+    rows, jobs = spark_jobs(spark, name, lambda: QUERIES[name](spark, SF_DIR).collect())
+    assert rows
+    assert jobs <= _MAX_QUERY_JOBS[name], (
+        f"{name}: {jobs} Spark jobs to build and collect, bound {_MAX_QUERY_JOBS[name]}"
     )

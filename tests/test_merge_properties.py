@@ -18,7 +18,7 @@ KEY = ["symbol", "date"]
 
 @pytest.fixture(scope="module")
 def stocks(spark):
-    return fixtures.stocks(spark, SF_DIR).cache()
+    return fixtures.stocks(spark, SF_DIR)
 
 
 def _split(stocks):

@@ -18,7 +18,9 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def docs(spark):
-    return table(spark, SF_DIR, "documents").cache()
+    docs = table(spark, SF_DIR, "documents").cache()
+    yield docs
+    docs.unpersist()
 
 
 # --- semantic_dedup -------------------------------------------------------
@@ -441,6 +443,52 @@ def test_bloom_flags_planted_contamination(spark):
     out = {r.doc_id: r for r in dedup.bloom_decontaminate(docs2).collect()}
     assert out[train_ids[0]].exact_hit == 1 and out[train_ids[0]].bloom_hit == 1
     assert out[train_ids[1]].exact_hit == 0 and out[train_ids[1]].bloom_hit == 0
+
+
+@pytest.mark.parametrize("n_words", [1, 2])
+def test_bloom_false_positives_replay_md5_slices(spark, n_words):
+    """With a 63- or 126-bit filter, false positives are common. Each
+    doc's bloom_hit must equal a pure-Python replay of the filter: the
+    three 10-hex-digit md5 slices of a shingle, mod m, must all be
+    positions set by some bench shingle."""
+    import hashlib
+    import random
+
+    def md5(s):
+        return hashlib.md5(s.encode()).hexdigest()
+
+    def shingles(text):
+        tk = text.split(" ")
+        return {" ".join(tk[i : i + 3]) for i in range(len(tk) - 2)}
+
+    m = 63 * n_words
+    bench_ids = [i for i in range(10_000) if md5(str(i))[0] == "f"][:2]
+    train_ids = [i for i in range(10_000) if md5(str(i))[0] != "f"][:60]
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(40)]
+    bench = [(i, " ".join(rng.sample(vocab, 12 * n_words))) for i in bench_ids]
+    train = [(i, " ".join(rng.choice(vocab) for _ in range(4))) for i in train_ids]
+    docs2 = spark.createDataFrame(bench + train, "doc_id long, text string")
+
+    def positions(sh):
+        d = md5(sh)
+        return {int(d[10 * j : 10 * j + 10], 16) % m for j in range(3)}
+
+    bench_sh = set().union(*(shingles(t) for _, t in bench))
+    bits = set().union(*(positions(sh) for sh in bench_sh))
+    want = {
+        i: (
+            int(any(positions(sh) <= bits for sh in shingles(t))),
+            int(bool(shingles(t) & bench_sh)),
+        )
+        for i, t in train
+    }
+    out = dedup.bloom_decontaminate(docs2, n_words=n_words).collect()
+    got = {r.doc_id: (r.bloom_hit, r.exact_hit) for r in out}
+    assert got == want
+    # The case is only meaningful with false positives AND misses.
+    assert any(b > e for b, e in want.values())
+    assert any(b == 0 for b, _ in want.values())
 
 
 def test_bloom_probe_rejects_bitmap_past_exact_float_division(spark):

@@ -14,7 +14,9 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def docs(spark):
-    return spark.read.parquet(f"{SF_DIR}/documents.parquet").cache()
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").cache()
+    yield docs
+    docs.unpersist()
 
 
 def test_split_is_total_and_deterministic(spark, docs):

@@ -16,7 +16,9 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def vectors(spark):
-    return table(spark, SF_DIR, "embeddings").cache()
+    vectors = table(spark, SF_DIR, "embeddings").cache()
+    yield vectors
+    vectors.unpersist()
 
 
 def test_blocked_gemm_matches_exact_pairs(spark, vectors):

@@ -58,13 +58,14 @@ def test_stream_batch_equivalence_daily_aggregate(spark, tmp_path):
     assert len(got) > 0
 
 
-def test_stream_dedup_drops_duplicate_event_ids(spark, tmp_path):
+def test_stream_dedup_drops_duplicate_event_ids(spark, tmp_path, request):
     """dedup_in_stream keeps exactly one row per event_id across
     micro-batches (the reference's refetch-overlap tolerance)."""
     src = str(tmp_path / "src")
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     events = table(spark, SF_DIR, "events").limit(500).cache()
+    request.addfinalizer(events.unpersist)
     # Batch 1: the events; batch 2 arrives later with full overlap.
     events.write.mode("overwrite").parquet(src)
 
@@ -139,7 +140,7 @@ def test_stateful_continuity_detects_gap_across_restart(spark, tmp_path):
 def test_foreachbatch_upsert_converges_to_batch_merge(spark, tmp_path):
     """stream_ingest_stocks merges micro-batches into the partitioned
     store; the final store ≡ dedup-by-key over everything ingested."""
-    stocks = fixtures.stocks(spark, SF_DIR).cache()
+    stocks = fixtures.stocks(spark, SF_DIR)
     cutoff = F.lit("2024-01-20").cast("date")
     b1 = stocks.filter(F.col("date") <= cutoff)
     b2 = stocks.filter(F.col("date") >= F.lit("2024-01-15").cast("date")).withColumn(
@@ -174,7 +175,7 @@ def test_foreachbatch_upsert_is_partition_scoped(spark, tmp_path):
     batch's symbols, not the store size."""
     import os
 
-    stocks = fixtures.stocks(spark, SF_DIR).cache()
+    stocks = fixtures.stocks(spark, SF_DIR)
     symbols = [r["symbol"] for r in stocks.select("symbol").distinct().limit(2).collect()]
     s_keep, s_touch = sorted(symbols)
 

@@ -20,7 +20,9 @@ K, W = 3, 4
 
 @pytest.fixture(scope="module")
 def docs(spark):
-    return table(spark, SF_DIR, "documents").cache()
+    docs = table(spark, SF_DIR, "documents").cache()
+    yield docs
+    docs.unpersist()
 
 
 # --- winnowing ------------------------------------------------------------

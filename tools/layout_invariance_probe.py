@@ -52,6 +52,18 @@ def _canon(pdf):
     return pdf.sort_values(list(pdf.columns), ignore_index=True)
 
 
+def _run(spark, name, confs):
+    """``name``'s output under ``confs``. Dropping Spark's cache first
+    makes the memoized bar fixtures (fixtures.py) recompute under this
+    layout instead of serving bars aggregated under the other one."""
+    from finance_data_pipeline_spark.registry import QUERIES
+
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    spark.catalog.clearCache()
+    return QUERIES[name](spark, SF).toPandas()
+
+
 def main() -> int:
     import time
 
@@ -72,12 +84,8 @@ def main() -> int:
         t0 = time.time()
         errs = []
         try:
-            for k, v in defaults.items():
-                spark.conf.set(k, v)
-            a = _canon(QUERIES[name](spark, SF).toPandas())
-            for k, v in HOSTILE.items():
-                spark.conf.set(k, v)
-            b = _canon(QUERIES[name](spark, SF).toPandas())
+            a = _canon(_run(spark, name, defaults))
+            b = _canon(_run(spark, name, HOSTILE))
             if list(a.columns) != list(b.columns):
                 errs.append(f"cols {list(a.columns)} vs {list(b.columns)}")
             elif len(a) != len(b):
