@@ -217,113 +217,6 @@ def hyperplane_lsh_topk(
     return scored.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= k).drop("_rn")
 
 
-def _train_ivf_centroids(
-    vectors: DataFrame,
-    n_cells: int,
-    sample_size: int,
-    train_iters: int,
-    seed: int,
-    id_col: str,
-    vec_col: str,
-) -> np.ndarray:
-    """Driver-side spherical k-means on a bounded, deterministic sample
-    (first ``sample_size`` ids) — standard IVF practice: the coarse
-    quantizer trains on O(sample) vectors regardless of corpus size.
-    Shared by the in-session ivf_topk and the on-disk build_ivf_index."""
-    samp_pdf = (
-        vectors.select(F.col(vec_col).cast("array<double>").alias("v"))
-        .orderBy(id_col)
-        .limit(sample_size)
-        .toPandas()
-    )
-    samp = np.stack(samp_pdf["v"].to_numpy())
-    samp = samp / np.maximum(np.linalg.norm(samp, axis=1, keepdims=True), 1e-12)
-    rng = np.random.default_rng(seed)
-    cents = samp[rng.choice(len(samp), size=min(n_cells, len(samp)), replace=False)]
-    for _ in range(train_iters):
-        assign = np.argmax(samp @ cents.T, axis=1)
-        for c in range(len(cents)):
-            members = samp[assign == c]
-            if len(members):
-                m = members.mean(axis=0)
-                cents[c] = m / max(np.linalg.norm(m), 1e-12)
-    return cents
-
-
-def ivf_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    sample_size: int = 4096,
-    train_iters: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate top-k via an IVF (inverted-file) coarse quantizer —
-    the FAISS-style scale path complementing hyperplane_lsh_topk.
-
-    Spherical k-means centroids are trained driver-side on a bounded,
-    deterministic sample (first ``sample_size`` ids) — standard IVF
-    practice: the quantizer trains on ~10^5 vectors regardless of
-    corpus size, so the driver step stays O(sample), never O(corpus).
-    The centroid matrix (n_cells × dim floats) is broadcast; corpus
-    assignment is one narrow Arrow-batched pass (numpy GEMM argmax —
-    no shuffle, no per-row Python). Each query probes its ``n_probe``
-    nearest cells; the candidate join shuffles only on the small cell
-    key and re-ranks exactly by cosine within probed cells.
-
-    Scale shape at 100 TB: corpus hashed once and written partitioned
-    by cell; a query touches n_probe/n_cells of the data. Recall is
-    tunable via n_probe (n_probe = n_cells ⇒ exact).
-    NULL / zero-norm vectors are excluded on both sides (valid_vectors).
-    """
-    vectors = valid_vectors(vectors, vec_col)
-    queries = valid_vectors(queries, vec_col)
-    cents = _train_ivf_centroids(
-        vectors, n_cells, sample_size, train_iters, seed, id_col, vec_col
-    )
-    bc = vectors.sparkSession.sparkContext.broadcast(cents)
-
-    def _normed(series: pd.Series) -> np.ndarray:
-        m = np.stack(series.to_numpy()).astype("float64")
-        return m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-
-    @F.pandas_udf("int")
-    def cell_of(vs: pd.Series) -> pd.Series:
-        return pd.Series(np.argmax(_normed(vs) @ bc.value.T, axis=1).astype("int32"))
-
-    @F.pandas_udf("array<int>")
-    def probe_cells(vs: pd.Series) -> pd.Series:
-        sims = _normed(vs) @ bc.value.T
-        top = np.argsort(-sims, axis=1)[:, :n_probe].astype("int32")
-        return pd.Series(list(top))
-
-    v = _spread(vectors).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("neighbor_vec"),
-        cell_of(F.col(vec_col)).alias("cell"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("query_vec"),
-        F.explode(probe_cells(F.col(vec_col))).alias("cell"),
-    )
-    scored = (
-        v.join(F.broadcast(q), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine("query_vec", "neighbor_vec"), 6).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), "neighbor_id")
-    return scored.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= k).drop("_rn")
-
-
 def _blocked_gemm_pairs(
     vectors: DataFrame,
     threshold: float,
@@ -420,11 +313,12 @@ def cosine_dup_pairs(
     This is the verify-exact pattern of dedup.near_dup_pairs with GEMM
     as the candidate generator. The candidate set (pairs within 1e-4 of
     the threshold) is ~|output|, so the verify join is tiny. At 100 TB,
-    when even N² FLOPs are infeasible, bucket first with an IVF coarse
-    quantizer or hyperplane LSH (ivf_topk / hyperplane_lsh_topk) and run
-    this within cells — at low thresholds with mass near the boundary
-    (measured: median true pair sits at 0.46 for t=0.45) candidate
-    hashing cannot separate, and blocked-exact is the honest default.
+    when even N² FLOPs are infeasible, bucket first with ivf_topk's
+    Lloyd cells (the build_ivf_index layout) or hyperplane LSH
+    (hyperplane_lsh_topk) and run this within cells — at low
+    thresholds with mass near the boundary (measured: median true pair
+    sits at 0.46 for t=0.45) candidate hashing cannot separate, and
+    blocked-exact is the honest default.
     NULL / zero-norm vectors are excluded up front (valid_vectors).
     """
     vectors = valid_vectors(vectors, vec_col)
@@ -825,11 +719,11 @@ def kmeans_centroids(
     train_n: int | None = None,
 ) -> DataFrame:
     """The Lloyd trainer behind kmeans_clusters, exposed so downstream
-    operators (semantic_dedup's ``centroids=``, the deterministic IVF
-    quantizer) can reuse the trained (_cid, _ce) frame: _lloyd over a
-    single block (seeds = k lowest-id vectors, cosine assignment
-    rounded to 6 dp with ties to the lowest cid, exact fixed-point
-    elementwise means). ``train_n`` bounds the training set to ids
+    operators (semantic_dedup's ``centroids=``, the IVF quantizer of
+    ivf_topk and build_ivf_index) can reuse the trained (_cid, _ce)
+    frame: _lloyd over a single block (seeds = k lowest-id vectors,
+    cosine assignment rounded to 6 dp with ties to the lowest cid,
+    exact fixed-point elementwise means). ``train_n`` bounds the training set to ids
     below train_n (deterministic and SQL-replayable — the pq_codebooks
     discipline; assumes DENSE 0-BASED ids and fails fast via
     _bounded_train_set when the bound selects fewer than k vectors);
@@ -917,61 +811,77 @@ def kmeans_cluster_quality(
     )
 
 
-def ivf_topk_deterministic(
+def _probe_window(qv: DataFrame, cents: DataFrame, n_probe: int) -> DataFrame:
+    """The IVF probe rule shared by ivf_topk and ann_search_ivf_indexed:
+    each query (query_id, _qv array<double>, _qn its norm) probes the
+    ``n_probe`` centroids (_cid, _ce) of highest cosine, rounded to 6 dp,
+    ties to the lowest cell. Lloyd centroids are means, not unit
+    vectors, so the rank is by cosine, never by a raw dot product.
+    Returns (query_id, _qv, _qn, cell)."""
+    cn = cents.select("_cid", "_ce", l2_norm("_ce").alias("_cn"))
+    w = Window.partitionBy("query_id").orderBy(F.desc("_sim"), "_cid")
+    return (
+        qv.crossJoin(F.broadcast(cn))
+        .select(
+            "query_id", "_qv", "_qn", "_cid",
+            F.round(dot("_qv", "_ce") / (F.col("_qn") * F.col("_cn")), 6).alias("_sim"),
+        )
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= n_probe)
+        .select("query_id", "_qv", "_qn", F.col("_cid").alias("cell"))
+    )
+
+
+def ivf_topk(
     vectors: DataFrame,
     queries: DataFrame,
     k: int = 10,
     n_cells: int = 8,
     n_probe: int = 2,
     train_iters: int = 2,
+    train_n: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF top-k whose coarse quantizer is the DISTRIBUTED fixed-point
-    Lloyd trainer (kmeans_centroids) instead of ivf_topk's driver-side
-    numpy sample: every stage — training, corpus cell assignment, query
-    probing, exact re-rank — is a pure deterministic function of the
-    input, so this approximate-by-design index is still fully
-    SQL-oracle-checkable (the oracle replays training iteration by
-    iteration). ivf_topk remains the FAISS-realistic production trainer
-    (bounded sample, float means) and is rows-only checked for exactly
-    that reason.
+    """Approximate top-k via an IVF (inverted-file) coarse quantizer —
+    the FAISS-style scale path complementing hyperplane_lsh_topk.
 
-    Scale shape matches ivf_topk: centroids broadcast, corpus assigned
-    in one pass, candidates join on the small cell key (a query touches
+    The quantizer is the distributed fixed-point Lloyd trainer
+    (kmeans_centroids, ``train_iters`` rounds from the ``n_cells``
+    lowest-id seeds), so every stage — training, corpus cell
+    assignment, query probing (_probe_window), exact re-rank — is a
+    pure deterministic function of the input and the SQL oracle
+    replays it iteration by iteration. ``train_n`` bounds the training
+    set to ids below train_n (standard IVF practice: the quantizer
+    trains on a bounded sample regardless of corpus size; dense 0-based
+    ids, fail-fast via _bounded_train_set); None trains on the corpus.
+
+    Scale shape: centroids broadcast, corpus assigned in one row-local
+    pass, candidates join on the small cell key (a query touches
     n_probe/n_cells of the corpus), exact cosine re-rank within probed
-    cells. Query's own cell is always its top probe, so self-matches
-    are filtered explicitly.
+    cells. Recall is tunable via n_probe (n_probe = n_cells ⇒ exact).
+    A query's own cell is always its top probe, so self-matches are
+    filtered explicitly.
     NULL / zero-norm vectors are excluded on both sides (valid_vectors).
     """
     vectors = valid_vectors(vectors, vec_col)
     queries = valid_vectors(queries, vec_col)
-    cents = kmeans_centroids(vectors, n_cells, train_iters, id_col, vec_col)
+    cents = kmeans_centroids(
+        vectors, n_cells, train_iters, id_col, vec_col, train_n=train_n
+    )
     cells = _assign_to_centroids(_vectors(vectors, id_col, vec_col), cents).select(
         F.col("_id").alias("neighbor_id"),
         F.col("cluster_id").alias("cell"),
         F.col("_e").alias("_nv"),
         l2_norm("_e").alias("_nn"),
     )
-    cn = cents.select("_cid", "_ce", l2_norm("_ce").alias("_cn"))
     qv = queries.select(
         F.col(id_col).alias("query_id"),
         F.transform(vec_col, lambda x: x.cast("double")).alias("_qv"),
         l2_norm(F.transform(vec_col, lambda x: x.cast("double"))).alias("_qn"),
     )
-    probe_w = Window.partitionBy("query_id").orderBy(F.desc("_sim"), "_cid")
-    probes = (
-        qv.crossJoin(F.broadcast(cn))
-        .select(
-            "query_id", "_qv", "_qn", "_cid",
-            F.round(dot("_qv", "_ce") / (F.col("_qn") * F.col("_cn")), 6).alias("_sim"),
-        )
-        .withColumn("_rn", F.row_number().over(probe_w))
-        .filter(F.col("_rn") <= n_probe)
-        .select("query_id", "_qv", "_qn", F.col("_cid").alias("cell"))
-    )
     scored = (
-        cells.join(F.broadcast(probes), "cell")
+        cells.join(F.broadcast(_probe_window(qv, cents, n_probe)), "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id",
@@ -1119,12 +1029,12 @@ def pq_codebooks(
     block·256 + code, so more codewords per block would collide.
 
     ``train_n`` bounds the TRAINING SET to the ``train_n`` lowest-id
-    vectors — the 100 TB deployment form (standard PQ practice, same
-    as ivf_topk's bounded trainer: codebooks need a representative
-    sample, not the corpus, so each Lloyd pass costs O(train_n)
-    instead of O(corpus); encode/score still sweep everything). The
-    bound is deterministic and SQL-replayable (``WHERE {id} <
-    train_n``) and assumes DENSE 0-BASED ids — _bounded_train_set
+    vectors — the 100 TB deployment form (standard PQ practice, the
+    same bound as ivf_topk's quantizer: codebooks need a
+    representative sample, not the corpus, so each Lloyd pass costs
+    O(train_n) instead of O(corpus); encode/score still sweep
+    everything). The bound is deterministic and SQL-replayable
+    (``WHERE {id} < train_n``) and assumes DENSE 0-BASED ids — _bounded_train_set
     fails fast when it selects fewer than k vectors. Default None
     trains on the full corpus — the oracle-checked registry
     configuration at test SFs, where the corpus IS sample-sized.
@@ -1542,13 +1452,37 @@ def sq8_error_report(
     )
 
 
+def _write_cells(
+    vectors: DataFrame, cents: DataFrame, path: str, mode: str, id_col: str, vec_col: str
+) -> None:
+    """Assign ``vectors`` to the (_cid, _ce) centroids with
+    _assign_to_centroids (ivf_topk's own cell rule) and write them
+    partitioned by cell as (id, embedding array<double>). The input is
+    not _spread: a partitioned write emits one file per (task, cell),
+    so a repartition would multiply the files of every cell."""
+    v = vectors.select(
+        F.col(id_col).alias("_id"),
+        F.transform(vec_col, lambda x: x.cast("double")).alias("_e"),
+    )
+    (
+        _assign_to_centroids(v, cents)
+        .select(
+            F.col("_id").alias(id_col),
+            F.col("_e").alias(vec_col),
+            F.col("cluster_id").cast("int").alias("cell"),
+        )
+        .write.mode(mode)
+        .partitionBy("cell")
+        .parquet(path)
+    )
+
+
 def build_ivf_index(
     vectors: DataFrame,
     path: str,
-    n_cells: int = 16,
-    sample_size: int = 4096,
-    train_iters: int = 10,
-    seed: int = 42,
+    n_cells: int = 8,
+    train_iters: int = 2,
+    train_n: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
@@ -1559,38 +1493,23 @@ def build_ivf_index(
     cells scans exactly p/c of the data via partition pruning — no
     session state, any engine can serve it.
 
+    The quantizer and the assignment are ivf_topk's: kmeans_centroids
+    (fixed-point Lloyd, ``train_iters`` rounds, ``train_n`` bound) and
+    _assign_to_centroids, so a vector lands in the same cell as
+    kmeans_clusters assigns it. NULL and zero-norm vectors are not
+    indexed (valid_vectors): they have no direction to route by.
+
     Layout under ``path``: ``cells/cell=<i>/`` holding (id, embedding)
-    and ``centroids/`` holding (cell, centroid array<double>). Corpus
-    assignment is the same broadcast numpy-GEMM Arrow pass as ivf_topk
-    (no shuffle beyond the partitioned write's file routing).
+    and ``centroids/`` holding (cell, centroid array<double>), the
+    centroids as trained (not unit-norm).
     """
-    import pandas as pd
-
-    cents = _train_ivf_centroids(
-        vectors, n_cells, sample_size, train_iters, seed, id_col, vec_col
+    vectors = valid_vectors(vectors, vec_col)
+    cents = kmeans_centroids(
+        vectors, n_cells, train_iters, id_col, vec_col, train_n=train_n
     )
-    bc = vectors.sparkSession.sparkContext.broadcast(cents)
-
-    @F.pandas_udf("int")
-    def cell_of(vs: pd.Series) -> pd.Series:
-        m = np.stack(vs.to_numpy()).astype("float64")
-        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        return pd.Series(np.argmax(m @ bc.value.T, axis=1).astype("int32"))
-
-    (
-        vectors.select(
-            id_col,
-            F.col(vec_col).cast("array<double>").alias(vec_col),
-            cell_of(F.col(vec_col).cast("array<double>")).alias("cell"),
-        )
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{path}/cells")
-    )
-    spark = vectors.sparkSession
-    spark.createDataFrame(
-        [(i, [float(x) for x in cents[i]]) for i in range(len(cents))],
-        "cell int, centroid array<double>",
+    _write_cells(vectors, cents, f"{path}/cells", "overwrite", id_col, vec_col)
+    cents.select(
+        F.col("_cid").cast("int").alias("cell"), F.col("_ce").alias("centroid")
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
 
 
@@ -1599,23 +1518,29 @@ def ann_search_ivf_indexed(
     index_path: str,
     query_vec: list,
     k: int = 10,
-    n_probe: int = 4,
+    n_probe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Online ANN against a build_ivf_index layout: rank the (tiny)
-    centroid table driver-side to pick the ``n_probe`` nearest cells,
-    then scan ONLY those cell directories (partition pruning — the
-    plan's PartitionFilters carries the IN-list) and re-rank exactly
-    by cosine in JVM expressions (query literals unrolled into the
-    plan — no Python in the scan path). n_probe = n_cells ⇒ exact
-    brute force. Driver-side pulls: the centroid table (n_cells rows)
-    only."""
+    """Online ANN against a build_ivf_index layout: pick the
+    ``n_probe`` cells by ivf_topk's probe rule (_probe_window: cosine
+    to each stored centroid, 6 dp, ties to the lowest cell), then scan
+    ONLY those cell directories (partition pruning — the plan's
+    PartitionFilters carries the IN-list) and re-rank exactly by
+    cosine in JVM expressions (query literals unrolled into the plan —
+    no Python in the scan path). n_probe = n_cells ⇒ exact brute
+    force. Driver-side pulls: the n_probe chosen cell ids only."""
     q = np.asarray(query_vec, dtype="float64")
-    qn = q / max(np.linalg.norm(q), 1e-12)
-    cents = spark.read.parquet(f"{index_path}/centroids").collect()
-    sims = [(float(np.dot(qn, np.asarray(r.centroid))), r.cell) for r in cents]
-    probes = [c for _, c in sorted(sims, key=lambda t: (-t[0], t[1]))[:n_probe]]
+    if not np.any(q):
+        raise ValueError("query_vec has no nonzero component, so it has no cosine rank")
+    qn = q / np.linalg.norm(q)
+    qv = spark.createDataFrame(
+        [(0, [float(x) for x in q])], "query_id int, _qv array<double>"
+    ).select("query_id", "_qv", l2_norm("_qv").alias("_qn"))
+    cents = spark.read.parquet(f"{index_path}/centroids").select(
+        F.col("cell").alias("_cid"), F.col("centroid").alias("_ce")
+    )
+    probes = [r.cell for r in _probe_window(qv, cents, n_probe).select("cell").collect()]
     rows = spark.read.parquet(f"{index_path}/cells").filter(
         F.col("cell").isin(probes)
     )
@@ -1646,40 +1571,29 @@ def add_to_ivf_index(
     path: assign the new batch against the EXISTING centroids (no
     retraining; the coarse quantizer is deliberately stable so cell
     routing never changes under ingestion) and append the rows into
-    their cell directories. Existing files are never rewritten —
-    append-only per partition (tested by file inventory), so the cost
-    of an add is O(batch), not O(index), and concurrent readers keep
-    a consistent view of the old files.
+    their cell directories. The stored (cell, centroid) table is read
+    back as (_cid, _ce) and the batch goes through the same
+    _assign_to_centroids pass as build_ivf_index — no driver collect.
+    NULL and zero-norm vectors are not indexed (valid_vectors).
+    Existing files are never rewritten — append-only per partition
+    (tested by file inventory), so the cost of an add is O(batch), not
+    O(index), and concurrent readers keep a consistent view of the old
+    files.
 
     Centroid drift under heavy ingestion is handled the way FAISS
     does: rebuild with build_ivf_index when recall degrades, not by
     mutating cells in place.
     """
-    import pandas as pd
-
-    spark = new_vectors.sparkSession
-    cents_rows = sorted(
-        spark.read.parquet(f"{index_path}/centroids").collect(),
-        key=lambda r: r.cell,
+    cents = new_vectors.sparkSession.read.parquet(f"{index_path}/centroids").select(
+        F.col("cell").alias("_cid"), F.col("centroid").alias("_ce")
     )
-    cents = np.stack([np.asarray(r.centroid, dtype="float64") for r in cents_rows])
-    bc = spark.sparkContext.broadcast(cents)
-
-    @F.pandas_udf("int")
-    def cell_of(vs: pd.Series) -> pd.Series:
-        m = np.stack(vs.to_numpy()).astype("float64")
-        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        return pd.Series(np.argmax(m @ bc.value.T, axis=1).astype("int32"))
-
-    (
-        new_vectors.select(
-            id_col,
-            F.col(vec_col).cast("array<double>").alias(vec_col),
-            cell_of(F.col(vec_col).cast("array<double>")).alias("cell"),
-        )
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(f"{index_path}/cells")
+    _write_cells(
+        valid_vectors(new_vectors, vec_col),
+        cents,
+        f"{index_path}/cells",
+        "append",
+        id_col,
+        vec_col,
     )
 
 

@@ -97,7 +97,10 @@ def codegen_span_count(df: DataFrame) -> int:
 def assert_scalable(df: DataFrame) -> None:
     """Raise AssertionError if the plan contains a scale hazard."""
     found = hazards(df)
-    assert not found, f"plan contains scale hazards {found}:\n{physical_plan(df)}"
+    if found:
+        raise AssertionError(
+            f"plan contains scale hazards {found}:\n{physical_plan(df)}"
+        )
 
 
 def audit(df: DataFrame) -> dict:

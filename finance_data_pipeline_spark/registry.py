@@ -4169,6 +4169,23 @@ def q_profile_table(spark, sf_dir):
     return quality.profile_columns(table(spark, sf_dir, "orders"), _PROFILE_COLS)
 
 
+def _lloyd_ctes(seeds: str, score: str, assign: str, update: str,
+                iters: int = 2, train: str = "v") -> str:
+    """The CTEs ``c0 … c{iters}`` replaying similarity._lloyd: ``c0`` is
+    ``seeds``, then each round scores the training relation ``train``
+    against the previous centroids (``s{i}``), assigns each vector its
+    argmax (``a{i}``) and takes the fixed-point means (``c{i}``). The
+    templates are the _KM_* (one block) or _PQ_* (block-keyed) ones."""
+    ctes = [f"c0 AS ({seeds})"]
+    for i in range(1, iters + 1):
+        ctes += [
+            f"s{i} AS ({score.format(cents=f'c{i - 1}', v=train)})",
+            f"a{i} AS ({assign.format(scored=f's{i}')})",
+            f"c{i} AS ({update.format(assign=f'a{i}', v=train)})",
+        ]
+    return ",\n".join(ctes)
+
+
 # PQ oracle: the block-keyed twins of the _KM_* templates — every block
 # trains in the same CTE chain (b is just another key), so the full PQ
 # trainer + encode + ADC scoring replays in one SQL statement.
@@ -4200,13 +4217,8 @@ _PQ_UPDATE = """SELECT b, cid, list(m ORDER BY pos) AS ce FROM (
 _PQ_CHAIN = f"""v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
   WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x <> 0)) > 0),
 vb AS ({_PQ_VB}),
-c0 AS (SELECT b, vec_id AS cid, e AS ce FROM vb WHERE vec_id < 16),
-s1 AS ({_PQ_SCORE.format(cents="c0")}),
-a1 AS ({_PQ_ASSIGN.format(scored="s1")}),
-c1 AS ({_PQ_UPDATE.format(assign="a1")}),
-s2 AS ({_PQ_SCORE.format(cents="c1")}),
-a2 AS ({_PQ_ASSIGN.format(scored="s2")}),
-c2 AS ({_PQ_UPDATE.format(assign="a2")}),
+{_lloyd_ctes("SELECT b, vec_id AS cid, e AS ce FROM vb WHERE vec_id < 16",
+             _PQ_SCORE, _PQ_ASSIGN, _PQ_UPDATE)},
 s3 AS ({_PQ_SCORE.format(cents="c2")}),
 codes AS ({_PQ_ASSIGN.format(scored="s3")}),
 qb AS (SELECT vec_id AS query_id, b, e FROM vb WHERE vec_id < 5),
@@ -4236,10 +4248,10 @@ def q_ann_topk_pq(spark, sf_dir):
     (ADC, decimal-summed so the approximate scores replay bit-exactly).
     Completes the ANN family: brute force / hyperplane LSH / IVF / PQ.
     Deployment form: train_n bounds the Lloyd training set to a
-    deterministic sample (standard PQ practice, the ivf_topk trainer
-    discipline) so training is O(sample) at any corpus size; the
-    registry config trains on the full (sample-sized) test corpus so
-    the oracle replays it. See similarity.ann_topk_pq."""
+    deterministic sample (standard PQ practice, the same bound as
+    ann_topk_ivf's quantizer) so training is O(sample) at any corpus
+    size; the registry config trains on the full (sample-sized) test
+    corpus so the oracle replays it. See similarity.ann_topk_pq."""
     vecs = table(spark, sf_dir, "embeddings")
     return similarity.ann_topk_pq(vecs, vecs.filter(F.col("vec_id") < 5))
 
@@ -4578,13 +4590,6 @@ def q_ann_lsh(spark, sf_dir):
     return similarity.hyperplane_lsh_topk(vecs, queries, k=10, dim=_LSH_DIM)
 
 
-@query("ann_topk_ivf")  # approximate (coarse quantizer) — rows-only check
-def q_ann_ivf(spark, sf_dir):
-    vecs = table(spark, sf_dir, "embeddings")
-    queries = vecs.filter(F.col("vec_id") < 5)
-    return similarity.ivf_topk(vecs, queries, k=10)
-
-
 @query(
     "cosine_dup_pairs",
     """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
@@ -4674,33 +4679,36 @@ _KM_ASSIGN = """SELECT vec_id, cid FROM (
          row_number() OVER (PARTITION BY s.vec_id ORDER BY s.sim DESC, s.cid) AS rn
   FROM {scored} s) WHERE rn = 1"""
 
-_KM_SCORE = """SELECT v.vec_id, c.cid,
-       round(list_dot_product(v.e, c.ce)
-             / (sqrt(list_dot_product(v.e, v.e)) * sqrt(list_dot_product(c.ce, c.ce))), 6)
+_KM_SCORE = """SELECT {v}.vec_id, c.cid,
+       round(list_dot_product({v}.e, c.ce)
+             / (sqrt(list_dot_product({v}.e, {v}.e)) * sqrt(list_dot_product(c.ce, c.ce))), 6)
          AS sim
-FROM v CROSS JOIN {cents} c"""
+FROM {v} CROSS JOIN {cents} c"""
 
 _KM_UPDATE = """SELECT cid, list(m ORDER BY pos) AS ce FROM (
   SELECT a.cid, p.pos,
-         CAST(sum(CAST(round(v.e[p.pos] * 1000000) AS BIGINT)) AS DOUBLE)
+         CAST(sum(CAST(round({v}.e[p.pos] * 1000000) AS BIGINT)) AS DOUBLE)
            / (1000000.0 * count(*)) AS m
-  FROM {assign} a JOIN v ON v.vec_id = a.vec_id
+  FROM {assign} a JOIN {v} ON {v}.vec_id = a.vec_id
   CROSS JOIN (SELECT unnest(range(1, 65)) AS pos) p
   GROUP BY a.cid, p.pos) GROUP BY cid"""
+
+
+def _km_chain(k: int, train: str = "v") -> str:
+    """c0 … c2 of the two-round k-means replay (kmeans_centroids) over
+    the training relation ``train``: seeds are its k lowest ids."""
+    return _lloyd_ctes(
+        f"SELECT vec_id AS cid, e AS ce FROM {train} WHERE vec_id < {k}",
+        _KM_SCORE, _KM_ASSIGN, _KM_UPDATE, train=train,
+    )
 
 
 @query(
     "kmeans_clusters",
     f"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
   WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x <> 0)) > 0),
-c0 AS (SELECT vec_id AS cid, e AS ce FROM v WHERE vec_id < 8),
-s1 AS ({_KM_SCORE.format(cents="c0")}),
-a1 AS ({_KM_ASSIGN.format(scored="s1")}),
-c1 AS ({_KM_UPDATE.format(assign="a1")}),
-s2 AS ({_KM_SCORE.format(cents="c1")}),
-a2 AS ({_KM_ASSIGN.format(scored="s2")}),
-c2 AS ({_KM_UPDATE.format(assign="a2")}),
-s3 AS ({_KM_SCORE.format(cents="c2")})
+{_km_chain(8)},
+s3 AS ({_KM_SCORE.format(cents="c2", v="v")})
 SELECT vec_id, cid AS cluster_id FROM ({_KM_ASSIGN.format(scored="s3")})""",
 )
 def q_kmeans_clusters(spark, sf_dir):
@@ -4715,18 +4723,18 @@ def q_kmeans_clusters(spark, sf_dir):
     )
 
 
-@query(
-    "ann_topk_ivf_exact",
-    f"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-  WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x <> 0)) > 0),
-c0 AS (SELECT vec_id AS cid, e AS ce FROM v WHERE vec_id < 8),
-s1 AS ({_KM_SCORE.format(cents="c0")}),
-a1 AS ({_KM_ASSIGN.format(scored="s1")}),
-c1 AS ({_KM_UPDATE.format(assign="a1")}),
-s2 AS ({_KM_SCORE.format(cents="c1")}),
-a2 AS ({_KM_ASSIGN.format(scored="s2")}),
-c2 AS ({_KM_UPDATE.format(assign="a2")}),
-s3 AS ({_KM_SCORE.format(cents="c2")}),
+def _ivf_oracle(n_cells: int, n_probe: int, train_n: int | None = None) -> str:
+    """SQL replay of similarity.ivf_topk for the queries vec_id < 5 at
+    k=10: the two-round Lloyd chain over the training relation (``t``,
+    the ids below ``train_n``, or the whole corpus ``v``), the corpus
+    cell assignment, the ``n_probe`` probe window (cosine at 6 dp, ties
+    to the lowest cell) and the exact re-rank inside probed cells."""
+    train = "v" if train_n is None else "t"
+    bound = "" if train_n is None else f"\nt AS (SELECT * FROM v WHERE vec_id < {train_n}),"
+    return f"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
+  WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x <> 0)) > 0),{bound}
+{_km_chain(n_cells, train)},
+s3 AS ({_KM_SCORE.format(cents="c2", v="v")}),
 cells AS ({_KM_ASSIGN.format(scored="s3")}),
 probes AS (SELECT query_id, cid FROM (
   SELECT query_id, cid,
@@ -4736,7 +4744,7 @@ probes AS (SELECT query_id, cid FROM (
                      / (sqrt(list_dot_product(q.e, q.e)) * sqrt(list_dot_product(c.ce, c.ce))), 6)
                  AS sim
         FROM v q CROSS JOIN c2 c WHERE q.vec_id < 5))
-  WHERE rn <= 2),
+  WHERE rn <= {n_probe}),
 cand AS (SELECT p.query_id, cc.vec_id AS neighbor_id
          FROM probes p JOIN cells cc ON cc.cid = p.cid
          WHERE cc.vec_id <> p.query_id),
@@ -4749,19 +4757,35 @@ rescored AS (SELECT cand.query_id, cand.neighbor_id,
 SELECT query_id, neighbor_id, cosine_sim FROM (
   SELECT *, row_number() OVER (PARTITION BY query_id
                                ORDER BY cosine_sim DESC, neighbor_id) AS rn
-  FROM rescored) WHERE rn <= 10""",
-)
+  FROM rescored) WHERE rn <= 10"""
+
+
+@query("ann_topk_ivf_exact", _ivf_oracle(n_cells=8, n_probe=2))
 def q_ann_ivf_exact(spark, sf_dir):
     """X3 — IVF top-k with a FULL oracle: the coarse quantizer is the
     distributed fixed-point Lloyd trainer (similarity.kmeans_centroids),
     so training, cell assignment, n_probe selection and the exact
     re-rank are all replayed by the SQL above iteration by iteration.
-    Complements ann_topk_ivf (FAISS-realistic numpy sample trainer —
-    rows-only for exactly that reason)."""
+    The full-corpus trainer at 8 cells; ann_topk_ivf runs the bounded
+    trainer."""
     vecs = table(spark, sf_dir, "embeddings")
     queries = vecs.filter(F.col("vec_id") < 5)
-    return similarity.ivf_topk_deterministic(
+    return similarity.ivf_topk(
         vecs, queries, k=10, n_cells=8, n_probe=2, train_iters=2
+    )
+
+
+@query("ann_topk_ivf", _ivf_oracle(n_cells=16, n_probe=4, train_n=256))
+def q_ann_ivf(spark, sf_dir):
+    """X3 — IVF top-k in its deployment form: 16 cells, 4 probes, and
+    the quantizer trained on the bounded set vec_id < 256 (train_n),
+    so training costs O(train_n) at any corpus size while the corpus
+    assignment and re-rank still sweep everything. Same kernel and
+    oracle as ann_topk_ivf_exact, with the training relation bounded."""
+    vecs = table(spark, sf_dir, "embeddings")
+    queries = vecs.filter(F.col("vec_id") < 5)
+    return similarity.ivf_topk(
+        vecs, queries, k=10, n_cells=16, n_probe=4, train_n=256
     )
 
 
@@ -4769,14 +4793,8 @@ def q_ann_ivf_exact(spark, sf_dir):
     "semantic_dedup_kmeans",
     f"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
   WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x <> 0)) > 0),
-c0 AS (SELECT vec_id AS cid, e AS ce FROM v WHERE vec_id < 8),
-s1 AS ({_KM_SCORE.format(cents="c0")}),
-a1 AS ({_KM_ASSIGN.format(scored="s1")}),
-c1 AS ({_KM_UPDATE.format(assign="a1")}),
-s2 AS ({_KM_SCORE.format(cents="c1")}),
-a2 AS ({_KM_ASSIGN.format(scored="s2")}),
-c2 AS ({_KM_UPDATE.format(assign="a2")}),
-s3 AS ({_KM_SCORE.format(cents="c2")}),
+{_km_chain(8)},
+s3 AS ({_KM_SCORE.format(cents="c2", v="v")}),
 assigned AS ({_KM_ASSIGN.format(scored="s3")}),
 dropped AS (
   SELECT DISTINCT b.vec_id
@@ -6888,14 +6906,8 @@ def q_media_audio_energy(spark, sf_dir):
     "kmeans_cluster_quality",
     f"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
   WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x <> 0)) > 0),
-c0 AS (SELECT vec_id AS cid, e AS ce FROM v WHERE vec_id < 8),
-s1 AS ({_KM_SCORE.format(cents="c0")}),
-a1 AS ({_KM_ASSIGN.format(scored="s1")}),
-c1 AS ({_KM_UPDATE.format(assign="a1")}),
-s2 AS ({_KM_SCORE.format(cents="c1")}),
-a2 AS ({_KM_ASSIGN.format(scored="s2")}),
-c2 AS ({_KM_UPDATE.format(assign="a2")}),
-s3 AS ({_KM_SCORE.format(cents="c2")}),
+{_km_chain(8)},
+s3 AS ({_KM_SCORE.format(cents="c2", v="v")}),
 asg AS ({_KM_ASSIGN.format(scored="s3")}),
 own AS (SELECT vec_id, max(sim) AS own_sim FROM s3 GROUP BY vec_id),
 oth AS (SELECT s.vec_id, max(s.sim) AS other_sim

@@ -36,6 +36,7 @@ RUN_SLOW = os.environ.get("SPARK_GRAFT_SLOW_TESTS", "") == "1"
 # Queries whose parity test ALWAYS runs (restructured in recent rounds —
 # the highest-value regression guards).
 _PARITY_ALWAYS = {
+    "ann_topk_ivf",
     "ann_topk_ivf_exact",
     "ann_topk_pq",
     "ann_topk_pq_rerank",

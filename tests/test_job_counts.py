@@ -8,8 +8,10 @@ that co-tenant load cannot fake. Each bound is the count measured on
 the code before that kernel's latest refactor, the highest of three
 runs: before the rank loop and the Lloyd trainer were each folded into
 one implementation, before the decontamination operators moved onto
-the shared shingle-hash and benchmark-split definitions, and before the
-bar fixtures were memoized. A change that
+the shared shingle-hash and benchmark-split definitions, before the
+bar fixtures were memoized, and, for ``ivf_topk`` (8 cells, 2 probes,
+2 Lloyd rounds), the count of ``ivf_topk_deterministic`` with the same
+arguments before the two IVF paths were merged into one. A change that
 adds an eager job or an AQE query stage to one of these kernels fails
 here.
 """
@@ -29,6 +31,7 @@ _MAX_JOBS = {
     "pagerank": 30,
     "personalized_pagerank": 41,
     "kmeans_centroids": 13,
+    "ivf_topk": 20,
     "pq_codebooks": 15,
     "bloom_decontaminate": 11,
     "decontaminate": 8,
@@ -75,6 +78,14 @@ def _personalized(spark):
     return graph.personalized_pagerank(edges, seeds)
 
 
+def _ivf(spark):
+    vecs = table(spark, SF_DIR, "embeddings")
+    queries = vecs.filter(F.col("vec_id") < 5)
+    return similarity.ivf_topk(
+        vecs, queries, k=10, n_cells=8, n_probe=2, train_iters=2
+    )
+
+
 _KERNELS = {
     "pagerank": lambda spark: graph.pagerank(_edges(spark)),
     "personalized_pagerank": _personalized,
@@ -84,6 +95,7 @@ _KERNELS = {
     "pq_codebooks": lambda spark: similarity.pq_codebooks(
         table(spark, SF_DIR, "embeddings")
     ),
+    "ivf_topk": _ivf,
     "bloom_decontaminate": lambda spark: dedup.bloom_decontaminate(
         table(spark, SF_DIR, "documents")
     ),

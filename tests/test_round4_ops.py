@@ -729,6 +729,62 @@ def test_ivf_add_appends_without_rewriting_old_files(spark, tmp_path):
     assert got.first().vec_id == 0
 
 
+def test_ivf_index_skips_null_and_zero_vectors(spark, tmp_path):
+    """A NULL or all-zero embedding has no direction to route by: build
+    and add must index neither (valid_vectors), not fail or file it
+    under cell 0, and a search with a zero query is rejected."""
+    import pytest
+
+    from finance_data_pipeline_spark.extensions import similarity
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    top = emb.agg(F.max("vec_id")).first()[0]
+    dim = len(emb.first().embedding)
+
+    def bad(first_id):
+        return spark.createDataFrame(
+            [(first_id, None, 0), (first_id + 1, [0.0] * dim, 0)], emb.schema
+        )
+
+    idx = str(tmp_path / "ivf_degenerate")
+    similarity.build_ivf_index(emb.unionByName(bad(top + 1)), idx, n_cells=8)
+    similarity.add_to_ivf_index(bad(top + 3), idx)
+    ids = {r.vec_id for r in spark.read.parquet(f"{idx}/cells").collect()}
+    assert ids == {r.vec_id for r in emb.collect()}
+    with pytest.raises(ValueError, match="nonzero"):
+        similarity.ann_search_ivf_indexed(spark, idx, [0.0] * dim)
+
+
+def test_ivf_index_matches_in_session_assignment(spark, tmp_path):
+    """The on-disk index runs ivf_topk's kernel: every vector sits in the
+    cell kmeans_clusters assigns it, and a search probes the same cells
+    as ivf_topk's probe window for the same query."""
+    from finance_data_pipeline_spark.extensions import similarity
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    idx = str(tmp_path / "ivf_same")
+    similarity.build_ivf_index(emb, idx, n_cells=8)
+    on_disk = {
+        r.vec_id: r.cell
+        for r in spark.read.parquet(f"{idx}/cells").select("vec_id", "cell").collect()
+    }
+    in_session = {
+        r.vec_id: r.cluster_id
+        for r in similarity.kmeans_clusters(emb, k=8, iters=2).collect()
+    }
+    assert on_disk == in_session
+
+    n = len(on_disk)
+    qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first().embedding]
+    searched = similarity.ann_search_ivf_indexed(spark, idx, qvec, k=n, n_probe=2)
+    window = similarity.ivf_topk(
+        emb, emb.filter(F.col("vec_id") == 0), k=n, n_cells=8, n_probe=2
+    )
+    probed = {r.cell for r in searched.collect()}
+    assert len(probed) == 2
+    assert probed == {in_session[r.neighbor_id] for r in window.collect()}
+
+
 # --- calendar_fill / resample_ohlc / k_anonymity / zorder ---------------
 
 

@@ -255,7 +255,7 @@ def test_ivf_deterministic_rescores_exactly_and_recalls(spark, vectors):
         (r.query_id, r.neighbor_id): r.cosine_sim
         for r in similarity.brute_force_topk(vectors, queries, k=10).collect()
     }
-    ivf = similarity.ivf_topk_deterministic(
+    ivf = similarity.ivf_topk(
         vectors, queries, k=10, n_cells=8, n_probe=2, train_iters=2
     ).collect()
     assert len(ivf) > 0
