@@ -26,6 +26,11 @@ from finance_data_pipeline_spark.extensions.dedup import _spread
 # counts never reach it, and iters ≫ 6 still cannot stack deep plans.
 _CHECKPOINT_EVERY = 6
 
+# Bytes per row of pagerank's per-round (src, q) vector as Spark's
+# planner sizes it (8-byte row header + two longs) — what its
+# broadcast gate compares against spark.sql.autoBroadcastJoinThreshold.
+_VECTOR_ROW_BYTES = 24
+
 
 def pagerank(
     edges: DataFrame,
@@ -272,41 +277,51 @@ def personalized_pagerank(
     graph's node set and counted once on the driver. With seeds=None,
     S is the node count N and no seed join is built.
 
-    Scale shape per iteration: one join of the edge list against the
-    N-row rank vector (shuffle on src), one map-side-combined sum into
-    dst, one left join back onto nodes. Rounds CHAIN LAZILY — each
-    round references the previous rank vector exactly once, so the
-    plan grows linearly, and running all rounds as ONE job lets the
-    scheduler pipeline stages instead of paying a blocking
-    materialization barrier per round (guide §2.4/§1.2 — the former
-    per-round localCheckpoint cost one eager job each: measured 5.6 s
-    → 3.1 s for the 5-round bench query). A localCheckpoint every
-    _CHECKPOINT_EVERY rounds cuts lineage for iters ≫ 5
-    (connected_components' discipline). The only driver-side values
-    are S (one count) and the constant teleport — no rank data ever
+    Scale shape per iteration: the edges stay put and only the vertex
+    vector moves (the Pregel/GraphX rule). Each round divides on the
+    N-row vector — ``q = r div deg`` per node with out-degree > 0, the
+    integer each of that node's out-edges contributes — joins it to
+    the materialized edge list on src, sums the contributions
+    into dst (map-side combined) and left-joins the sums back onto the
+    nodes. Rounds CHAIN LAZILY — each round references the previous
+    rank vector exactly once, so the plan grows linearly, and running
+    all rounds as ONE job lets the scheduler pipeline stages instead
+    of paying a blocking materialization barrier per round (guide
+    §2.4/§1.2 — the former per-round localCheckpoint cost one eager
+    job each: measured 5.6 s → 3.1 s for the 5-round bench query). A
+    localCheckpoint every _CHECKPOINT_EVERY rounds cuts lineage for
+    iters ≫ 5 (connected_components' discipline). The only
+    driver-side values are N and S (one count each; one count when
+    seeds=None) and the constant teleport — no rank data ever
     collects.
 
     Overflow headroom: Σ contribs ≤ N·scale and the damping multiply
     stays < 2^63 while N·scale·damping_pct < 9.2e18 — at scale=1e9
     that is ~10⁸ nodes; shrink ``scale`` for larger graphs.
+
+    Broadcast gate: the per-round vector (src, q) is broadcast when
+    N × _VECTOR_ROW_BYTES fits the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` (-1 turns it off) — at
+    the 10 MB default that is N up to ~437,000 nodes. Then no round
+    shuffles the edge list. Above the threshold the same plan runs
+    the planner's own join, which shuffles the E-row edge list to
+    meet the vector every round.
     """
     # The edge list is materialized ONCE up front (guide §1.2 — don't
-    # compute things twice): nd, the seed set and ed_deg are all eager
-    # localCheckpoints downstream of it, and without this seam each
-    # re-derived the whole upstream edge pipeline (for the
-    # supplier↔customer graph that is the lineitem⋈orders distinct
-    # join) in its own job. Edges are two longs per row — materializing
-    # them is the same safe trade the ed_deg checkpoint below makes.
+    # compute things twice): nd and the seed set are eager
+    # localCheckpoints downstream of it and every round joins it
+    # again, and without this seam each re-derived the whole upstream
+    # edge pipeline (for the supplier↔customer graph that is the
+    # lineitem⋈orders distinct join) in its own job. Edges are two
+    # longs per row, so materializing them is a safe trade.
     ed = _spread(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     ).localCheckpoint()
     # Fused node-set + out-degree pass (guide §2.4): each edge emits
     # its endpoints row-locally (src tagged 1, dst tagged 0) and ONE
     # map-side-combined groupBy yields both the distinct node set and
-    # every node's out-degree — the former shape paid two full passes
-    # over the edge stream (a union+distinct for nodes, a separate
-    # groupBy for deg) plus a third in the ed⋈deg join's deg side.
-    # sum(tag) = count of src occurrences = the old count(*) per src.
+    # every node's out-degree, instead of a union+distinct for the
+    # nodes and a separate groupBy for the degrees.
     nd = (
         ed.select(
             F.explode(
@@ -321,48 +336,59 @@ def personalized_pagerank(
         .agg(F.sum("_o").cast("long").alias("deg"))
         .localCheckpoint()
     )
-    nodes = nd.select("node")
+    n_nodes = nd.count()
     if seeds is None:
-        base = nodes
-        n_seeds = nd.count()
+        base = nd
+        n_seeds = n_nodes
 
         def on_seeds(x: int) -> F.Column:
             return F.lit(x)
 
     else:
         seed_nodes = (
-            nodes.join(seeds.select(F.col(seeds.columns[0]).alias("node")), "node")
+            nd.select("node")
+            .join(seeds.select(F.col(seeds.columns[0]).alias("node")), "node")
             .select("node")
             .localCheckpoint()
         )
         n_seeds = seed_nodes.count()
-        base = nodes.join(
+        base = nd.join(
             seed_nodes.withColumn("_is_seed", F.lit(True)), "node", "left"
-        ).select("node", F.coalesce("_is_seed", F.lit(False)).alias("_is_seed"))
+        ).select(
+            "node", "deg", F.coalesce("_is_seed", F.lit(False)).alias("_is_seed")
+        )
 
         def on_seeds(x: int) -> F.Column:
             return F.when(F.col("_is_seed"), F.lit(x)).otherwise(F.lit(0))
 
     if n_seeds == 0:
-        return nodes.select(
+        return nd.select(
             "node",
             F.lit(0).cast("long").alias("rank_scaled"),
             F.lit(0.0).alias("pagerank"),
         )
-    deg = nd.filter(F.col("deg") > 0).select(F.col("node").alias("src"), "deg")
-    ed_deg = ed.join(deg, "src").localCheckpoint()
     if seeds is not None:
         base = base.localCheckpoint()
+    conf = edges.sparkSession._jsparkSession.sessionState().conf()
+    broadcast = n_nodes * _VECTOR_ROW_BYTES <= conf.autoBroadcastJoinThreshold()
     teleport = ((100 - damping_pct) * scale // 100) // n_seeds
 
-    ranks = base.select("node", on_seeds(scale // n_seeds).cast("long").alias("r"))
+    ranks = base.select(
+        "node", "deg", on_seeds(scale // n_seeds).cast("long").alias("r")
+    )
     for i in range(iters):
-        contrib = ed_deg.join(ranks, ed_deg["src"] == ranks["node"]).select(
-            F.col("dst").alias("node"), F.expr("r div deg").alias("c")
+        # Sinks (deg 0) send nothing — and r div 0 raises under ANSI.
+        vec = ranks.filter(F.col("deg") > 0).select(
+            F.col("node").alias("src"), F.expr("r div deg").alias("q")
         )
-        sums = contrib.groupBy("node").agg(F.sum("c").alias("s"))
+        sums = (
+            ed.join(F.broadcast(vec) if broadcast else vec, "src")
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.sum("q").alias("s"))
+        )
         ranks = base.join(sums, "node", "left").select(
             "node",
+            "deg",
             (
                 on_seeds(teleport)
                 + F.expr(

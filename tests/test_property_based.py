@@ -11,7 +11,7 @@ collisions, nulls, and boundary values no hand fixture covers.
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -421,29 +421,42 @@ _edges_pr = st.lists(
 )
 
 
-@given(edges=_edges_pr)
+@given(edges=_edges_pr, seeds=st.none() | st.sets(st.integers(0, 6), max_size=3))
+@example(edges=[(0, 1), (1, 2)], seeds=None)
+@example(edges=[(0, 1), (1, 2)], seeds={0})
 @settings(**SETTINGS)
-def test_pagerank_matches_integer_replay(spark, edges):
+def test_pagerank_matches_integer_replay(spark, edges, seeds):
     """Pure-python integer replay of the exact update rule — any
-    deviation in Spark's aggregation/join plan shows up bit-for-bit."""
+    deviation in Spark's aggregation/join plan shows up bit-for-bit.
+    ``seeds=None`` replays pagerank; a seed set replays
+    personalized_pagerank (teleport and initial mass on the seeds that
+    are graph nodes only). Node 2 of the examples has no out-edge."""
     from finance_data_pipeline_spark.extensions import graph
 
     df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.node: r.rank_scaled for r in graph.pagerank(df).collect()}
+    if seeds is None:
+        out = graph.pagerank(df)
+    else:
+        seed_df = spark.createDataFrame([(v,) for v in seeds], "node long")
+        out = graph.personalized_pagerank(df, seed_df)
+    got = {r.node: r.rank_scaled for r in out.collect()}
 
     scale, d = 1_000_000_000, 85
     nodes = sorted({n for e in edges for n in e})
-    n = len(nodes)
+    on = set(nodes) if seeds is None else set(nodes) & seeds
     deg = {}
     for s, _ in edges:
         deg[s] = deg.get(s, 0) + 1
-    teleport = ((100 - d) * scale // 100) // n
-    r = {v: scale // n for v in nodes}
+    if not on:
+        assert got == {v: 0 for v in nodes}
+        return
+    teleport = ((100 - d) * scale // 100) // len(on)
+    r = {v: scale // len(on) if v in on else 0 for v in nodes}
     for _ in range(5):
         s = {v: 0 for v in nodes}
         for a, b in edges:
             s[b] += r[a] // deg[a]
-        r = {v: teleport + (d * s[v]) // 100 for v in nodes}
+        r = {v: (teleport if v in on else 0) + (d * s[v]) // 100 for v in nodes}
     assert got == r
 
 

@@ -745,6 +745,44 @@ def test_pagerank_mass_bounds(spark):
     assert sum(r.rank_scaled for r in out) <= scale
 
 
+def test_pagerank_broadcast_gate_open_and_closed(spark):
+    """Both sides of the vertex-vector broadcast gate: under the session
+    default the per-round vector is broadcast (one BroadcastExchange per
+    round), with spark.sql.autoBroadcastJoinThreshold=-1 the same rounds
+    run the planner's shuffle join — and both return the same integer
+    ranks, for pagerank and personalized_pagerank."""
+    from finance_data_pipeline_spark import plans
+    from finance_data_pipeline_spark.extensions import graph
+
+    # Node 5 is a sink (no out-edge).
+    rows = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 3), (4, 5)]
+    edges = spark.createDataFrame(rows, "src long, dst long")
+    seeds = spark.createDataFrame([(1,), (4,)], "node long")
+    kernels = {
+        "pagerank": lambda: graph.pagerank(edges),
+        "personalized_pagerank": lambda: graph.personalized_pagerank(edges, seeds),
+    }
+
+    def run(build):
+        # Count on the built frame: once it has run, the adaptive plan
+        # repeats query-stage subtrees.
+        df = build()
+        return plans.broadcast_count(df), sorted(df.collect())
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    opened = {name: run(build) for name, build in kernels.items()}
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        closed = {name: run(build) for name, build in kernels.items()}
+    finally:
+        spark.conf.set(key, old)
+    for name in kernels:
+        assert opened[name][0] == 5, name
+        assert closed[name][0] == 0, name
+        assert opened[name][1] == closed[name][1], name
+
+
 # --- weighted sampling / feature hashing ----------------------------------
 
 
