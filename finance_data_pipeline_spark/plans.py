@@ -28,8 +28,16 @@ HAZARDS = ("BatchEvalPython", "CartesianProduct")
 
 
 def physical_plan(df: DataFrame) -> str:
-    """The executed (post-AQE-prepare) physical plan as text."""
-    return df._jdf.queryExecution().executedPlan().toString()
+    """The physical plan freshly planned from the frame's logical plan
+    under the session's current conf, so every counter reads the same
+    text whether or not the frame has run: once it has, its own
+    ``executedPlan`` is the final adaptive plan, which repeats
+    query-stage subtrees."""
+    spark = df.sparkSession
+    fresh = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, df._jdf.queryExecution().logical()
+    )
+    return fresh.queryExecution().executedPlan().toString()
 
 
 def count_op(df: DataFrame, op: str) -> int:
@@ -85,10 +93,7 @@ def codegen_span_count(df: DataFrame) -> int:
     old = spark.conf.get(key)
     spark.conf.set(key, "false")
     try:
-        jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-            spark._jsparkSession, df._jdf.queryExecution().logical()
-        )
-        plan = jdf.queryExecution().executedPlan().toString()
+        plan = physical_plan(df)
     finally:
         spark.conf.set(key, old)
     return len(set(re.findall(r"\*\((\d+)\)", plan)))

@@ -44,7 +44,13 @@ from finance_data_pipeline_spark.extensions.text import _LANG_MARKERS
 from finance_data_pipeline_spark.io import table
 from finance_data_pipeline_spark.operators import relational as rel
 from finance_data_pipeline_spark.session import tune_session
-from finance_data_pipeline_spark.streaming import daily_event_aggregate
+from finance_data_pipeline_spark.streaming import (
+    await_drained,
+    daily_event_aggregate,
+    drain_to_memory,
+    scratch_dir,
+    stage_batches,
+)
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -2536,28 +2542,16 @@ def q_streaming_tumbling_daily(spark, sf_dir):
     query (file source → watermark → tumbling window → memory sink,
     availableNow trigger) — stream/batch equivalence demonstrated
     against the identical SQL oracle. §2.10."""
-    import tempfile
-    import uuid
-
     from finance_data_pipeline_spark.streaming import (
         stream_events,
         streaming_daily_aggregate,
     )
 
-    staged = tempfile.mkdtemp(prefix="fdps_events_")
+    staged = scratch_dir("events_")
     table(spark, sf_dir, "events").write.mode("overwrite").parquet(staged)
-    name = f"fdps_stream_{uuid.uuid4().hex[:8]}"
-    q = (
-        streaming_daily_aggregate(stream_events(spark, staged))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fdps_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+    return drain_to_memory(
+        streaming_daily_aggregate(stream_events(spark, staged)), "complete"
     )
-    q.awaitTermination(300)
-    return spark.table(name)
 
 
 @query(
@@ -2572,12 +2566,9 @@ def q_streaming_enriched(spark, sf_dir):
     joins the static nation dimension per micro-batch, then aggregates
     per dimension attribute — the streaming analogue of every J1
     dimension join, checked against the identical batch SQL."""
-    import tempfile
-    import uuid
-
     from finance_data_pipeline_spark.streaming import enrich_stream, stream_events
 
-    staged = tempfile.mkdtemp(prefix="fdps_events_")
+    staged = scratch_dir("events_")
     table(spark, sf_dir, "events").write.mode("overwrite").parquet(staged)
     dim = table(spark, sf_dir, "nation")
     stream = stream_events(spark, staged).withColumn(
@@ -2588,17 +2579,7 @@ def q_streaming_enriched(spark, sf_dir):
         F.count("*").alias("n_events"),
         F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
     )
-    name = f"fdps_enrich_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fdps_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return drain_to_memory(agg, "complete")
 
 
 @query(
@@ -2615,12 +2596,9 @@ def q_streaming_interval_join(spark, sf_dir):
     same-user purchases within the next hour, both sides watermarked so
     join state stays bounded — checked against the identical batch
     interval-join SQL."""
-    import tempfile
-    import uuid
-
     from finance_data_pipeline_spark.streaming import interval_join_streams, stream_events
 
-    staged = tempfile.mkdtemp(prefix="fdps_events_")
+    staged = scratch_dir("events_")
     table(spark, sf_dir, "events").write.mode("overwrite").parquet(staged)
     clicks = (
         stream_events(spark, staged)
@@ -2645,17 +2623,7 @@ def q_streaming_interval_join(spark, sf_dir):
         F.col("l_ts").alias("click_ts"),
         F.col("r_ts").alias("purchase_ts"),
     )
-    name = f"fdps_ij_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fdps_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return drain_to_memory(joined, "append")
 
 
 @query(
@@ -2670,28 +2638,17 @@ def q_streaming_dedup(spark, sf_dir):
     ``SELECT DISTINCT`` over one copy — the oracle. State is one key per
     event_id within the watermark horizon, evicted as the watermark
     advances."""
-    import tempfile
-    import uuid
-
     from finance_data_pipeline_spark.streaming import pipeline as sp
 
-    staged = tempfile.mkdtemp(prefix="fdps_dup_events_")
+    staged = scratch_dir("dup_events_")
     src = table(spark, sf_dir, "events")
     src.write.mode("overwrite").parquet(staged)
     src.write.mode("append").parquet(staged)  # duplicate copy
-    name = f"fdps_dedup_{uuid.uuid4().hex[:8]}"
-    q = (
+    return drain_to_memory(
         sp.dedup_in_stream(sp.stream_events(spark, staged), watermark="365 days")
-        .select("event_id", "event_type", "value")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fdps_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+        .select("event_id", "event_type", "value"),
+        "append",
     )
-    q.awaitTermination(300)
-    return spark.table(name)
 
 
 @query(
@@ -2720,39 +2677,15 @@ def q_stateful_continuity(spark, sf_dir):
     maxFilesPerTrigger=1, so micro-batch boundaries are deterministic —
     which makes the stateful result fully SQL-expressible: per-(symbol,
     batch) first/last plus lag(last_close) across batches."""
-    import os
-    import tempfile
-    import uuid
-
     from finance_data_pipeline_spark.streaming import stateful_continuity
 
     s = _stocks(spark, sf_dir).select("symbol", "date", "open", "close")
-    staged = tempfile.mkdtemp(prefix="fdps_cont_")
-    s.filter(F.col("date") <= _date(CUTOFF)).coalesce(1).write.mode("overwrite").parquet(staged)
-    batch1 = {f for f in os.listdir(staged) if not f.startswith(("_", "."))}
-    s.filter(F.col("date") > _date(CUTOFF)).coalesce(1).write.mode("append").parquet(staged)
-    for f in os.listdir(staged):
-        if f.startswith(("_", ".")):
-            continue
-        t = 1_000_000_000 if f in batch1 else 2_000_000_000
-        os.utime(os.path.join(staged, f), (t, t))
-    sdf = (
-        spark.readStream.schema(s.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
+    sdf = stage_batches(
+        spark,
+        [s.filter(F.col("date") <= _date(CUTOFF)), s.filter(F.col("date") > _date(CUTOFF))],
+        "cont_",
     )
-    name = f"fdps_cont_{uuid.uuid4().hex[:8]}"
-    q = (
-        stateful_continuity(sdf)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fdps_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return drain_to_memory(stateful_continuity(sdf), "append")
 
 
 @query(
@@ -2778,10 +2711,6 @@ def q_streaming_upsert_stocks(spark, sf_dir):
     proves the incremental sink converges to the one-shot merge.
     Micro-batch order is pinned by file mtimes + maxFilesPerTrigger=1,
     same staging trick as stateful_continuity."""
-    import os
-    import tempfile
-    import uuid
-
     from finance_data_pipeline_spark.streaming import stream_ingest_stocks
 
     s = _stocks(spark, sf_dir)
@@ -2789,25 +2718,9 @@ def q_streaming_upsert_stocks(spark, sf_dir):
     batch2 = s.filter(F.col("date").between(_date(OVERLAP_LO), _date(OVERLAP_HI))).withColumn(
         "close", F.round(F.col("close") * 1.5, 6)
     )
-    staged = tempfile.mkdtemp(prefix=f"fdps_upsrc_{uuid.uuid4().hex[:8]}_")
-    batch1.coalesce(1).write.mode("overwrite").parquet(staged)
-    first = {f for f in os.listdir(staged) if not f.startswith(("_", "."))}
-    batch2.coalesce(1).write.mode("append").parquet(staged)
-    for f in os.listdir(staged):
-        if f.startswith(("_", ".")):
-            continue
-        t = 1_000_000_000 if f in first else 2_000_000_000
-        os.utime(os.path.join(staged, f), (t, t))
-    store = os.path.join(tempfile.mkdtemp(prefix="fdps_upstore_"), "store")
-    sdf = (
-        spark.readStream.schema(batch1.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-    )
-    q = stream_ingest_stocks(
-        sdf, store, tempfile.mkdtemp(prefix="fdps_ckpt_"), trigger_available_now=True
-    )
-    q.awaitTermination(300)
+    sdf = stage_batches(spark, [batch1, batch2], "upsrc_")
+    store = scratch_dir("upstore_")
+    await_drained(stream_ingest_stocks(sdf, store, scratch_dir("ckpt_")))
     return spark.read.parquet(store).select(
         "symbol", "date", "open", "high", "low", "close", "volume"
     )
@@ -4061,13 +3974,10 @@ def q_streaming_doc_quality(spark, sf_dir):
     the availableNow result equals the batch filter — the oracle. At
     scale this is the always-on crawl-intake filter; state is zero
     (pure projection+filter), so throughput is the batch plan's."""
-    import tempfile
-    import uuid
-
     from finance_data_pipeline_spark.streaming import pipeline as sp
 
     docs = table(spark, sf_dir, "documents")
-    staged = tempfile.mkdtemp(prefix="fdps_docs_stream_")
+    staged = scratch_dir("docs_stream_")
     docs.filter(F.col("doc_id") % 2 == 0).write.mode("overwrite").parquet(
         f"{staged}/b0"
     )
@@ -4076,17 +3986,7 @@ def q_streaming_doc_quality(spark, sf_dir):
     )
     stream = sp.stream_documents(spark, f"{staged}/b*")
     scored = text.quality_score(stream).filter(F.col("quality_score") >= 0.5)
-    name = f"fdps_docq_{uuid.uuid4().hex[:8]}"
-    q = (
-        scored.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fdps_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return drain_to_memory(scored, "append")
 
 
 @query(
@@ -4480,43 +4380,23 @@ def q_streaming_neardup_gate(spark, sf_dir):
     against batch 1's admissions). Result = the store read back.
     Oracle replays both admission rounds over the exact near-dup edge
     set. See streaming.neardup_gate."""
-    import os
-    import tempfile
-    import uuid
-
     from finance_data_pipeline_spark.extensions import dedup as dd
     from finance_data_pipeline_spark.streaming import neardup_gate
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    store = os.path.join(
-        tempfile.mkdtemp(prefix=f"fdps_ndstore_{uuid.uuid4().hex[:8]}_"), "store"
-    )
+    store = scratch_dir("ndstore_")
     seed = docs.filter(F.col("doc_id") % 2 == 0).localCheckpoint()
     seed.write.mode("overwrite").parquet(f"{store}/docs/batch=seed")
     dd.minhash_signatures(seed).write.mode("overwrite").parquet(
         f"{store}/sigs/batch=seed"
     )
 
-    staged = tempfile.mkdtemp(prefix="fdps_ndsrc_")
-    docs.filter(F.col("doc_id") % 4 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(staged)
-    first = {f for f in os.listdir(staged) if not f.startswith(("_", "."))}
-    docs.filter(F.col("doc_id") % 4 == 3).coalesce(1).write.mode("append").parquet(
-        staged
+    sdf = stage_batches(
+        spark,
+        [docs.filter(F.col("doc_id") % 4 == 1), docs.filter(F.col("doc_id") % 4 == 3)],
+        "ndsrc_",
     )
-    for f in os.listdir(staged):
-        if f.startswith(("_", ".")):
-            continue
-        t = 1_000_000_000 if f in first else 2_000_000_000
-        os.utime(os.path.join(staged, f), (t, t))
-    sdf = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-    )
-    q = neardup_gate(sdf, store, tempfile.mkdtemp(prefix="fdps_ckpt_"))
-    q.awaitTermination(300)
+    await_drained(neardup_gate(sdf, store, scratch_dir("ckpt_")))
     return spark.read.parquet(f"{store}/docs").select("doc_id")
 
 
@@ -5342,40 +5222,14 @@ def q_streaming_running_totals(spark, sf_dir):
     deterministic micro-batches (ts-split staged files, forced mtime
     order, maxFilesPerTrigger=1). Integer micro-unit accumulation
     makes the running float total exact and SQL-replayable."""
-    import os
-    import tempfile
-    import uuid
-
     from finance_data_pipeline_spark.streaming import pipeline as sp
 
     ev = table(spark, sf_dir, "events").select("event_type", "ts", "value")
-    staged = tempfile.mkdtemp(prefix="fdps_rt_")
     cut = F.lit("2024-01-15 00:00:00").cast("timestamp")
-    ev.filter(F.col("ts") <= cut).coalesce(1).write.mode("overwrite").parquet(staged)
-    batch1 = {f for f in os.listdir(staged) if not f.startswith(("_", "."))}
-    ev.filter(F.col("ts") > cut).coalesce(1).write.mode("append").parquet(staged)
-    for f in os.listdir(staged):
-        if f.startswith(("_", ".")):
-            continue
-        t = 1_000_000_000 if f in batch1 else 2_000_000_000
-        os.utime(os.path.join(staged, f), (t, t))
-    sdf = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
+    sdf = stage_batches(
+        spark, [ev.filter(F.col("ts") <= cut), ev.filter(F.col("ts") > cut)], "rt_"
     )
-    name = f"fdps_rt_{uuid.uuid4().hex[:8]}"
-    q = (
-        sp.stateful_running_totals(sdf)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fdps_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return drain_to_memory(sp.stateful_running_totals(sdf), "append")
 
 
 @query(
@@ -6050,13 +5904,10 @@ def q_streaming_session_windows(spark, sf_dir):
     end-of-stream are withheld; the SQL twin replays gaps-and-islands
     sessions WHERE session_end ≤ global max ts. Streaming semantics
     held to an exact hash check, not a rows-only pass."""
-    import tempfile
-    import uuid
-
     ev = table(spark, sf_dir, "events").select(
         "user_id", F.col("ts").cast("timestamp").alias("ts")
     )
-    staged = tempfile.mkdtemp(prefix="fdps_ssw_")
+    staged = scratch_dir("ssw_")
     ev.write.mode("overwrite").parquet(staged)
     sdf = spark.readStream.schema(ev.schema).parquet(staged)
     out = (
@@ -6070,17 +5921,7 @@ def q_streaming_session_windows(spark, sf_dir):
             "n_events",
         )
     )
-    name = f"fdps_ssw_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fdps_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return drain_to_memory(out, "append")
 
 
 @query(
@@ -6110,9 +5951,6 @@ def q_streaming_interval_join_left(spark, sf_dir):
     unmatched rows WHERE cts + 1h < least(max cts, max pts); clicks
     whose window is still open at end-of-stream stay withheld.
     Outer-join streaming state semantics held to an exact hash check."""
-    import tempfile
-    import uuid
-
     ev = table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", F.col("ts").cast("timestamp").alias("ts")
     )
@@ -6124,8 +5962,8 @@ def q_streaming_interval_join_left(spark, sf_dir):
         F.col("user_id").alias("puser"),
         F.col("ts").alias("pts"),
     )
-    d1 = tempfile.mkdtemp(prefix="fdps_sijl_c_")
-    d2 = tempfile.mkdtemp(prefix="fdps_sijl_p_")
+    d1 = scratch_dir("sijl_c_")
+    d2 = scratch_dir("sijl_p_")
     clicks.write.mode("overwrite").parquet(d1)
     purch.write.mode("overwrite").parquet(d2)
     sc = (
@@ -6145,44 +5983,18 @@ def q_streaming_interval_join_left(spark, sf_dir):
         & (F.col("pts") <= F.col("cts") + F.expr("INTERVAL 1 HOUR")),
         "left_outer",
     )
-    name = f"fdps_sijl_{uuid.uuid4().hex[:8]}"
-    q = (
-        j.select("event_id", "pid")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fdps_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return drain_to_memory(j.select("event_id", "pid"), "append")
 
 
 def _staged_event_stream(spark, sf_dir):
-    """Two deterministic micro-batches of events (ts-split staged
-    files, forced mtime order, 1 file per trigger) — shared staging
-    for the output-mode queries."""
-    import os
-    import tempfile
-
+    """Two deterministic micro-batches of events (≤ / > 2024-01-15) —
+    shared staging for the output-mode queries."""
     ev = table(spark, sf_dir, "events").select(
         "event_type", F.col("ts").cast("timestamp").alias("ts"), "value"
     )
     cut = F.lit("2024-01-15 00:00:00").cast("timestamp")
-    staged = tempfile.mkdtemp(prefix="fdps_omode_")
-    ev.filter(F.col("ts") <= cut).coalesce(1).write.mode("overwrite").parquet(staged)
-    batch1 = {f for f in os.listdir(staged) if not f.startswith(("_", "."))}
-    ev.filter(F.col("ts") > cut).coalesce(1).write.mode("append").parquet(staged)
-    for f in os.listdir(staged):
-        if f.startswith(("_", ".")):
-            continue
-        t = 1_000_000_000 if f in batch1 else 2_000_000_000
-        os.utime(os.path.join(staged, f), (t, t))
-    return (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
+    return stage_batches(
+        spark, [ev.filter(F.col("ts") <= cut), ev.filter(F.col("ts") > cut)], "omode_"
     )
 
 
@@ -6215,25 +6027,12 @@ def q_streaming_update_totals(spark, sf_dir):
     batch touched). The oracle replays exactly that: cumulative
     count/micro-value per key at each batch where the key has events.
     Integer micro-units keep the float total exact."""
-    import tempfile
-    import uuid
-
     sdf = _staged_event_stream(spark, sf_dir)
     agg = sdf.groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.sum(F.expr("cast(floor(value * 1000000 + 0.5) as bigint)")).alias("vmic"),
     )
-    name = f"fdps_upd_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fdps_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return drain_to_memory(agg, "update")
 
 
 @query(
@@ -6248,25 +6047,12 @@ def q_streaming_complete_totals(spark, sf_dir):
     the final micro-batch, so the stream result equals the batch
     group-by — the mode a live dashboard reads. Same staged two-batch
     source as the update-mode query."""
-    import tempfile
-    import uuid
-
     sdf = _staged_event_stream(spark, sf_dir)
     agg = sdf.groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.sum(F.expr("cast(floor(value * 1000000 + 0.5) as bigint)")).alias("vmic"),
     )
-    name = f"fdps_cmp_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fdps_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return drain_to_memory(agg, "complete")
 
 
 def _src_h60(expr: str) -> str:
@@ -6311,10 +6097,7 @@ def q_custom_source_ohlcv(spark, sf_dir):
         SyntheticOHLCVSource,
     )
 
-    try:
-        spark.dataSource.register(SyntheticOHLCVSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(SyntheticOHLCVSource)
     return (
         spark.read.format("synthetic_ohlcv")
         .option("symbols", "AAPL,GOOG,MSFT")
@@ -6793,18 +6576,13 @@ def q_custom_source_ohlcv_stream(spark, sf_dir):
     bit-for-bit, which is exactly what the shared oracle asserts.
     readBetweenOffsets replays committed ranges deterministically, so
     a crash re-delivers identical bars."""
-    import tempfile
-
     from finance_data_pipeline_spark.sources.ohlcv_source import (
         SyntheticOHLCVSource,
     )
 
-    try:
-        spark.dataSource.register(SyntheticOHLCVSource)
-    except Exception:
-        pass  # already registered in this session
-    ckpt = tempfile.mkdtemp(prefix="fdps_src_ckpt_")
-    out = tempfile.mkdtemp(prefix="fdps_src_out_") + "/bars"
+    spark.dataSource.register(SyntheticOHLCVSource)
+    ckpt = scratch_dir("src_ckpt_")
+    out = scratch_dir("src_out_")
     prev = -1
     for _ in range(6):  # 30/12 -> 3 draining runs; bounded regardless
         q = (
@@ -6819,7 +6597,7 @@ def q_custom_source_ohlcv_stream(spark, sf_dir):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        await_drained(q)
         n = spark.read.parquet(out).count()
         if n == prev:
             break
@@ -7148,8 +6926,6 @@ def q_streaming_decontaminated_intake(spark, sf_dir):
     must equal batch decontaminate() exactly; the oracle is the SAME
     SQL as decontaminated_corpus. Idempotent per-batch partition
     overwrite; no state store. See streaming.decontaminate_gate."""
-    import tempfile
-
     from finance_data_pipeline_spark.streaming import pipeline as sp
 
     docs = table(spark, sf_dir, "documents")
@@ -7161,19 +6937,16 @@ def q_streaming_decontaminated_intake(spark, sf_dir):
         .localCheckpoint()
     )
     train = docs.filter(nib != dedup.BENCH_NIBBLE)
-    staged = tempfile.mkdtemp(prefix="fdps_decon_stream_")
+    staged = scratch_dir("decon_stream_")
     train.filter(F.col("doc_id") % 2 == 0).write.mode("overwrite").parquet(
         f"{staged}/b0"
     )
     train.filter(F.col("doc_id") % 2 == 1).write.mode("overwrite").parquet(
         f"{staged}/b1"
     )
-    out = tempfile.mkdtemp(prefix="fdps_decon_out_") + "/admitted"
+    out = scratch_dir("decon_out_")
     stream = sp.stream_documents(spark, f"{staged}/b*")
-    q = sp.decontaminate_gate(
-        stream, bench_sh, out, tempfile.mkdtemp(prefix="fdps_ckpt_"), k=3
-    )
-    q.awaitTermination(300)
+    await_drained(sp.decontaminate_gate(stream, bench_sh, out, scratch_dir("ckpt_"), k=3))
     return spark.read.parquet(out).select("doc_id")
 
 
@@ -7402,10 +7175,6 @@ def q_streaming_asof_enrichment(spark, sf_dir):
     union + last-ignorenulls plan per micro-batch inside foreachBatch
     (stream-stateless: no watermark state, the static side re-resolves
     each batch); idempotent batch-partition overwrite."""
-    import tempfile
-
-    from finance_data_pipeline_spark.streaming import pipeline as sp
-
     ev = table(spark, sf_dir, "events").select(
         "event_id",
         F.concat(F.lit("H"), (F.col("user_id") % 10).cast("string")).alias("symbol"),
@@ -7413,14 +7182,14 @@ def q_streaming_asof_enrichment(spark, sf_dir):
         "value",
     )
     bars = _bars(spark, sf_dir).localCheckpoint()
-    staged = tempfile.mkdtemp(prefix="fdps_asof_stream_")
+    staged = scratch_dir("asof_stream_")
     ev.filter(F.col("event_id") % 2 == 0).write.mode("overwrite").parquet(
         f"{staged}/b0"
     )
     ev.filter(F.col("event_id") % 2 == 1).write.mode("overwrite").parquet(
         f"{staged}/b1"
     )
-    out = tempfile.mkdtemp(prefix="fdps_asof_out_") + "/priced"
+    out = scratch_dir("asof_out_")
 
     def price_batch(batch, batch_id):
         rel.asof_join(
@@ -7431,13 +7200,12 @@ def q_streaming_asof_enrichment(spark, sf_dir):
         ).parquet(f"{out}/batch={batch_id}")
 
     stream = spark.readStream.schema(ev.schema).parquet(f"{staged}/b*")
-    q = (
+    await_drained(
         stream.writeStream.foreachBatch(price_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fdps_ckpt_"))
+        .option("checkpointLocation", scratch_dir("ckpt_"))
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
     return spark.read.parquet(out).select(
         "event_id", "symbol", "ts", "value", "close_asof"
     )
@@ -7701,36 +7469,20 @@ def q_streaming_late_data_policy(spark, sf_dir):
     in (or an on-time window withheld) fails the hash. Completes the
     watermark surface: dedup (ST3) and session/interval eviction
     (ST4+/ST8+) were pinned; the aggregate-state drop was not."""
-    import os
-    import tempfile
-    import uuid
-
     ev = table(spark, sf_dir, "events").select(
         "event_type", F.col("ts").cast("timestamp").alias("ts"), "value"
     )
     d15 = F.lit("2024-01-15 00:00:00").cast("timestamp")
     d16 = F.lit("2024-01-16 00:00:00").cast("timestamp")
-    staged = tempfile.mkdtemp(prefix="fdps_late_")
     # NEWEST-FIRST staging (inverse of _staged_event_stream).
-    seen: list[set] = []
-    for i, part in enumerate(
+    sdf = stage_batches(
+        spark,
         [
             ev.filter(F.col("ts") >= d16),
             ev.filter((F.col("ts") >= d15) & (F.col("ts") < d16)),
             ev.filter(F.col("ts") < d15),
-        ]
-    ):
-        part.coalesce(1).write.mode("append" if i else "overwrite").parquet(staged)
-        names = {f for f in os.listdir(staged) if not f.startswith(("_", "."))}
-        seen.append(names - set().union(*seen) if seen else names)
-    for i, names in enumerate(seen):
-        for f in names:
-            t = 1_000_000_000 * (i + 1)
-            os.utime(os.path.join(staged, f), (t, t))
-    sdf = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
+        ],
+        "late_",
     )
     agg = (
         sdf.withWatermark("ts", "2 days")
@@ -7742,17 +7494,7 @@ def q_streaming_late_data_policy(spark, sf_dir):
             ).alias("vmic"),
         )
     )
-    name = f"fdps_late_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fdps_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name).select(
+    return drain_to_memory(agg, "append").select(
         F.col("w.start").cast("date").alias("day"), "event_type", "n", "vmic"
     )
 
@@ -8785,28 +8527,17 @@ def q_streaming_dedup_watermark(spark, sf_dir):
     overlap-refetch pattern) under availableNow, so the result equals
     SELECT DISTINCT over one copy — the oracle. See
     pipeline.dedup_within_watermark."""
-    import tempfile
-    import uuid
-
     from finance_data_pipeline_spark.streaming import pipeline as sp
 
-    staged = tempfile.mkdtemp(prefix="fdps_dupw_events_")
+    staged = scratch_dir("dupw_events_")
     src = table(spark, sf_dir, "events")
     src.write.mode("overwrite").parquet(staged)
     src.write.mode("append").parquet(staged)
-    name = f"fdps_dedupw_{uuid.uuid4().hex[:8]}"
-    q = (
+    return drain_to_memory(
         sp.dedup_within_watermark(sp.stream_events(spark, staged), watermark="365 days")
-        .select("event_id", "event_type", "value")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fdps_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+        .select("event_id", "event_type", "value"),
+        "append",
     )
-    q.awaitTermination(300)
-    return spark.table(name)
 
 
 # --- round-4 session 3, batch D: skyline / reconcile / PPR / eff tokens --
@@ -9294,12 +9025,10 @@ def q_time_travel_read(spark, sf_dir):
     directories are immutable, the manifest swap is the only commit
     point, rollback is a pointer move. See io.write_snapshot /
     read_snapshot / rollback_snapshot."""
-    import tempfile
-
     from finance_data_pipeline_spark import io as fio
 
     s = _stocks(spark, sf_dir).select("symbol", "date", "close")
-    store = tempfile.mkdtemp(prefix="fdps_tt_")
+    store = scratch_dir("tt_")
     v1 = fio.write_snapshot(s.filter(F.col("date") <= _date(CUTOFF)), store)
     ingest_batch2 = s.filter(F.col("date") > _date(CUTOFF))
     merged = fio.read_snapshot(spark, store).unionByName(ingest_batch2)
@@ -9336,12 +9065,10 @@ def q_store_change_feed(spark, sf_dir):
     downstream sync consumes when upstream can't emit one. One
     full-outer join on the key, null-safe struct equality. See
     io.write_snapshot + rel.snapshot_diff."""
-    import tempfile
-
     from finance_data_pipeline_spark import io as fio
 
     s = _stocks(spark, sf_dir).select("symbol", "date", "close")
-    store = tempfile.mkdtemp(prefix="fdps_cdf_")
+    store = scratch_dir("cdf_")
     fio.write_snapshot(s.filter(F.col("date") <= _date(CUTOFF)), store)
     v2 = s.withColumn(
         "close",
@@ -9454,36 +9181,17 @@ def q_streaming_versioned_commits(spark, sf_dir):
     the oracle — while v=1 remains pinned as the first batch's freeze
     (asserted in tests/test_round4c_ops.py). See
     pipeline.versioned_commit_sink."""
-    import os
-    import tempfile
-
     from finance_data_pipeline_spark import io as fio
     from finance_data_pipeline_spark.streaming import pipeline as sp
 
     e = table(spark, sf_dir, "events")
-    staged = tempfile.mkdtemp(prefix="fdps_vc_events_")
-    e.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(staged)
-    first = {f for f in os.listdir(staged) if not f.startswith(("_", "."))}
-    e.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(
-        staged
+    stream = stage_batches(
+        spark,
+        [e.filter(F.col("event_id") % 2 == 0), e.filter(F.col("event_id") % 2 == 1)],
+        "vc_events_",
     )
-    for f in os.listdir(staged):
-        if f.startswith(("_", ".")):
-            continue
-        t = 1_000_000_000 if f in first else 2_000_000_000
-        os.utime(os.path.join(staged, f), (t, t))
-    store = tempfile.mkdtemp(prefix="fdps_vc_store_")
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-    )
-    q = sp.versioned_commit_sink(
-        stream, store, tempfile.mkdtemp(prefix="fdps_ckpt_")
-    )
-    q.awaitTermination(300)
+    store = scratch_dir("vc_store_")
+    await_drained(sp.versioned_commit_sink(stream, store, scratch_dir("ckpt_")))
     return fio.read_snapshot(spark, store).select("event_id", "event_type", "value")
 
 
@@ -10323,12 +10031,9 @@ def q_streaming_ohlc_bars(spark, sf_dir):
     availableNow. Checked against the IDENTICAL BARS-CTE oracle as the
     batch fixture — stream/batch equivalence for the arg_min/arg_max
     aggregate family, which no other streaming row exercises."""
-    import tempfile
-    import uuid
-
     from finance_data_pipeline_spark.streaming import stream_events
 
-    staged = tempfile.mkdtemp(prefix="fdps_events_")
+    staged = scratch_dir("events_")
     table(spark, sf_dir, "events").write.mode("overwrite").parquet(staged)
     bars = (
         stream_events(spark, staged)
@@ -10347,17 +10052,7 @@ def q_streaming_ohlc_bars(spark, sf_dir):
             (F.count("*") * 1000).alias("volume"),
         )
     )
-    name = f"fdps_bars_{uuid.uuid4().hex[:8]}"
-    q = (
-        bars.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fdps_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return drain_to_memory(bars, "complete")
 
 
 # =========================================================================
@@ -10855,12 +10550,9 @@ def q_streaming_topk_hitters(spark, sf_dir):
     (allowed only in complete mode — the one output mode that rewrites
     the full result per trigger). Deterministic total via the DECIMAL
     sum; ties broken by user_id."""
-    import tempfile
-    import uuid
-
     from finance_data_pipeline_spark.streaming import stream_events
 
-    staged = tempfile.mkdtemp(prefix="fdps_events_")
+    staged = scratch_dir("events_")
     table(spark, sf_dir, "events").write.mode("overwrite").parquet(staged)
     agg = (
         stream_events(spark, staged)
@@ -10872,17 +10564,7 @@ def q_streaming_topk_hitters(spark, sf_dir):
         .orderBy(F.desc("total_value"), "user_id")
         .limit(20)
     )
-    name = f"fdps_topk_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fdps_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return drain_to_memory(agg, "complete")
 
 
 # =========================================================================

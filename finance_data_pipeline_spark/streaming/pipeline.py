@@ -16,8 +16,17 @@ path uses — stream/batch equivalence is tested (tests/test_streaming.py).
 
 from __future__ import annotations
 
+import atexit
+import functools
+import os
+import shutil
+import tempfile
+import uuid
+
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from finance_data_pipeline_spark.ingest import upsert
 
@@ -29,6 +38,86 @@ EVENTS_SCHEMA = (
 DOCUMENTS_SCHEMA = (
     "doc_id bigint, text string, lang string, source string, n_chars bigint"
 )
+
+
+# Upper bound on one availableNow drain; a query still running after it
+# is stopped and raises instead of handing back a partial result.
+DRAIN_TIMEOUT_S = 300
+
+
+@functools.cache
+def _scratch_root() -> str:
+    root = tempfile.mkdtemp(prefix="fdps_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh directory under this process's one ``fdps_`` scratch
+    root. The root is made on first use and removed when the
+    interpreter exits, so a result that reads scratch files back lazily
+    (``spark.read.parquet(store)``) stays valid for the process's
+    lifetime and nothing outlives it."""
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root())
+
+
+def stage_batches(
+    spark: SparkSession, frames: list[DataFrame], prefix: str
+) -> DataFrame:
+    """A file stream whose micro-batches are ``frames``, in order.
+
+    Each frame is staged as one file, file ``i`` gets mtime
+    10⁹·(i+1) s, and the source reads one file per trigger — so batch
+    boundaries, and any state carried across them, are deterministic
+    and replayable in SQL. All frames share ``frames[0]``'s schema."""
+    staged = scratch_dir(prefix)
+    seen: set[str] = set()
+    for i, frame in enumerate(frames):
+        frame.coalesce(1).write.mode("append").parquet(staged)
+        new = {f for f in os.listdir(staged) if not f.startswith(("_", "."))} - seen
+        t = 1_000_000_000 * (i + 1)
+        for f in new:
+            os.utime(os.path.join(staged, f), (t, t))
+        seen |= new
+    return (
+        spark.readStream.schema(frames[0].schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(staged)
+    )
+
+
+def await_drained(q: StreamingQuery) -> None:
+    """Wait up to DRAIN_TIMEOUT_S for an availableNow query to finish.
+    A query still running then is stopped and raises TimeoutError; a
+    query that failed re-raises its StreamingQueryException."""
+    if not q.awaitTermination(DRAIN_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {q.name or q.id} still running after "
+            f"{DRAIN_TIMEOUT_S} s"
+        )
+
+
+def drain_to_memory(df: DataFrame, output_mode: str) -> DataFrame:
+    """Run a streaming frame to completion (availableNow) into a
+    uniquely named memory sink and return the sink's table. The
+    checkpoint lives only for the run: the table is held in memory."""
+    name = f"fdps_{uuid.uuid4().hex[:8]}"
+    ckpt = scratch_dir("ckpt_")
+    try:
+        await_drained(
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        # Must not mask the drain's own error; the root's exit-time
+        # removal takes anything left behind.
+        shutil.rmtree(ckpt, ignore_errors=True)
+    return df.sparkSession.table(name)
 
 
 def stream_events(spark: SparkSession, path_glob: str) -> DataFrame:
@@ -189,12 +278,7 @@ def interval_join_streams(
     )
 
 
-def stream_ingest_stocks(
-    bars: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    trigger_available_now: bool = True,
-):
+def stream_ingest_stocks(bars: DataFrame, store_path: str, checkpoint: str):
     """foreachBatch upsert sink: each micro-batch merges into the
     partitioned store with the same J5 merge the batch path uses.
 
@@ -214,7 +298,12 @@ def stream_ingest_stocks(
             existing = spark.read.parquet(store_path).join(
                 batch.select("symbol").distinct(), "symbol", "left_semi"
             )
-        except Exception:
+        except AnalysisException as e:
+            # Only a missing or empty store reads as empty: treating any
+            # other read failure that way would overwrite the batch's
+            # symbol partitions with the batch alone.
+            if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+                raise
             existing = None
         merged = batch if existing is None else upsert(existing, batch)
         prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
@@ -225,10 +314,12 @@ def stream_ingest_stocks(
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
             batch.unpersist()
 
-    writer = bars.writeStream.foreachBatch(merge_batch).option("checkpointLocation", checkpoint)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (
+        bars.writeStream.foreachBatch(merge_batch)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def neardup_gate(
@@ -236,7 +327,6 @@ def neardup_gate(
     store_path: str,
     checkpoint: str,
     threshold: float = 0.7,
-    trigger_available_now: bool = True,
 ):
     """Streaming ingestion near-dup gate (ST2×X2): each micro-batch of
     documents is MinHash-signed, LSH-banded against the store's
@@ -265,8 +355,6 @@ def neardup_gate(
     MISSING index reads as the empty store — any other read error
     propagates rather than silently admitting the batch unverified.
     """
-    from pyspark.errors import AnalysisException
-
     from finance_data_pipeline_spark.extensions import dedup as dd
 
     def gate(batch: DataFrame, batch_id: int) -> None:
@@ -309,12 +397,12 @@ def neardup_gate(
             accepted.select(F.col("doc_id").alias("_id")), "_id", "left_semi"
         ).write.mode("overwrite").parquet(f"{store_path}/sigs/batch={batch_id}")
 
-    writer = docs.writeStream.foreachBatch(gate).option(
-        "checkpointLocation", checkpoint
+    return (
+        docs.writeStream.foreachBatch(gate)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def decontaminate_gate(
@@ -323,7 +411,6 @@ def decontaminate_gate(
     out_path: str,
     checkpoint: str,
     k: int = 3,
-    trigger_available_now: bool = True,
 ):
     """Streaming decontamination intake gate (ST2×X6) — the third
     intake gate next to the quality filter (stateless) and the
@@ -356,12 +443,12 @@ def decontaminate_gate(
             f"{out_path}/batch={batch_id}"
         )
 
-    writer = docs.writeStream.foreachBatch(gate).option(
-        "checkpointLocation", checkpoint
+    return (
+        docs.writeStream.foreachBatch(gate)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stateful_running_totals(events: DataFrame) -> DataFrame:
@@ -516,8 +603,6 @@ def versioned_commit_sink(stream: DataFrame, store: str, checkpoint: str):
     idempotent; here batch ordering under availableNow is
     deterministic, which is what the oracle checks end-to-end.
     """
-    import os
-
     from finance_data_pipeline_spark import io as fio
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:

@@ -21,3 +21,13 @@ def test_engine_package_has_no_assert_statements():
         if isinstance(node, ast.Assert)
     ]
     assert not found, f"assert statements vanish under python -O: {found}"
+
+
+def test_registry_queries_use_the_streaming_harness():
+    """Scratch directories and stream drains go through
+    streaming.scratch_dir / await_drained / drain_to_memory, which clean
+    up and raise on timeout; a hand-written copy in a query does
+    neither."""
+    source = (PACKAGE / "registry.py").read_text()
+    for banned in ("tempfile.mkdtemp(", "awaitTermination("):
+        assert banned not in source, f"registry.py calls {banned}"

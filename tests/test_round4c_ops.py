@@ -743,8 +743,6 @@ def test_capm_regression_recovers_known_line(spark):
 def test_streaming_versioned_commits_pin_batch_prefixes(spark, tmp_path):
     """Each micro-batch commits one store version; v1 stays pinned as
     the first batch's freeze while current sees everything."""
-    import os
-
     from finance_data_pipeline_spark import io as fio
     from finance_data_pipeline_spark.streaming import pipeline as sp
 
@@ -752,21 +750,11 @@ def test_streaming_versioned_commits_pin_batch_prefixes(spark, tmp_path):
         [(i, f"t{i % 2}", float(i)) for i in range(10)],
         "event_id long, event_type string, value double",
     )
-    staged = str(tmp_path / "staged")
-    e.filter(F.col("event_id") < 6).coalesce(1).write.mode("overwrite").parquet(staged)
-    first = {f for f in os.listdir(staged) if not f.startswith(("_", "."))}
-    e.filter(F.col("event_id") >= 6).coalesce(1).write.mode("append").parquet(staged)
-    for f in os.listdir(staged):
-        if f.startswith(("_", ".")):
-            continue
-        t = 1_000_000_000 if f in first else 2_000_000_000
-        os.utime(os.path.join(staged, f), (t, t))
-    store = str(tmp_path / "store")
-    stream = (
-        spark.readStream.schema(e.schema).option("maxFilesPerTrigger", "1").parquet(staged)
+    stream = sp.stage_batches(
+        spark, [e.filter(F.col("event_id") < 6), e.filter(F.col("event_id") >= 6)], "staged_"
     )
-    q = sp.versioned_commit_sink(stream, store, str(tmp_path / "ckpt"))
-    q.awaitTermination(300)
+    store = str(tmp_path / "store")
+    sp.await_drained(sp.versioned_commit_sink(stream, store, str(tmp_path / "ckpt")))
     assert fio.read_snapshot(spark, store, version=1).count() == 6
     assert fio.read_snapshot(spark, store).count() == 10
 

@@ -70,6 +70,21 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS b_customer")
 
 
+def test_plan_counters_match_before_and_after_the_frame_runs(spark):
+    """The counters read a freshly planned plan: after an adaptive run
+    the frame's own executedPlan repeats query-stage subtrees, which
+    would double every count."""
+    o = table(spark, SF_DIR, "orders").select("o_orderkey", "o_custkey")
+    c = table(spark, SF_DIR, "customer").select(
+        F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
+    )
+    df = o.join(c, "o_custkey").groupBy("c_mktsegment").count()
+    fresh = plans.audit(df)
+    df.collect()
+    assert plans.audit(df) == fresh
+    assert fresh["shuffles"] >= 1 and fresh["broadcasts"] >= 1, fresh
+
+
 def test_broadcast_dim_join_shuffles_only_fact_aggregate(spark):
     """revenue_by_nation's plan: every dim join is a BroadcastExchange;
     the only hash shuffle is the final aggregate."""

@@ -6,35 +6,32 @@ foreachBatch upsert sink must converge to the batch merge.
 
 from __future__ import annotations
 
-import uuid
+import os
+import subprocess
+import sys
+import time
 
 import pytest
+from pyspark.errors import AnalysisException, StreamingQueryException
 from pyspark.sql import functions as F
 
 from finance_data_pipeline_spark import fixtures
 from finance_data_pipeline_spark.io import table
 from finance_data_pipeline_spark.streaming import (
+    await_drained,
     daily_event_aggregate,
     dedup_in_stream,
+    drain_to_memory,
+    scratch_dir,
+    stage_batches,
     stream_events,
     stream_ingest_stocks,
     streaming_daily_aggregate,
 )
+from finance_data_pipeline_spark.streaming import pipeline as sp
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _run_stream_to_memory(sdf, name: str, checkpoint: str, output_mode: str):
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return q
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_stream_batch_equivalence_daily_aggregate(spark, tmp_path):
@@ -46,11 +43,11 @@ def test_stream_batch_equivalence_daily_aggregate(spark, tmp_path):
     table(spark, SF_DIR, "events").write.parquet(src)
     stream = stream_events(spark, src)
     assert stream.isStreaming
-    name = f"agg_{uuid.uuid4().hex[:8]}"
-    _run_stream_to_memory(
-        streaming_daily_aggregate(stream), name, str(tmp_path / "ckpt"), "complete"
+    got = (
+        drain_to_memory(streaming_daily_aggregate(stream), "complete")
+        .orderBy("day", "event_type")
+        .collect()
     )
-    got = spark.table(name).orderBy("day", "event_type").collect()
 
     batch = spark.read.parquet(src)
     want = daily_event_aggregate(batch).orderBy("day", "event_type").collect()
@@ -230,8 +227,6 @@ def test_neardup_gate_admits_novel_blocks_dups_and_indexes_admissions(spark, tmp
     (admitted). Batch 2: a dup of BATCH 1's admission (blocked — proves
     admissions are indexed) + one novel doc (admitted). The sig index
     grows by exactly the admitted docs."""
-    import os
-
     from finance_data_pipeline_spark.extensions import dedup as dd
     from finance_data_pipeline_spark.streaming import neardup_gate
 
@@ -255,20 +250,8 @@ def test_neardup_gate_admits_novel_blocks_dups_and_indexes_admissions(spark, tmp
     seed.write.parquet(f"{store}/docs/batch=seed")
     dd.minhash_signatures(seed).write.parquet(f"{store}/sigs/batch=seed")
 
-    src = str(tmp_path / "src")
-    b1.coalesce(1).write.parquet(src)
-    first = set(os.listdir(src))
-    b2.coalesce(1).write.mode("append").parquet(src)
-    for f in os.listdir(src):
-        if f.startswith(("_", ".")):
-            continue
-        t = 1_000_000_000 if f in first else 2_000_000_000
-        os.utime(os.path.join(src, f), (t, t))
-
-    sdf = (
-        spark.readStream.schema(b1.schema).option("maxFilesPerTrigger", "1").parquet(src)
-    )
-    neardup_gate(sdf, store, str(tmp_path / "ckpt")).awaitTermination(300)
+    sdf = stage_batches(spark, [b1, b2], "src_")
+    await_drained(neardup_gate(sdf, store, str(tmp_path / "ckpt")))
 
     rows = spark.read.parquet(f"{store}/docs").collect()
     got = {r.doc_id for r in rows}
@@ -335,16 +318,12 @@ def test_neardup_gate_survives_checkpoint_restart(spark, tmp_path):
     assert indexed == {0, 12, 22}
 
 
-def test_stateful_continuity_under_rocksdb_state_store(spark, tmp_path):
+def test_stateful_continuity_under_rocksdb_state_store(spark):
     """The custom stateful operator must run unchanged on the RocksDB
     state-store provider — the disk-backed backend a 100 TB streaming
     state actually uses (HDFS-backed in-memory maps don't survive
     billions of keys). Same two-batch staging as the HDFS-backed
     test path; assert identical results."""
-    import os
-
-    from pyspark.sql import functions as F
-
     from finance_data_pipeline_spark.streaming import stateful_running_totals
 
     b1 = spark.createDataFrame(
@@ -355,39 +334,16 @@ def test_stateful_continuity_under_rocksdb_state_store(spark, tmp_path):
         [("click", "2024-01-02 00:00:00", 3.5)],
         "event_type string, ts string, value double",
     ).withColumn("ts", F.col("ts").cast("timestamp"))
-    staged = str(tmp_path / "src")
-    b1.coalesce(1).write.mode("overwrite").parquet(staged)
-    first = set(os.listdir(staged))
-    b2.coalesce(1).write.mode("append").parquet(staged)
-    for f in os.listdir(staged):
-        if f.startswith(("_", ".")):
-            continue
-        t = 1_000_000_000 if f in first else 2_000_000_000
-        os.utime(os.path.join(staged, f), (t, t))
+    sdf = stage_batches(spark, [b1, b2], "src_")
 
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     try:
-        sdf = (
-            spark.readStream.schema(b1.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staged)
-        )
-        q = (
-            stateful_running_totals(sdf)
-            .writeStream.format("memory")
-            .queryName("rocks_rt")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
         rows = {
             (r.event_type, r.cum_rows): r.cum_value_micros
-            for r in spark.table("rocks_rt").collect()
+            for r in drain_to_memory(stateful_running_totals(sdf), "append").collect()
         }
         assert rows == {
             ("click", 1): 1_500_000,
@@ -398,17 +354,11 @@ def test_stateful_continuity_under_rocksdb_state_store(spark, tmp_path):
         spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
-def test_tws_running_totals_matches_legacy_api_when_protobuf_present(
-    spark, tmp_path
-):
+def test_tws_running_totals_matches_legacy_api_when_protobuf_present(spark):
     """transformWithStateInPandas twin of stateful_running_totals —
     runnable only where google.protobuf exists (the TWS driver worker's
     state-server protocol); skipped in containers without it."""
     pytest.importorskip("google.protobuf")
-    import os
-
-    from pyspark.sql import functions as F
-
     from finance_data_pipeline_spark.streaming.pipeline import tws_running_totals
 
     b1 = spark.createDataFrame(
@@ -419,39 +369,98 @@ def test_tws_running_totals_matches_legacy_api_when_protobuf_present(
         [("click", "2024-01-02 00:00:00", 3.5)],
         "event_type string, ts string, value double",
     ).withColumn("ts", F.col("ts").cast("timestamp"))
-    staged = str(tmp_path / "src")
-    b1.coalesce(1).write.mode("overwrite").parquet(staged)
-    first = set(os.listdir(staged))
-    b2.coalesce(1).write.mode("append").parquet(staged)
-    for f in os.listdir(staged):
-        if f.startswith(("_", ".")):
-            continue
-        t = 1_000_000_000 if f in first else 2_000_000_000
-        os.utime(os.path.join(staged, f), (t, t))
+    sdf = stage_batches(spark, [b1, b2], "src_")
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     try:
-        sdf = (
-            spark.readStream.schema(b1.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staged)
-        )
-        q = (
-            tws_running_totals(sdf)
-            .writeStream.format("memory")
-            .queryName("tws_rt")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
         rows = {
             (r.event_type, r.cum_rows): r.cum_value_micros
-            for r in spark.table("tws_rt").collect()
+            for r in drain_to_memory(tws_running_totals(sdf), "append").collect()
         }
         assert rows == {("click", 1): 1_500_000, ("click", 2): 5_000_000}
     finally:
         spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+
+
+def _one_bar(spark):
+    return spark.createDataFrame(
+        [("X", "2024-01-02", 1.0, 1.0, 1.0, 1.0, 100)],
+        "symbol string, date string, open double, high double, low double, "
+        "close double, volume long",
+    ).withColumn("date", F.col("date").cast("date"))
+
+
+def test_foreachbatch_upsert_fails_on_unreadable_store_and_keeps_it(spark, tmp_path):
+    """Only a missing or empty store reads as empty. A store the sink
+    cannot read must fail the batch: read as empty, the batch would
+    dynamically overwrite the symbol=X partition and lose its file."""
+    corrupt = tmp_path / "store" / "symbol=X" / "part-00000.parquet"
+    corrupt.parent.mkdir(parents=True)
+    corrupt.write_bytes(b"not a parquet file")
+    sdf = stage_batches(spark, [_one_bar(spark)], "src_")
+    with pytest.raises(StreamingQueryException):
+        await_drained(
+            stream_ingest_stocks(sdf, str(tmp_path / "store"), str(tmp_path / "ckpt"))
+        )
+    assert corrupt.read_bytes() == b"not a parquet file"
+
+
+def test_foreachbatch_upsert_reads_empty_store_dir_as_empty(spark, tmp_path):
+    store = tmp_path / "store"
+    store.mkdir()
+    with pytest.raises(AnalysisException) as err:
+        spark.read.parquet(str(store))
+    assert err.value.getCondition() == "UNABLE_TO_INFER_SCHEMA"
+    sdf = stage_batches(spark, [_one_bar(spark)], "src_")
+    await_drained(stream_ingest_stocks(sdf, str(store), str(tmp_path / "ckpt")))
+    assert spark.read.parquet(str(store)).count() == 1
+
+
+def test_await_drained_stops_and_raises_when_stream_outlives_timeout(
+    spark, monkeypatch
+):
+    """A stream still running at the drain bound is stopped and raises
+    instead of handing back a partial result."""
+    monkeypatch.setattr(sp, "DRAIN_TIMEOUT_S", 1)
+    q = (
+        stage_batches(spark, [spark.range(1)], "src_")
+        .writeStream.foreachBatch(lambda batch, batch_id: time.sleep(3))
+        .option("checkpointLocation", scratch_dir("ckpt_"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    with pytest.raises(TimeoutError):
+        await_drained(q)
+    assert not q.isActive
+    assert spark.streams.active == []
+
+
+def test_drain_to_memory_removes_its_checkpoint(spark):
+    sdf = stage_batches(spark, [spark.range(3)], "src_")
+    before = set(os.listdir(sp._scratch_root()))
+    out = drain_to_memory(sdf, "append")
+    assert sorted(r.id for r in out.collect()) == [0, 1, 2]
+    assert set(os.listdir(sp._scratch_root())) == before
+
+
+def test_scratch_root_is_created_lazily_and_removed_at_exit(tmp_path):
+    """Importing the registry makes no scratch root; the first
+    scratch_dir does, and the interpreter removes it on exit."""
+    code = (
+        "import os, tempfile\n"
+        "import finance_data_pipeline_spark.registry\n"
+        "from finance_data_pipeline_spark.streaming import scratch_dir\n"
+        "assert os.listdir(tempfile.gettempdir()) == []\n"
+        "print(os.path.dirname(scratch_dir('x_')))\n"
+    )
+    env = {**os.environ, "TMPDIR": str(tmp_path)}
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, env=env,
+        capture_output=True, text=True, check=True, timeout=120,
+    )
+    root = out.stdout.strip()
+    assert os.path.dirname(root) == str(tmp_path), out.stdout
+    assert os.path.basename(root).startswith("fdps_")
+    assert os.listdir(tmp_path) == []

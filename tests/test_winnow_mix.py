@@ -344,9 +344,7 @@ def test_key_skew_profile_share_sums_below_one(spark, docs):
 # --- stateful running totals ---------------------------------------------
 
 
-def test_stateful_running_totals_accumulates_across_batches(spark, tmp_path):
-    import os
-
+def test_stateful_running_totals_accumulates_across_batches(spark):
     from finance_data_pipeline_spark.streaming import pipeline as sp
 
     b1 = spark.createDataFrame(
@@ -358,31 +356,8 @@ def test_stateful_running_totals_accumulates_across_batches(spark, tmp_path):
         [("click", "2024-01-02 00:00:00", 4.0)],
         "event_type string, ts string, value double",
     ).withColumn("ts", F.col("ts").cast("timestamp"))
-    staged = str(tmp_path / "src")
-    b1.coalesce(1).write.mode("overwrite").parquet(staged)
-    first = set(os.listdir(staged))
-    b2.coalesce(1).write.mode("append").parquet(staged)
-    for f in os.listdir(staged):
-        if f.startswith(("_", ".")):
-            continue
-        t = 1_000_000_000 if f in first else 2_000_000_000
-        os.utime(os.path.join(staged, f), (t, t))
-    sdf = (
-        spark.readStream.schema(b1.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-    )
-    q = (
-        sp.stateful_running_totals(sdf)
-        .writeStream.format("memory")
-        .queryName("rt_test")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.table("rt_test").collect()
+    sdf = sp.stage_batches(spark, [b1, b2], "src_")
+    rows = sp.drain_to_memory(sp.stateful_running_totals(sdf), "append").collect()
     click = sorted(
         [r for r in rows if r.event_type == "click"], key=lambda r: r.cum_rows
     )
