@@ -146,6 +146,13 @@ def fixed_point_sum(col: Column | str, scale: int) -> Column:
     return F.sum(F.round(c * scale).cast("long")) / float(scale)
 
 
+def decimal_sum(col: Column) -> Column:
+    """Exact, summation-order-independent sum of a double column:
+    ``CAST(sum(CAST(x AS DECIMAL(38,18))) AS DOUBLE)``, the form the
+    DuckDB oracles spell, so both engines round once, at the end."""
+    return F.sum(col.cast("decimal(38,18)")).cast("double")
+
+
 def micro_avg(s: Column, n: Column, scale: int = 1_000_000) -> Column:
     """Exact fixed-point mean of a micro-unit BIGINT sum: integer
     half-away-from-zero rounding of ``s / n`` (still in micro-units),

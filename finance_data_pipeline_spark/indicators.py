@@ -82,9 +82,24 @@ def diff(col: str = "close", time_col: str = "date") -> Column:
     return F.col(col) - F.lag(col, 1).over(sym_window(time_col))
 
 
+def simple_return(col: str = "close", time_col: str = "date") -> Column:
+    """The per-symbol simple return ``close / lag(close) - 1``
+    (pandas ``pct_change()``, analyze_visualize.py:133); the first row
+    per symbol is NULL. Every return-based query builds on this one
+    expression, and its oracles replay it as ``close / lag(close)
+    OVER (PARTITION BY symbol ORDER BY <time_col>) - 1``.
+    ``daily_return`` is this value ×100, and exact sums of returns go
+    through ``DECIMAL(38,18)`` (``functions.decimal_sum``).
+
+    ``functions.pct_change_expr`` computes ``(new - old) / old``, which
+    is the same number in exact arithmetic but not the same IEEE double,
+    so returns must not be built on it."""
+    return F.col(col) / F.lag(col, 1).over(sym_window(time_col)) - 1
+
+
 def daily_return(col: str = "close", time_col: str = "date") -> Column:
     """W9 — pct_change()*100 (analyze_visualize.py:133)."""
-    return (F.col(col) / F.lag(col, 1).over(sym_window(time_col)) - 1) * 100
+    return simple_return(col, time_col) * 100
 
 
 def rsi(n: int = 14, col: str = "close", time_col: str = "date") -> Column:
@@ -456,7 +471,7 @@ def with_obv(df: DataFrame, time_col: str = "bar_ts") -> DataFrame:
     """On-balance volume: cumulative signed volume (sign of the close
     delta). Integer end-to-end — volume is LongType — so the running
     sum is exact under any engine's summation."""
-    delta = F.col("close") - F.lag("close").over(sym_window(time_col))
+    delta = diff(time_col=time_col)
     signed = (
         F.when(delta > 0, F.col("volume"))
         .when(delta < 0, -F.col("volume"))

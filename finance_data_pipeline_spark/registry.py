@@ -81,6 +81,20 @@ BARS = fixtures.BARS_HOURLY_CTE
 _W_DATE = "PARTITION BY symbol ORDER BY date"
 _W_BAR = "PARTITION BY symbol ORDER BY bar_ts"
 
+# indicators.simple_return in DuckDB over daily and hourly bars, and
+# the two CTEs the return-based oracles share: the per-symbol daily
+# returns (first row per symbol NULL) and the equal-weight market
+# return (_market_return).
+_RET_SQL = f"close / lag(close) OVER ({_W_DATE}) - 1"
+_RET_BAR_SQL = f"close / lag(close) OVER ({_W_BAR}) - 1"
+RETURNS_CTE = f"""r AS (SELECT symbol, date,
+        {_RET_SQL} AS ret
+      FROM stocks)"""
+MARKET_RETURN_CTE = """mkt AS (SELECT date,
+          CAST(sum(CAST(ret AS DECIMAL(38,18))) AS DOUBLE)
+            / count(ret) AS mret
+        FROM r WHERE ret IS NOT NULL GROUP BY date)"""
+
 
 def _stocks(spark, sf_dir):
     return fixtures.stocks(spark, sf_dir)
@@ -88,6 +102,23 @@ def _stocks(spark, sf_dir):
 
 def _bars(spark, sf_dir):
     return fixtures.bars_hourly(spark, sf_dir)
+
+
+def _daily_returns(spark, sf_dir):
+    """(symbol, date, ret) over the daily bars, the first row per symbol
+    (NULL return) dropped; the Spark twin of RETURNS_CTE."""
+    return _stocks(spark, sf_dir).select(
+        "symbol", "date", indicators.simple_return().alias("ret")
+    ).filter(F.col("ret").isNotNull())
+
+
+def _market_return(r):
+    """(date, mret): the equal-weight market return, the DECIMAL-exact
+    mean of each date's non-NULL returns in ``r``; the Spark twin of
+    MARKET_RETURN_CTE."""
+    return r.groupBy("date").agg(
+        (fx.decimal_sum(F.col("ret")) / F.count("ret")).alias("mret")
+    )
 
 
 def _date(s: str):
@@ -352,7 +383,7 @@ def q_rsi(spark, sf_dir):
     "daily_return",
     f"""WITH {STOCKS}
 SELECT symbol, date, close,
-  round((close / lag(close) OVER ({_W_DATE}) - 1) * 100, 6) + 0.0 AS daily_return
+  round(({_RET_SQL}) * 100, 6) + 0.0 AS daily_return
 FROM stocks""",
 )
 def q_daily_return(spark, sf_dir):
@@ -371,7 +402,7 @@ def q_daily_return(spark, sf_dir):
     "volatility_30",
     f"""WITH {BARS},
 r AS (SELECT symbol, bar_ts,
-        (close / lag(close) OVER ({_W_BAR}) - 1) * 100 AS ret FROM bars)
+        ({_RET_BAR_SQL}) * 100 AS ret FROM bars)
 SELECT symbol, bar_ts,
   CASE WHEN count(ret) OVER w30 >= 30
        THEN round(stddev_samp(ret) OVER w30, 4) END AS volatility_30
@@ -592,7 +623,7 @@ def q_price_anomalies(spark, sf_dir):
     "pairwise_correlation",
     f"""WITH {BARS},
 ret AS (SELECT symbol, bar_ts,
-          close / lag(close) OVER ({_W_BAR}) - 1 AS ret
+          {_RET_BAR_SQL} AS ret
         FROM bars)
 SELECT a.symbol AS symbol_a, b.symbol AS symbol_b,
        round(corr(a.ret, b.ret), 4) + 0.0 AS corr_ab,
@@ -612,9 +643,8 @@ def q_pairwise_correlation(spark, sf_dir):
     dashboard-sized K the equi-join on bar_ts is one shuffle and the
     corr aggregate is map-side partial."""
     b = _bars(spark, sf_dir)
-    w = Window.partitionBy("symbol").orderBy("bar_ts")
     ret = b.select(
-        "symbol", "bar_ts", (F.col("close") / F.lag("close").over(w) - 1).alias("ret")
+        "symbol", "bar_ts", indicators.simple_return(time_col="bar_ts").alias("ret")
     ).filter(F.col("ret").isNotNull())
     a, c = ret.alias("a"), ret.alias("b")
     return (
@@ -641,7 +671,7 @@ def q_pairwise_correlation(spark, sf_dir):
     "perf_summary",
     f"""WITH {STOCKS},
 r AS (SELECT symbol, date, close, high, low, volume,
-        (close / lag(close) OVER ({_W_DATE}) - 1) * 100 AS ret
+        ({_RET_SQL}) * 100 AS ret
       FROM stocks)
 SELECT symbol,
   count(*) AS trading_days,
@@ -2315,7 +2345,7 @@ def q_ml_feature_matrix(spark, sf_dir):
         "symbol",
         "bar_ts",
         "close",
-        (F.round(F.col("close") / F.lag("close", 1).over(w) - 1, 6) + F.lit(0.0)).alias("ret_1"),
+        (F.round(indicators.simple_return(time_col="bar_ts"), 6) + F.lit(0.0)).alias("ret_1"),
         (F.round(F.col("close") / F.lag("close", 24).over(w) - 1, 6) + F.lit(0.0)).alias("ret_24"),
         F.round(F.avg("close").over(w.rowsBetween(-23, 0)), 6).alias("sma_24"),
         (F.round(F.lead("close", 24).over(w) / F.col("close") - 1, 6) + F.lit(0.0)).alias("fwd_ret_24"),
@@ -8011,9 +8041,7 @@ def q_label_prop_communities(spark, sf_dir):
 @query(
     "rolling_beta_30",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
+{RETURNS_CTE},
 mkt AS (SELECT date,
           CAST(sum(CAST(ret AS DECIMAL(38,12))) AS DOUBLE) / count(ret) AS mret
         FROM r WHERE ret IS NOT NULL GROUP BY date),
@@ -8038,24 +8066,14 @@ def q_rolling_beta(spark, sf_dir):
     rules); the windowed co-moments are self-rounded to 4 dp on both
     sides like rolling_corr_30. Zero-variance windows (first row per
     symbol) → NULL via nullif/try_divide in both engines."""
-    s = _stocks(spark, sf_dir)
-    wl = Window.partitionBy("symbol").orderBy("date")
-    r = s.select(
-        "symbol",
-        "date",
-        (F.col("close") / F.lag("close").over(wl) - 1).alias("ret"),
+    r = _daily_returns(spark, sf_dir)
+    mkt = r.groupBy("date").agg(
+        (
+            F.sum(F.col("ret").cast("decimal(38,12)")).cast("double")
+            / F.count("ret")
+        ).alias("mret")
     )
-    mkt = (
-        r.filter(F.col("ret").isNotNull())
-        .groupBy("date")
-        .agg(
-            (
-                F.sum(F.col("ret").cast("decimal(38,12)")).cast("double")
-                / F.count("ret")
-            ).alias("mret")
-        )
-    )
-    j = r.join(F.broadcast(mkt), "date").filter(F.col("ret").isNotNull())
+    j = r.join(F.broadcast(mkt), "date")
     w30 = Window.partitionBy("symbol").orderBy("date").rowsBetween(-29, 0)
     return j.select(
         "symbol",
@@ -8138,7 +8156,7 @@ def q_leakage_safe_split(spark, sf_dir):
 
 _EWMA_ORACLE = f"""WITH RECURSIVE {STOCKS},
 r0 AS (SELECT symbol, date,
-         close / lag(close) OVER ({_W_DATE}) - 1 AS ret
+         {_RET_SQL} AS ret
        FROM stocks),
 base AS (SELECT symbol, date, ret,
            row_number() OVER ({_W_DATE}) AS rn
@@ -8926,9 +8944,7 @@ def q_global_token_rank(spark, sf_dir):
 @query(
     "robust_return_anomalies",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
+{RETURNS_CTE},
 rr AS (SELECT symbol, date, ret FROM r WHERE ret IS NOT NULL),
 med AS (SELECT symbol, quantile_cont(ret, 0.5) AS med FROM rr GROUP BY symbol),
 ad AS (SELECT rr.symbol, rr.date, rr.ret, med.med,
@@ -8951,13 +8967,7 @@ def q_robust_return_anomalies(spark, sf_dir):
     flat) nullifies the score and flags nothing in both engines.
     Two grouped aggregates + two joins back; 4 dp rounding absorbs
     the engines' interpolation-order ulp."""
-    s = _stocks(spark, sf_dir)
-    wl = Window.partitionBy("symbol").orderBy("date")
-    rr = s.select(
-        "symbol",
-        "date",
-        (F.col("close") / F.lag("close").over(wl) - 1).alias("ret"),
-    ).filter(F.col("ret").isNotNull())
+    rr = _daily_returns(spark, sf_dir)
     med = rr.groupBy("symbol").agg(F.percentile("ret", F.lit(0.5)).alias("med"))
     ad = rr.join(med, "symbol").select(
         "symbol", "date", "ret", F.abs(F.col("ret") - F.col("med")).alias("adev")
@@ -9085,12 +9095,8 @@ def q_store_change_feed(spark, sf_dir):
 @query(
     "capm_regression",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
-mkt AS (SELECT date,
-          CAST(sum(CAST(ret AS DECIMAL(38,18))) AS DOUBLE) / count(ret) AS mret
-        FROM r WHERE ret IS NOT NULL GROUP BY date),
+{RETURNS_CTE},
+{MARKET_RETURN_CTE},
 j AS (SELECT symbol, ret AS y, mret AS x
       FROM r JOIN mkt ON r.date = mkt.date WHERE ret IS NOT NULL),
 s AS (SELECT symbol,
@@ -9122,36 +9128,17 @@ def q_capm_regression(spark, sf_dir):
     map-side-combined aggregate per symbol after the broadcast
     market join; zero-variance symbols nullify to NULL in both
     engines."""
-    s = _stocks(spark, sf_dir)
-    wl = Window.partitionBy("symbol").orderBy("date")
-    r = s.select(
-        "symbol",
-        "date",
-        (F.col("close") / F.lag("close").over(wl) - 1).alias("ret"),
+    r = _daily_returns(spark, sf_dir)
+    j = r.join(F.broadcast(_market_return(r)), "date").select(
+        "symbol", F.col("ret").alias("y"), F.col("mret").alias("x")
     )
-    mkt = (
-        r.filter(F.col("ret").isNotNull())
-        .groupBy("date")
-        .agg(
-            (
-                F.sum(F.col("ret").cast("decimal(38,18)")).cast("double")
-                / F.count("ret")
-            ).alias("mret")
-        )
-    )
-    j = (
-        r.join(F.broadcast(mkt), "date")
-        .filter(F.col("ret").isNotNull())
-        .select("symbol", F.col("ret").alias("y"), F.col("mret").alias("x"))
-    )
-    dec = lambda c: F.sum(c.cast("decimal(38,18)")).cast("double")
     stats = j.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        dec(F.col("x")).alias("sx"),
-        dec(F.col("y")).alias("sy"),
-        dec(F.col("x") * F.col("y")).alias("sxy"),
-        dec(F.col("x") * F.col("x")).alias("sxx"),
-        dec(F.col("y") * F.col("y")).alias("syy"),
+        fx.decimal_sum(F.col("x")).alias("sx"),
+        fx.decimal_sum(F.col("y")).alias("sy"),
+        fx.decimal_sum(F.col("x") * F.col("y")).alias("sxy"),
+        fx.decimal_sum(F.col("x") * F.col("x")).alias("sxx"),
+        fx.decimal_sum(F.col("y") * F.col("y")).alias("syy"),
     )
     num = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
     denx = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
@@ -9322,18 +9309,17 @@ def q_token_drivers_ols(spark, sf_dir):
             F.size(F.array_distinct(toks)) * F.lit(1.0) / F.greatest(n_tok, F.lit(1))
         ).alias("x2"),
     )
-    dec = lambda c: F.sum(c.cast("decimal(38,18)")).cast("double")
     s = feat.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        dec(F.col("x1")).alias("s1"),
-        dec(F.col("x2")).alias("s2"),
-        dec(F.col("y")).alias("sy"),
-        dec(F.col("x1") * F.col("x1")).alias("s11"),
-        dec(F.col("x1") * F.col("x2")).alias("s12"),
-        dec(F.col("x2") * F.col("x2")).alias("s22"),
-        dec(F.col("x1") * F.col("y")).alias("s1y"),
-        dec(F.col("x2") * F.col("y")).alias("s2y"),
-        dec(F.col("y") * F.col("y")).alias("syy"),
+        fx.decimal_sum(F.col("x1")).alias("s1"),
+        fx.decimal_sum(F.col("x2")).alias("s2"),
+        fx.decimal_sum(F.col("y")).alias("sy"),
+        fx.decimal_sum(F.col("x1") * F.col("x1")).alias("s11"),
+        fx.decimal_sum(F.col("x1") * F.col("x2")).alias("s12"),
+        fx.decimal_sum(F.col("x2") * F.col("x2")).alias("s22"),
+        fx.decimal_sum(F.col("x1") * F.col("y")).alias("s1y"),
+        fx.decimal_sum(F.col("x2") * F.col("y")).alias("s2y"),
+        fx.decimal_sum(F.col("y") * F.col("y")).alias("syy"),
     )
     c = lambda name: F.col(name)
     det = (
@@ -9533,7 +9519,7 @@ def q_holt_linear(spark, sf_dir):
     "sma_crossover_backtest",
     f"""WITH {STOCKS},
 b AS (SELECT symbol, date, close,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret,
+        {_RET_SQL} AS ret,
         avg(close) OVER ({_W_DATE} ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
           AS sma_f,
         avg(close) OVER ({_W_DATE} ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)
@@ -9579,7 +9565,7 @@ def q_sma_crossover_backtest(spark, sf_dir):
     b = s.select(
         "symbol",
         "date",
-        (F.col("close") / F.lag("close").over(wl) - 1).alias("ret"),
+        indicators.simple_return().alias("ret"),
         F.avg("close").over(wf).alias("sma_f"),
         F.avg("close").over(ws_).alias("sma_s"),
         F.row_number().over(wl).alias("rn"),
@@ -10173,7 +10159,7 @@ def q_volume_profile(spark, sf_dir):
     f"""WITH {BARS},
 r AS (SELECT symbol, bar_ts,
         CAST(hour(bar_ts) AS BIGINT) AS hod,
-        close / lag(close) OVER ({_W_BAR}) - 1.0 AS ret
+        {_RET_BAR_SQL} AS ret
       FROM bars)
 SELECT symbol, hod,
   CAST(count(ret) AS BIGINT) AS n_bars,
@@ -10193,7 +10179,7 @@ def q_hourly_seasonality(spark, sf_dir):
     r = b.select(
         "symbol",
         F.hour("bar_ts").cast("long").alias("hod"),
-        (F.col("close") / F.lag("close").over(Window.partitionBy("symbol").orderBy("bar_ts")) - 1.0).alias("ret"),
+        indicators.simple_return(time_col="bar_ts").alias("ret"),
     ).filter(F.col("ret").isNotNull())
     return r.groupBy("symbol", "hod").agg(
         F.count("ret").cast("long").alias("n_bars"),
@@ -10235,7 +10221,7 @@ def q_variance_ratio(spark, sf_dir):
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     r = b.select(
         "symbol",
-        F.log(F.col("close") / F.lag("close").over(w)).alias("r1"),
+        F.log(F.col("close") / F.lag("close", 1).over(w)).alias("r1"),
         F.log(F.col("close") / F.lag("close", 2).over(w)).alias("r2"),
     )
     s = r.groupBy("symbol").agg(
@@ -10928,7 +10914,7 @@ def q_part_name_matching(spark, sf_dir):
     "liquidity_measures",
     f"""WITH {BARS},
 r AS (SELECT symbol, bar_ts, close, volume,
-        close / lag(close) OVER ({_W_BAR}) - 1.0 AS ret,
+        {_RET_BAR_SQL} AS ret,
         close - lag(close) OVER ({_W_BAR}) AS dp
       FROM bars),
 r2 AS (SELECT symbol, ret, close, volume, dp,
@@ -10967,8 +10953,8 @@ def q_liquidity_measures(spark, sf_dir):
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     r = b.select(
         "symbol", "bar_ts", "close", "volume",
-        (F.col("close") / F.lag("close").over(w) - 1.0).alias("ret"),
-        (F.col("close") - F.lag("close").over(w)).alias("dp"),
+        indicators.simple_return(time_col="bar_ts").alias("ret"),
+        indicators.diff(time_col="bar_ts").alias("dp"),
     ).withColumn("dpn", F.lead("dp").over(w))
     both = F.col("dp").isNotNull() & F.col("dpn").isNotNull()
     s = r.groupBy("symbol").agg(
@@ -10993,7 +10979,7 @@ def q_liquidity_measures(spark, sf_dir):
     "fama_macbeth",
     f"""WITH {BARS},
 r AS (SELECT symbol, bar_ts,
-        close / lag(close) OVER ({_W_BAR}) - 1.0 AS ret,
+        {_RET_BAR_SQL} AS ret,
         CAST(volume AS DOUBLE) / 1000 AS x
       FROM bars),
 cs AS (SELECT bar_ts,
@@ -11028,10 +11014,9 @@ def q_fama_macbeth(spark, sf_dir):
     a float factor there leaves a ±1-ulp decimal-rounding residual
     whose reciprocal amplifies into engine-divergent garbage slopes."""
     b = _bars(spark, sf_dir)
-    w = Window.partitionBy("symbol").orderBy("bar_ts")
     r = b.select(
         "bar_ts",
-        (F.col("close") / F.lag("close").over(w) - 1.0).alias("ret"),
+        indicators.simple_return(time_col="bar_ts").alias("ret"),
         (F.col("volume").cast("double") / 1000).alias("x"),
     ).filter(F.col("ret").isNotNull())
     cs = (
@@ -11264,7 +11249,7 @@ def q_range_volatility(spark, sf_dir):
     "risk_adjusted_perf",
     f"""WITH {STOCKS},
 r AS (SELECT symbol, date, close,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret,
+        {_RET_SQL} AS ret,
         max(close) OVER ({_W_DATE} ROWS UNBOUNDED PRECEDING) AS peak
       FROM stocks),
 s AS (SELECT symbol,
@@ -11309,19 +11294,18 @@ def q_risk_adjusted_perf(spark, sf_dir):
     peak = F.max("close").over(wp)
     r = s.select(
         "symbol",
-        (F.col("close") / F.lag("close").over(wl) - 1).alias("ret"),
+        indicators.simple_return().alias("ret"),
         ((F.col("close") - peak) / peak).alias("dd"),
     )
-    dec = lambda c: F.sum(c.cast("decimal(38,18)")).cast("double")
     st = r.groupBy("symbol").agg(
         F.count("ret").cast("long").alias("n_rets"),
-        dec(F.col("ret")).alias("sr"),
-        dec(F.col("ret") * F.col("ret")).alias("srr"),
-        dec(
+        fx.decimal_sum(F.col("ret")).alias("sr"),
+        fx.decimal_sum(F.col("ret") * F.col("ret")).alias("srr"),
+        fx.decimal_sum(
             F.when(F.col("ret") < 0, F.col("ret") * F.col("ret")).otherwise(0.0)
         ).alias("sdd"),
         F.min("dd").alias("mdd"),
-        dec(F.col("dd") * F.col("dd")).alias("sdd2"),
+        fx.decimal_sum(F.col("dd") * F.col("dd")).alias("sdd2"),
         F.count("*").cast("long").alias("n_days"),
     )
     n_rets = F.nullif(F.col("n_rets"), F.lit(0))
@@ -11347,9 +11331,7 @@ def q_risk_adjusted_perf(spark, sf_dir):
 @query(
     "acf_ljung_box",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
+{RETURNS_CTE},
 mu AS (SELECT symbol,
          CAST(count(ret) AS BIGINT) AS n,
          CAST(sum(CAST(ret AS DECIMAL(38,18))) AS DOUBLE)
@@ -11391,12 +11373,11 @@ def q_acf_ljung_box(spark, sf_dir):
     wl = Window.partitionBy("symbol").orderBy("date")
     r = s.select(
         "symbol", "date",
-        (F.col("close") / F.lag("close").over(wl) - 1).alias("ret"),
+        indicators.simple_return().alias("ret"),
     )
-    dec = lambda c: F.sum(c.cast("decimal(38,18)")).cast("double")
     mu = r.groupBy("symbol").agg(
         F.count("ret").cast("long").alias("n"),
-        (dec(F.col("ret")) / F.nullif(F.count("ret"), F.lit(0))).alias("m"),
+        (fx.decimal_sum(F.col("ret")) / F.nullif(F.count("ret"), F.lit(0))).alias("m"),
     )
     d = (
         r.join(F.broadcast(mu), "symbol")
@@ -11411,10 +11392,10 @@ def q_acf_ljung_box(spark, sf_dir):
     )
     st = l.groupBy("symbol").agg(
         F.any_value(F.col("n")).alias("n"),
-        dec(F.col("x") * F.col("x")).alias("c0"),
-        dec(F.col("x") * F.col("x1")).alias("c1"),
-        dec(F.col("x") * F.col("x2")).alias("c2"),
-        dec(F.col("x") * F.col("x3")).alias("c3"),
+        fx.decimal_sum(F.col("x") * F.col("x")).alias("c0"),
+        fx.decimal_sum(F.col("x") * F.col("x1")).alias("c1"),
+        fx.decimal_sum(F.col("x") * F.col("x2")).alias("c2"),
+        fx.decimal_sum(F.col("x") * F.col("x3")).alias("c3"),
     )
     c0 = F.nullif(F.col("c0"), F.lit(0.0))
     rho = lambda k: F.col(f"c{k}") / c0
@@ -11434,9 +11415,7 @@ def q_acf_ljung_box(spark, sf_dir):
 @query(
     "cusum_break",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
+{RETURNS_CTE},
 mu AS (SELECT symbol,
          CAST(count(ret) AS BIGINT) AS n,
          CAST(sum(CAST(ret AS DECIMAL(38,18))) AS DOUBLE)
@@ -11477,15 +11456,17 @@ def q_cusum_break(spark, sf_dir):
     wl = Window.partitionBy("symbol").orderBy("date")
     r = s.select(
         "symbol", "date",
-        (F.col("close") / F.lag("close").over(wl) - 1).alias("ret"),
+        indicators.simple_return().alias("ret"),
     )
-    dec = lambda c: F.sum(c.cast("decimal(38,18)")).cast("double")
     nn = F.nullif(F.count("ret"), F.lit(0))
     mu = r.groupBy("symbol").agg(
         F.count("ret").cast("long").alias("n"),
-        (dec(F.col("ret")) / nn).alias("m"),
+        (fx.decimal_sum(F.col("ret")) / nn).alias("m"),
         F.sqrt(
-            (dec(F.col("ret") * F.col("ret")) - dec(F.col("ret")) * dec(F.col("ret")) / nn)
+            (
+                fx.decimal_sum(F.col("ret") * F.col("ret"))
+                - fx.decimal_sum(F.col("ret")) * fx.decimal_sum(F.col("ret")) / nn
+            )
             / F.nullif(F.count("ret") - 1, F.lit(0))
         ).alias("sd"),
     )
@@ -11618,13 +11599,12 @@ def q_engle_granger_coint(spark, sf_dir):
     y = s.filter(F.col("symbol") == "S1").select("date", F.col("close").alias("y"))
     x = s.filter(F.col("symbol") == "S2").select("date", F.col("close").alias("x"))
     px = y.join(x, "date")
-    dec = lambda c: F.sum(c.cast("decimal(38,18)")).cast("double")
     ols = px.agg(
         F.count("*").cast("long").alias("n"),
-        dec(F.col("x")).alias("sx"),
-        dec(F.col("y")).alias("sy"),
-        dec(F.col("x") * F.col("y")).alias("sxy"),
-        dec(F.col("x") * F.col("x")).alias("sxx"),
+        fx.decimal_sum(F.col("x")).alias("sx"),
+        fx.decimal_sum(F.col("y")).alias("sy"),
+        fx.decimal_sum(F.col("x") * F.col("y")).alias("sxy"),
+        fx.decimal_sum(F.col("x") * F.col("x")).alias("sxx"),
     )
     beta = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / F.nullif(
         F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"), F.lit(0.0)
@@ -11645,9 +11625,9 @@ def q_engle_granger_coint(spark, sf_dir):
     ).filter(F.col("dy").isNotNull())
     adf = d.groupBy("n", "beta", "alpha").agg(
         F.count("dy").cast("long").alias("m"),
-        dec(F.col("ylag") * F.col("dy")).alias("axy"),
-        dec(F.col("ylag") * F.col("ylag")).alias("axx"),
-        dec(F.col("dy") * F.col("dy")).alias("ayy"),
+        fx.decimal_sum(F.col("ylag") * F.col("dy")).alias("axy"),
+        fx.decimal_sum(F.col("ylag") * F.col("ylag")).alias("axx"),
+        fx.decimal_sum(F.col("dy") * F.col("dy")).alias("ayy"),
     )
     gamma = F.col("axy") / F.nullif(F.col("axx"), F.lit(0.0))
     se = F.sqrt(
@@ -11767,11 +11747,10 @@ def q_hour_seasonal_anomalies(spark, sf_dir):
     base = e.select(
         "event_id", "event_type", F.hour("ts").cast("long").alias("hr"), "value"
     )
-    dec = lambda c: F.sum(c.cast("decimal(38,18)")).cast("double")
     st = base.groupBy("event_type", "hr").agg(
         F.count("*").cast("long").alias("n"),
-        dec(F.col("value")).alias("sv"),
-        dec(F.col("value") * F.col("value")).alias("svv"),
+        fx.decimal_sum(F.col("value")).alias("sv"),
+        fx.decimal_sum(F.col("value") * F.col("value")).alias("svv"),
     )
     mu = F.col("sv") / F.col("n")
     sd = F.sqrt(
@@ -11955,13 +11934,12 @@ def q_l_moments_by_type(spark, sf_dir):
     w1 = r1
     w2 = r1 * r2
     w3 = r1 * r2 * r3
-    dec = lambda c: F.sum(c.cast("decimal(38,18)")).cast("double")
     s = o.groupBy("event_type").agg(
         F.any_value(F.col("n")).alias("n"),
-        dec(F.col("value")).alias("b0s"),
-        dec(F.col("value") * w1).alias("b1s"),
-        dec(F.col("value") * w2).alias("b2s"),
-        dec(F.col("value") * w3).alias("b3s"),
+        fx.decimal_sum(F.col("value")).alias("b0s"),
+        fx.decimal_sum(F.col("value") * w1).alias("b1s"),
+        fx.decimal_sum(F.col("value") * w2).alias("b2s"),
+        fx.decimal_sum(F.col("value") * w3).alias("b3s"),
     )
     b0 = F.col("b0s") / F.col("n")
     b1 = F.col("b1s") / F.col("n")
@@ -12116,7 +12094,7 @@ def q_mmr_diverse_topk(spark, sf_dir):
     "spearman_corr_pairs",
     f"""WITH {BARS},
 ret AS (SELECT symbol, bar_ts,
-          close / lag(close) OVER ({_W_BAR}) - 1 AS ret
+          {_RET_BAR_SQL} AS ret
         FROM bars),
 rk AS (SELECT symbol, bar_ts,
          rank() OVER (PARTITION BY symbol ORDER BY ret)
@@ -12138,10 +12116,9 @@ def q_spearman_corr_pairs(spark, sf_dir):
     self-join. corr() is the windowed-double policy: self-rounded at
     4 dp on both sides."""
     b = _bars(spark, sf_dir)
-    w = Window.partitionBy("symbol").orderBy("bar_ts")
     ret = b.select(
         "symbol", "bar_ts",
-        (F.col("close") / F.lag("close").over(w) - 1).alias("ret"),
+        indicators.simple_return(time_col="bar_ts").alias("ret"),
     ).filter(F.col("ret").isNotNull())
     rk = ret.select(
         "symbol", "bar_ts",
@@ -12178,9 +12155,7 @@ def q_spearman_corr_pairs(spark, sf_dir):
 @query(
     "var_cvar_95",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
+{RETURNS_CTE},
 v AS (SELECT symbol,
         CAST(count(ret) AS BIGINT) AS n_rets,
         quantile_cont(ret, 0.05) AS var95
@@ -12204,11 +12179,7 @@ def q_var_cvar_95(spark, sf_dir):
     DECIMAL-exact mean of the returns at or below it. One window pass,
     one percentile aggregate, one broadcast-sized join back: the tail
     mean never re-sorts the raw rows."""
-    s = _stocks(spark, sf_dir)
-    w = Window.partitionBy("symbol").orderBy("date")
-    r = s.select(
-        "symbol", (F.col("close") / F.lag("close").over(w) - 1).alias("ret")
-    ).filter(F.col("ret").isNotNull())
+    r = _daily_returns(spark, sf_dir)
     v = r.groupBy("symbol").agg(
         F.count("ret").cast("long").alias("n_rets"),
         F.percentile("ret", F.lit(0.05)).alias("var95"),
@@ -12218,7 +12189,7 @@ def q_var_cvar_95(spark, sf_dir):
         .filter(F.col("ret") <= F.col("var95"))
         .groupBy("symbol")
         .agg(
-            F.sum(F.col("ret").cast("decimal(38,18)")).cast("double").alias("s_tail"),
+            fx.decimal_sum(F.col("ret")).alias("s_tail"),
             F.count("*").cast("long").alias("n_tail"),
         )
     )
@@ -12236,9 +12207,7 @@ def q_var_cvar_95(spark, sf_dir):
 @query(
     "return_moments",
     f"""WITH {STOCKS},
-r AS (SELECT symbol,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
+{RETURNS_CTE},
 s AS (SELECT symbol,
         CAST(count(ret) AS BIGINT) AS n,
         CAST(sum(CAST(ret AS DECIMAL(38,18))) AS DOUBLE) AS s1,
@@ -12272,19 +12241,14 @@ def q_return_moments(spark, sf_dir):
     central-moment algebra is spelled out once and evaluated as the
     identical IEEE-double expression tree in both. One window pass,
     ONE map-side-combined aggregate per symbol."""
-    s = _stocks(spark, sf_dir)
-    w = Window.partitionBy("symbol").orderBy("date")
-    r = s.select(
-        "symbol", (F.col("close") / F.lag("close").over(w) - 1).alias("ret")
-    ).filter(F.col("ret").isNotNull())
+    r = _daily_returns(spark, sf_dir)
     ret = F.col("ret")
-    dec = lambda c: F.sum(c.cast("decimal(38,18)")).cast("double")
     st = r.groupBy("symbol").agg(
         F.count("ret").cast("long").alias("n"),
-        dec(ret).alias("s1"),
-        dec(ret * ret).alias("s2"),
-        dec(ret * ret * ret).alias("s3"),
-        dec(ret * ret * ret * ret).alias("s4"),
+        fx.decimal_sum(ret).alias("s1"),
+        fx.decimal_sum(ret * ret).alias("s2"),
+        fx.decimal_sum(ret * ret * ret).alias("s3"),
+        fx.decimal_sum(ret * ret * ret * ret).alias("s4"),
     )
     n, s1, s2, s3, s4 = (F.col(c) for c in ("n", "s1", "s2", "s3", "s4"))
     mu = s1 / n
@@ -12308,13 +12272,8 @@ def q_return_moments(spark, sf_dir):
 @query(
     "up_down_capture",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
-mkt AS (SELECT date,
-          CAST(sum(CAST(ret AS DECIMAL(38,18))) AS DOUBLE)
-            / count(ret) AS mret
-        FROM r WHERE ret IS NOT NULL GROUP BY date),
+{RETURNS_CTE},
+{MARKET_RETURN_CTE},
 gm AS (SELECT CAST(sum(CAST(mret AS DECIMAL(38,18))) AS DOUBLE) / count(*)
           AS avgm FROM mkt),
 j AS (SELECT symbol, r.date, ret, mret, avgm
@@ -12351,32 +12310,18 @@ def q_up_down_capture(spark, sf_dir):
     The market frame is a per-date aggregate of ~n_symbols rows —
     broadcast back to the return stream, then ONE conditional
     DECIMAL-sum aggregate per symbol."""
-    s = _stocks(spark, sf_dir)
-    w = Window.partitionBy("symbol").orderBy("date")
-    r = s.select(
-        "symbol", "date",
-        (F.col("close") / F.lag("close").over(w) - 1).alias("ret"),
-    ).filter(F.col("ret").isNotNull())
-    mkt = r.groupBy("date").agg(
-        (
-            F.sum(F.col("ret").cast("decimal(38,18)")).cast("double")
-            / F.count("ret")
-        ).alias("mret")
-    )
+    r = _daily_returns(spark, sf_dir)
+    mkt = _market_return(r)
     gm = mkt.agg(
-        (
-            F.sum(F.col("mret").cast("decimal(38,18)")).cast("double")
-            / F.count(F.lit(1))
-        ).alias("avgm")
+        (fx.decimal_sum(F.col("mret")) / F.count(F.lit(1))).alias("avgm")
     )
     j = r.join(F.broadcast(mkt), "date").crossJoin(F.broadcast(gm))
-    dec = lambda c: F.sum(c.cast("decimal(38,18)")).cast("double")
     up, dn = F.col("mret") > F.col("avgm"), F.col("mret") < F.col("avgm")
     st = j.groupBy("symbol").agg(
-        dec(F.when(up, F.col("ret")).otherwise(0.0)).alias("sr_up"),
-        dec(F.when(up, F.col("mret")).otherwise(0.0)).alias("sm_up"),
-        dec(F.when(dn, F.col("ret")).otherwise(0.0)).alias("sr_dn"),
-        dec(F.when(dn, F.col("mret")).otherwise(0.0)).alias("sm_dn"),
+        fx.decimal_sum(F.when(up, F.col("ret")).otherwise(0.0)).alias("sr_up"),
+        fx.decimal_sum(F.when(up, F.col("mret")).otherwise(0.0)).alias("sm_up"),
+        fx.decimal_sum(F.when(dn, F.col("ret")).otherwise(0.0)).alias("sr_dn"),
+        fx.decimal_sum(F.when(dn, F.col("mret")).otherwise(0.0)).alias("sm_dn"),
         F.sum(F.when(up, 1).otherwise(0)).cast("long").alias("n_up"),
         F.sum(F.when(dn, 1).otherwise(0)).cast("long").alias("n_dn"),
     )
@@ -12394,9 +12339,7 @@ def q_up_down_capture(spark, sf_dir):
 @query(
     "omega_tail_ratio",
     f"""WITH {STOCKS},
-r AS (SELECT symbol,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
+{RETURNS_CTE},
 s AS (SELECT symbol,
         CAST(count(ret) AS BIGINT) AS n_rets,
         CAST(sum(CAST(CASE WHEN ret > 0 THEN ret ELSE 0.0 END
@@ -12419,16 +12362,11 @@ def q_omega_tail_ratio(spark, sf_dir):
     mass) and the 95/5 tail ratio per symbol — the asymmetric-risk
     pair that Sharpe hides. One aggregate: the percentile pair shares
     the same per-symbol pass as the conditional sums."""
-    s = _stocks(spark, sf_dir)
-    w = Window.partitionBy("symbol").orderBy("date")
-    r = s.select(
-        "symbol", (F.col("close") / F.lag("close").over(w) - 1).alias("ret")
-    ).filter(F.col("ret").isNotNull())
-    dec = lambda c: F.sum(c.cast("decimal(38,18)")).cast("double")
+    r = _daily_returns(spark, sf_dir)
     st = r.groupBy("symbol").agg(
         F.count("ret").cast("long").alias("n_rets"),
-        dec(F.when(F.col("ret") > 0, F.col("ret")).otherwise(0.0)).alias("gains"),
-        dec(F.when(F.col("ret") < 0, -F.col("ret")).otherwise(0.0)).alias("losses"),
+        fx.decimal_sum(F.when(F.col("ret") > 0, F.col("ret")).otherwise(0.0)).alias("gains"),
+        fx.decimal_sum(F.when(F.col("ret") < 0, -F.col("ret")).otherwise(0.0)).alias("losses"),
         F.percentile("ret", F.lit(0.95)).alias("p95"),
         F.percentile("ret", F.lit(0.05)).alias("p05"),
     )
@@ -12448,9 +12386,7 @@ def q_omega_tail_ratio(spark, sf_dir):
 @query(
     "win_loss_streaks",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
+{RETURNS_CTE},
 s AS (SELECT symbol, date,
         CASE WHEN ret > 0 THEN 1 WHEN ret < 0 THEN -1 ELSE 0 END AS sgn,
         row_number() OVER ({_W_DATE}) AS rn
@@ -12474,12 +12410,8 @@ def q_win_loss_streaks(spark, sf_dir):
     entirely integer arithmetic so the oracle replays bit-identically.
     Two ordered windows over the same per-symbol sort, then one
     bounded-key aggregate (≤ 3 signs × runs)."""
-    s = _stocks(spark, sf_dir)
     w = Window.partitionBy("symbol").orderBy("date")
-    r = s.select(
-        "symbol", "date",
-        (F.col("close") / F.lag("close").over(w) - 1).alias("ret"),
-    ).filter(F.col("ret").isNotNull())
+    r = _daily_returns(spark, sf_dir)
     sgn = (
         F.when(F.col("ret") > 0, 1).when(F.col("ret") < 0, -1).otherwise(0)
     ).alias("sgn")
@@ -12621,7 +12553,7 @@ def q_force_index_eom(spark, sf_dir):
     # .5 boundary at digit 10 on a handful of rows and the engines'
     # round() implementations disagree there (see round_portable)
     fi = fx.round_portable(
-        (F.col("close") - F.lag("close").over(w)) * F.col("volume"), 6
+        indicators.diff(time_col="bar_ts") * F.col("volume"), 6
     ) + F.lit(0.0)
     eom = fx.round_portable(
         (
@@ -12950,7 +12882,7 @@ def q_js_divergence_sources(spark, sf_dir):
     "hurst_rs",
     f"""WITH {STOCKS},
 r0 AS (SELECT symbol, date,
-         close / lag(close) OVER ({_W_DATE}) - 1 AS ret
+         {_RET_SQL} AS ret
        FROM stocks),
 r AS (SELECT symbol,
         CAST(round(ret * 1000000000, 0) AS BIGINT) AS rq,
@@ -13009,12 +12941,8 @@ def q_hurst_rs(spark, sf_dir):
     the float pipeline is a fixed IEEE expression tree in both
     engines — a long-memory statistic with a full hash oracle.
     Bounded state: blocks×3 rows per symbol, one window pass."""
-    s = _stocks(spark, sf_dir)
     w = Window.partitionBy("symbol").orderBy("date")
-    r0 = s.select(
-        "symbol", "date",
-        (F.col("close") / F.lag("close").over(w) - 1).alias("ret"),
-    ).filter(F.col("ret").isNotNull())
+    r0 = _daily_returns(spark, sf_dir)
     r = r0.select(
         "symbol",
         F.round(F.col("ret") * 1_000_000_000, 0).cast("long").alias("rq"),
@@ -13096,7 +13024,7 @@ def q_hurst_rs(spark, sf_dir):
     "kendall_tau_pairs",
     f"""WITH {STOCKS},
 r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret,
+        {_RET_SQL} AS ret,
         row_number() OVER ({_W_DATE}) AS rn,
         count(*) OVER (PARTITION BY symbol) AS n
       FROM stocks),
@@ -13136,7 +13064,7 @@ def q_kendall_tau_pairs(spark, sf_dir):
     w = Window.partitionBy("symbol").orderBy("date")
     r = s.select(
         "symbol", "date",
-        (F.col("close") / F.lag("close").over(w) - 1).alias("ret"),
+        indicators.simple_return().alias("ret"),
         F.row_number().over(w).alias("rn"),
         F.count("*").over(Window.partitionBy("symbol")).alias("n"),
     )
@@ -13283,7 +13211,7 @@ _BS_GRID_SQL = """grid AS (
     "black_scholes_grid",
     f"""WITH {STOCKS},
 r AS (SELECT symbol, date, close,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
+        {_RET_SQL} AS ret
       FROM stocks),
 s AS (SELECT symbol,
         max_by(close, date) AS s0,
@@ -13323,17 +13251,15 @@ def q_black_scholes_grid(spark, sf_dir):
     put-call parity. One DECIMAL-exact stats aggregate per symbol,
     then a broadcast 6-cell grid — zero extra shuffles."""
     s = _stocks(spark, sf_dir)
-    w = Window.partitionBy("symbol").orderBy("date")
     r = s.select(
         "symbol", "date", "close",
-        (F.col("close") / F.lag("close").over(w) - 1).alias("ret"),
+        indicators.simple_return().alias("ret"),
     )
-    dec = lambda c: F.sum(c.cast("decimal(38,18)")).cast("double")
     st = r.groupBy("symbol").agg(
         F.max_by("close", "date").alias("s0"),
         F.count("ret").cast("long").alias("n"),
-        dec(F.col("ret")).alias("sr"),
-        dec(F.col("ret") * F.col("ret")).alias("srr"),
+        fx.decimal_sum(F.col("ret")).alias("sr"),
+        fx.decimal_sum(F.col("ret") * F.col("ret")).alias("srr"),
     )
     v = st.filter(F.col("n") > 1).select(
         "symbol", "s0",
@@ -13386,9 +13312,7 @@ def q_black_scholes_grid(spark, sf_dir):
 @query(
     "min_var_pairs",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
+{RETURNS_CTE},
 al AS (SELECT a.symbol AS sa, b.symbol AS sb, a.ret AS x, b.ret AS y
        FROM r a JOIN r b ON a.date = b.date AND a.symbol < b.symbol
        WHERE a.ret IS NOT NULL AND b.ret IS NOT NULL),
@@ -13424,12 +13348,7 @@ def q_min_var_pairs(spark, sf_dir):
     plus the resulting annualized portfolio vol. One aligned self-join
     (the pairwise_correlation fan-out), ONE aggregate per pair; the
     closed forms are identical IEEE math in both engines."""
-    s = _stocks(spark, sf_dir)
-    w = Window.partitionBy("symbol").orderBy("date")
-    r = s.select(
-        "symbol", "date",
-        (F.col("close") / F.lag("close").over(w) - 1).alias("ret"),
-    ).filter(F.col("ret").isNotNull())
+    r = _daily_returns(spark, sf_dir)
     a, b = r.alias("a"), r.alias("b")
     al = a.join(
         b,
@@ -13439,14 +13358,13 @@ def q_min_var_pairs(spark, sf_dir):
         F.col("a.symbol").alias("sa"), F.col("b.symbol").alias("sb"),
         F.col("a.ret").alias("x"), F.col("b.ret").alias("y"),
     )
-    dec = lambda c: F.sum(c.cast("decimal(38,18)")).cast("double")
     st = al.groupBy("sa", "sb").agg(
         F.count("*").cast("long").alias("n"),
-        dec(F.col("x")).alias("sx"),
-        dec(F.col("y")).alias("sy"),
-        dec(F.col("x") * F.col("x")).alias("sxx"),
-        dec(F.col("y") * F.col("y")).alias("syy"),
-        dec(F.col("x") * F.col("y")).alias("sxy"),
+        fx.decimal_sum(F.col("x")).alias("sx"),
+        fx.decimal_sum(F.col("y")).alias("sy"),
+        fx.decimal_sum(F.col("x") * F.col("x")).alias("sxx"),
+        fx.decimal_sum(F.col("y") * F.col("y")).alias("syy"),
+        fx.decimal_sum(F.col("x") * F.col("y")).alias("sxy"),
     )
     n = F.col("n")
     m = st.filter(n > 1).select(
@@ -13687,9 +13605,7 @@ def q_user_value_deciles(spark, sf_dir):
     pre-quantized shares, never raw rows."""
     ev = table(spark, sf_dir, "events")
     u = ev.groupBy("user_id").agg(
-        F.sum(F.col("value").cast("decimal(38,18)"))
-        .cast("double")
-        .alias("total_value")
+        fx.decimal_sum(F.col("value")).alias("total_value")
     )
     d = u.select(
         "user_id", "total_value",
@@ -13699,15 +13615,9 @@ def q_user_value_deciles(spark, sf_dir):
     )
     g = d.groupBy("decile").agg(
         F.count("*").cast("long").alias("n_users"),
-        F.sum(F.col("total_value").cast("decimal(38,18)"))
-        .cast("double")
-        .alias("dv"),
+        fx.decimal_sum(F.col("total_value")).alias("dv"),
     )
-    t = u.agg(
-        F.sum(F.col("total_value").cast("decimal(38,18)"))
-        .cast("double")
-        .alias("tv")
-    )
+    t = u.agg(fx.decimal_sum(F.col("total_value")).alias("tv"))
     share_q = F.round(F.col("dv") / F.col("tv") * 1_000_000_000, 0).cast("long")
     return (
         g.crossJoin(F.broadcast(t))
@@ -13734,7 +13644,7 @@ def q_user_value_deciles(spark, sf_dir):
 # decimal arithmetic (the _EMA_ORACLE discipline).
 _GARCH_ORACLE = f"""WITH RECURSIVE {STOCKS},
 base AS (SELECT symbol, date, CAST(close AS DOUBLE) AS close,
-           close / lag(close) OVER ({_W_DATE}) - 1 AS ret,
+           {_RET_SQL} AS ret,
            row_number() OVER ({_W_DATE}) AS rn
          FROM stocks),
 sv AS (SELECT symbol,
@@ -13772,19 +13682,17 @@ def q_garch_11_vol(spark, sf_dir):
     double. One Arrow shuffle (the with_ema_macd plan). See
     indicators.with_garch_vol."""
     s = _stocks(spark, sf_dir)
-    w = Window.partitionBy("symbol").orderBy("date")
     r = s.select(
         "symbol", "date", "close",
-        (F.col("close") / F.lag("close").over(w) - 1).alias("ret0"),
+        indicators.simple_return().alias("ret0"),
     )
-    dec = lambda c: F.sum(c.cast("decimal(38,18)")).cast("double")
     sv = (
         r.filter(F.col("ret0").isNotNull())
         .groupBy("symbol")
         .agg(
             F.count("ret0").alias("nr"),
-            dec(F.col("ret0")).alias("sr"),
-            dec(F.col("ret0") * F.col("ret0")).alias("srr"),
+            fx.decimal_sum(F.col("ret0")).alias("sr"),
+            fx.decimal_sum(F.col("ret0") * F.col("ret0")).alias("srr"),
         )
         .filter(F.col("nr") > 1)
         .select(
@@ -14114,16 +14022,9 @@ def q_cohort_revenue_matrix(spark, sf_dir):
         j.groupBy("cohort_year", "order_year")
         .agg(
             F.countDistinct("o_custkey").cast("long").alias("n_customers"),
+            F.round(fx.decimal_sum(F.col("o_totalprice")), 4).alias("revenue"),
             F.round(
-                F.sum(F.col("o_totalprice").cast("decimal(38,18)")).cast(
-                    "double"
-                ),
-                4,
-            ).alias("revenue"),
-            F.round(
-                F.sum(F.col("o_totalprice").cast("decimal(38,18)")).cast(
-                    "double"
-                )
+                fx.decimal_sum(F.col("o_totalprice"))
                 / F.countDistinct("o_custkey"),
                 6,
             ).alias("revenue_per_customer"),
@@ -14290,9 +14191,7 @@ def q_link_pred_common_neighbors(spark, sf_dir):
 @query(
     "var_backtest_kupiec",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
+{RETURNS_CTE},
 v AS (SELECT symbol, quantile_cont(ret, 0.05) AS var95
       FROM r WHERE ret IS NOT NULL GROUP BY symbol),
 x AS (SELECT r.symbol,
@@ -14323,11 +14222,7 @@ def q_var_backtest_kupiec(spark, sf_dir):
     only the final log form is float, the identical expression tree
     in both engines — the model VALIDATION step a risk pipeline runs
     after the VaR estimate."""
-    s = _stocks(spark, sf_dir)
-    w = Window.partitionBy("symbol").orderBy("date")
-    r = s.select(
-        "symbol", (F.col("close") / F.lag("close").over(w) - 1).alias("ret")
-    ).filter(F.col("ret").isNotNull())
+    r = _daily_returns(spark, sf_dir)
     v = r.groupBy("symbol").agg(F.percentile("ret", F.lit(0.05)).alias("var95"))
     x = (
         r.join(F.broadcast(v), "symbol")
@@ -14446,13 +14341,8 @@ def q_incremental_dedup_delta(spark, sf_dir):
 @query(
     "conditional_betas",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
-mkt AS (SELECT date,
-          CAST(sum(CAST(ret AS DECIMAL(38,18))) AS DOUBLE)
-            / count(ret) AS mret
-        FROM r WHERE ret IS NOT NULL GROUP BY date),
+{RETURNS_CTE},
+{MARKET_RETURN_CTE},
 gm AS (SELECT CAST(sum(CAST(mret AS DECIMAL(38,18))) AS DOUBLE) / count(*)
           AS avgm FROM mkt),
 j AS (SELECT symbol, ret, mret,
@@ -14490,23 +14380,10 @@ def q_conditional_betas(spark, sf_dir):
     vacuously NULL; above/below-average days split ~50/50 under any
     drift. One conditional DECIMAL-sum aggregate per (symbol, regime);
     closed forms identical IEEE both engines."""
-    s = _stocks(spark, sf_dir)
-    w = Window.partitionBy("symbol").orderBy("date")
-    r = s.select(
-        "symbol", "date",
-        (F.col("close") / F.lag("close").over(w) - 1).alias("ret"),
-    ).filter(F.col("ret").isNotNull())
-    mkt = r.groupBy("date").agg(
-        (
-            F.sum(F.col("ret").cast("decimal(38,18)")).cast("double")
-            / F.count("ret")
-        ).alias("mret")
-    )
+    r = _daily_returns(spark, sf_dir)
+    mkt = _market_return(r)
     gm = mkt.agg(
-        (
-            F.sum(F.col("mret").cast("decimal(38,18)")).cast("double")
-            / F.count(F.lit(1))
-        ).alias("avgm")
+        (fx.decimal_sum(F.col("mret")) / F.count(F.lit(1))).alias("avgm")
     )
     j = (
         r.join(F.broadcast(mkt), "date")
@@ -14516,13 +14393,12 @@ def q_conditional_betas(spark, sf_dir):
             F.when(F.col("mret") > F.col("avgm"), 1).otherwise(0).alias("up"),
         )
     )
-    dec = lambda c: F.sum(c.cast("decimal(38,18)")).cast("double")
     st = j.groupBy("symbol", "up").agg(
         F.count("*").cast("long").alias("n"),
-        dec(F.col("ret")).alias("sr"),
-        dec(F.col("mret")).alias("sm"),
-        dec(F.col("ret") * F.col("mret")).alias("srm"),
-        dec(F.col("mret") * F.col("mret")).alias("smm"),
+        fx.decimal_sum(F.col("ret")).alias("sr"),
+        fx.decimal_sum(F.col("mret")).alias("sm"),
+        fx.decimal_sum(F.col("ret") * F.col("mret")).alias("srm"),
+        fx.decimal_sum(F.col("mret") * F.col("mret")).alias("smm"),
     )
     n = F.col("n")
     b = st.filter(n > 1).select(
@@ -14638,9 +14514,7 @@ def q_bs_greeks(spark, sf_dir):
 @query(
     "ks_normality",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
+{RETURNS_CTE},
 s AS (SELECT symbol,
         CAST(count(ret) AS BIGINT) AS n,
         CAST(sum(CAST(ret AS DECIMAL(38,18))) AS DOUBLE) AS sr,
@@ -14674,17 +14548,11 @@ def q_ks_normality(spark, sf_dir):
     DECIMAL-exact and the empirical CDF is integer ranks (deterministic
     date tiebreak). The fat-tail rejection readout that motivates the
     tail-risk family. One ranked window + one aggregate per symbol."""
-    s = _stocks(spark, sf_dir)
-    w = Window.partitionBy("symbol").orderBy("date")
-    r = s.select(
-        "symbol", "date",
-        (F.col("close") / F.lag("close").over(w) - 1).alias("ret"),
-    ).filter(F.col("ret").isNotNull())
-    dec = lambda c: F.sum(c.cast("decimal(38,18)")).cast("double")
+    r = _daily_returns(spark, sf_dir)
     st = r.groupBy("symbol").agg(
         F.count("ret").cast("long").alias("n"),
-        dec(F.col("ret")).alias("sr"),
-        dec(F.col("ret") * F.col("ret")).alias("srr"),
+        fx.decimal_sum(F.col("ret")).alias("sr"),
+        fx.decimal_sum(F.col("ret") * F.col("ret")).alias("srr"),
     )
     m = st.filter(F.col("n") > 1).select(
         "symbol", "n",
@@ -14732,9 +14600,7 @@ def q_ks_normality(spark, sf_dir):
 @query(
     "spectral_power_grid",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
+{RETURNS_CTE},
 t AS (SELECT symbol, ret,
         row_number() OVER ({_W_DATE}) AS tt
       FROM r WHERE ret IS NOT NULL),
@@ -14772,12 +14638,8 @@ def q_spectral_power_grid(spark, sf_dir):
     and 1e-9 quantization gives ~9 orders of margin over that — so the
     power statistic replays exactly. One window pass, one 3×-broadcast
     fan-out, one integer aggregate per (symbol, period)."""
-    s = _stocks(spark, sf_dir)
     w = Window.partitionBy("symbol").orderBy("date")
-    r = s.select(
-        "symbol", "date",
-        (F.col("close") / F.lag("close").over(w) - 1).alias("ret"),
-    ).filter(F.col("ret").isNotNull())
+    r = _daily_returns(spark, sf_dir)
     t = r.select("symbol", "ret", F.row_number().over(w).alias("tt"))
     periods = spark.createDataFrame([(5,), (10,), (21,)], "period int")
     g = t.crossJoin(F.broadcast(periods))
@@ -14818,9 +14680,7 @@ def q_spectral_power_grid(spark, sf_dir):
 @query(
     "dow_effect",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
+{RETURNS_CTE},
 d AS (SELECT symbol, CAST(dayofweek(date) + 1 AS BIGINT) AS dow, ret
       FROM r WHERE ret IS NOT NULL),
 s AS (SELECT symbol, dow,
@@ -14843,20 +14703,14 @@ def q_dow_effect(spark, sf_dir):
     differ: Spark dayofweek is 1=Sunday..7, DuckDB's is 0=Sunday..6,
     so the oracle adds 1 — the hash check pins the alignment. One
     window pass + one bounded-key aggregate."""
-    s = _stocks(spark, sf_dir)
-    w = Window.partitionBy("symbol").orderBy("date")
-    r = s.select(
-        "symbol", "date",
-        (F.col("close") / F.lag("close").over(w) - 1).alias("ret"),
-    ).filter(F.col("ret").isNotNull())
+    r = _daily_returns(spark, sf_dir)
     d = r.select(
         "symbol", F.dayofweek("date").cast("long").alias("dow"), "ret"
     )
-    dec = lambda c: F.sum(c.cast("decimal(38,18)")).cast("double")
     st = d.groupBy("symbol", "dow").agg(
         F.count("*").cast("long").alias("n"),
-        dec(F.col("ret")).alias("sr"),
-        dec(F.col("ret") * F.col("ret")).alias("srr"),
+        fx.decimal_sum(F.col("ret")).alias("sr"),
+        fx.decimal_sum(F.col("ret") * F.col("ret")).alias("srr"),
     )
     n = F.col("n")
     mean = F.col("sr") / n
@@ -14877,9 +14731,7 @@ def q_dow_effect(spark, sf_dir):
 @query(
     "runs_test",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
+{RETURNS_CTE},
 sgn AS (SELECT symbol, date,
           CASE WHEN ret >= 0 THEN 1 ELSE 0 END AS up,
           lag(CASE WHEN ret >= 0 THEN 1 ELSE 0 END)
@@ -14912,12 +14764,8 @@ def q_runs_test(spark, sf_dir):
     its 95% rejection are closed forms of those integers, identical
     IEEE in both engines. The sign-level complement of acf_ljung_box's
     magnitude-level serial-dependence test."""
-    s = _stocks(spark, sf_dir)
     w = Window.partitionBy("symbol").orderBy("date")
-    r = s.select(
-        "symbol", "date",
-        (F.col("close") / F.lag("close").over(w) - 1).alias("ret"),
-    ).filter(F.col("ret").isNotNull())
+    r = _daily_returns(spark, sf_dir)
     up = F.when(F.col("ret") >= 0, 1).otherwise(0)
     sgn = r.select(
         "symbol", up.alias("up"), F.lag(up).over(w).alias("prev_up")
@@ -15051,9 +14899,7 @@ def q_quality_score_auc(spark, sf_dir):
 @query(
     "es_backtest_z",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
+{RETURNS_CTE},
 v AS (SELECT symbol,
         quantile_cont(ret, 0.05) AS var95,
         CAST(count(ret) AS BIGINT) AS n
@@ -15085,22 +14931,17 @@ def q_es_backtest_z(spark, sf_dir):
     them. In-sample this recovers ≈0 by construction, which is exactly
     the property the hash check pins. Shares var_cvar_95's percentile
     join; sums DECIMAL-exact, one extra conditional aggregate."""
-    s = _stocks(spark, sf_dir)
-    w = Window.partitionBy("symbol").orderBy("date")
-    r = s.select(
-        "symbol", (F.col("close") / F.lag("close").over(w) - 1).alias("ret")
-    ).filter(F.col("ret").isNotNull())
+    r = _daily_returns(spark, sf_dir)
     v = r.groupBy("symbol").agg(
         F.percentile("ret", F.lit(0.05)).alias("var95"),
         F.count("ret").cast("long").alias("n"),
     )
-    dec = lambda c: F.sum(c.cast("decimal(38,18)")).cast("double")
     rj = r.join(F.broadcast(v), "symbol")
     es = (
         rj.filter(F.col("ret") <= F.col("var95"))
         .groupBy("symbol")
         .agg(
-            (dec(F.col("ret")) / F.count("*")).alias("es95"),
+            (fx.decimal_sum(F.col("ret")) / F.count("*")).alias("es95"),
             F.count("*").cast("long").alias("n_tail"),
         )
     )
@@ -15108,7 +14949,7 @@ def q_es_backtest_z(spark, sf_dir):
         rj.join(F.broadcast(es), "symbol")
         .groupBy("symbol", "n", "es95", "n_tail")
         .agg(
-            dec(
+            fx.decimal_sum(
                 F.when(F.col("ret") <= F.col("var95"), F.col("ret")).otherwise(
                     0.0
                 )
@@ -15133,13 +14974,8 @@ def q_es_backtest_z(spark, sf_dir):
 @query(
     "information_ratio",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
-mkt AS (SELECT date,
-          CAST(sum(CAST(ret AS DECIMAL(38,18))) AS DOUBLE)
-            / count(ret) AS mret
-        FROM r WHERE ret IS NOT NULL GROUP BY date),
+{RETURNS_CTE},
+{MARKET_RETURN_CTE},
 x AS (SELECT symbol, ret - mret AS ex
       FROM r JOIN mkt ON r.date = mkt.date WHERE ret IS NOT NULL),
 s AS (SELECT symbol,
@@ -15161,26 +14997,15 @@ def q_information_ratio(spark, sf_dir):
     the relative-performance companion of risk_adjusted_perf's
     absolute Sharpe. DECIMAL-exact excess-return sufficient sums; one
     broadcast market join, one aggregate per symbol."""
-    s = _stocks(spark, sf_dir)
-    w = Window.partitionBy("symbol").orderBy("date")
-    r = s.select(
-        "symbol", "date",
-        (F.col("close") / F.lag("close").over(w) - 1).alias("ret"),
-    ).filter(F.col("ret").isNotNull())
-    mkt = r.groupBy("date").agg(
-        (
-            F.sum(F.col("ret").cast("decimal(38,18)")).cast("double")
-            / F.count("ret")
-        ).alias("mret")
-    )
+    r = _daily_returns(spark, sf_dir)
+    mkt = _market_return(r)
     x = r.join(F.broadcast(mkt), "date").select(
         "symbol", (F.col("ret") - F.col("mret")).alias("ex")
     )
-    dec = lambda c: F.sum(c.cast("decimal(38,18)")).cast("double")
     st = x.groupBy("symbol").agg(
         F.count("*").cast("long").alias("n"),
-        dec(F.col("ex")).alias("sx"),
-        dec(F.col("ex") * F.col("ex")).alias("sxx"),
+        fx.decimal_sum(F.col("ex")).alias("sx"),
+        fx.decimal_sum(F.col("ex") * F.col("ex")).alias("sxx"),
     )
     n = F.col("n")
     te = F.sqrt((F.col("sxx") - F.col("sx") * F.col("sx") / n) / (n - 1))

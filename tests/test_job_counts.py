@@ -9,7 +9,8 @@ the code before that kernel's latest refactor, the highest of three
 runs: before the rank loop and the Lloyd trainer were each folded into
 one implementation, before the decontamination operators moved onto
 the shared shingle-hash and benchmark-split definitions, before the
-bar fixtures were memoized, and, for ``ivf_topk`` (8 cells, 2 probes,
+bar fixtures were memoized, before the return-based queries moved onto
+the shared returns owners, and, for ``ivf_topk`` (8 cells, 2 probes,
 2 Lloyd rounds), the count of ``ivf_topk_deterministic`` with the same
 arguments before the two IVF paths were merged into one. A change that
 adds an eager job or an AQE query stage to one of these kernels fails
@@ -37,11 +38,18 @@ _MAX_JOBS = {
     "decontaminate": 8,
 }
 
-# Registry queries over the daily and hourly bar fixtures, measured
-# before the fixtures were memoized (3 of 3 runs).
+# Registry queries over the daily and hourly bar fixtures: ma_warmup
+# and sma measured before the fixtures were memoized, the return-based
+# queries before their returns, exact sums and market return moved onto
+# one owner each (highest of 3 runs).
 _MAX_QUERY_JOBS = {
     "ma_warmup": 4,
     "sma": 4,
+    "pairwise_correlation": 6,
+    "perf_summary": 2,
+    "rolling_beta_30": 5,
+    "var_cvar_95": 8,
+    "volatility_30": 2,
 }
 
 

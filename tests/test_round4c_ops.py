@@ -245,7 +245,7 @@ def test_ewma_vol_matches_pandas_reference(spark):
         assert got[d][0] == v and got[d][1] == sd
 
 
-def test_growth_accounting_classifies_lifecycle(spark):
+def test_growth_accounting_classifies_lifecycle(spark, tmp_path):
     """User active on d1, d2, d4: new@d1, retained@d2, churned@d3
     (charged to the day after the run ends), resurrected@d4; the final
     activity day contributes no churn row beyond the observed range."""
@@ -261,9 +261,9 @@ def test_growth_accounting_classifies_lifecycle(spark):
         ],
         "event_id long, ts string, user_id long, event_type string, value double, props string",
     ).select("event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id", "event_type", "value", "props")
-    import tempfile, os
+    import os
 
-    d = tempfile.mkdtemp(prefix="ga_")
+    d = str(tmp_path)
     e.write.mode("overwrite").parquet(os.path.join(d, "events.parquet"))
     out = {
         str(r.day): (r.n_new, r.n_retained, r.n_resurrected, r.n_churned)
@@ -293,9 +293,9 @@ def test_benford_digit_extraction_and_shares(spark):
         assert r.chi2_term >= 0.0
 
 
-def test_rfm_buckets_are_deterministic_quintiles(spark):
+def test_rfm_buckets_are_deterministic_quintiles(spark, tmp_path):
     from finance_data_pipeline_spark.registry import QUERIES
-    import tempfile, os
+    import os
 
     rows = []
     for u in range(10):
@@ -308,7 +308,7 @@ def test_rfm_buckets_are_deterministic_quintiles(spark):
         rows,
         "event_id long, ts string, user_id long, event_type string, value double, props string",
     ).select("event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id", "event_type", "value", "props")
-    d = tempfile.mkdtemp(prefix="rfm_")
+    d = str(tmp_path)
     e.write.mode("overwrite").parquet(os.path.join(d, "events.parquet"))
     out = {r.user_id: r for r in QUERIES["rfm_scores"](spark, d).collect()}
     assert len(out) == 10
@@ -569,9 +569,8 @@ def test_per_group_sample_k_exact_and_small_groups(spark):
     assert {r.doc_id for r in out2} == {r.doc_id for r in out}
 
 
-def test_decayed_engagement_power_of_two_buckets(spark):
+def test_decayed_engagement_power_of_two_buckets(spark, tmp_path):
     import os
-    import tempfile
 
     from finance_data_pipeline_spark.registry import QUERIES
 
@@ -583,7 +582,7 @@ def test_decayed_engagement_power_of_two_buckets(spark):
         ],
         "event_id long, ts string, user_id long, event_type string, value double, props string",
     ).select("event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id", "event_type", "value", "props")
-    d = tempfile.mkdtemp(prefix="dec_")
+    d = str(tmp_path)
     e.write.mode("overwrite").parquet(os.path.join(d, "events.parquet"))
     row = QUERIES["decayed_engagement"](spark, d).first()
     assert row.event_type == "view"
@@ -827,12 +826,10 @@ def test_token_drivers_ols_recovers_planted_plane(spark):
     assert abs(det2/det + 1.0) < 1e-9
 
 
-def test_chi2_terms_zero_under_exact_independence(spark):
+def test_chi2_terms_zero_under_exact_independence(spark, tmp_path):
     """A perfectly independent 2x2 contingency table yields zero chi2
     everywhere (obs == expected exactly)."""
-    import datetime as dt
     import os
-    import tempfile
 
     from finance_data_pipeline_spark.registry import QUERIES
 
@@ -847,7 +844,7 @@ def test_chi2_terms_zero_under_exact_independence(spark):
         rows,
         "event_id long, ts string, user_id long, event_type string, value double, props string",
     ).select("event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id", "event_type", "value", "props")
-    d = tempfile.mkdtemp(prefix="chi_")
+    d = str(tmp_path)
     e.write.mode("overwrite").parquet(os.path.join(d, "events.parquet"))
     out = QUERIES["value_hour_independence"](spark, d).collect()
     assert len(out) == 4
@@ -855,11 +852,10 @@ def test_chi2_terms_zero_under_exact_independence(spark):
         assert r.chi2_term == 0.0 and r.n == round(r.expected)
 
 
-def test_gini_extremes(spark):
+def test_gini_extremes(spark, tmp_path):
     """Uniform values -> gini ~ 0; one whale holding everything -> gini
     -> (n-1)/n (the discrete maximum)."""
     import os
-    import tempfile
 
     from finance_data_pipeline_spark.registry import QUERIES
 
@@ -873,7 +869,7 @@ def test_gini_extremes(spark):
         rows,
         "event_id long, ts string, user_id long, event_type string, value double, props string",
     ).select("event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id", "event_type", "value", "props")
-    d = tempfile.mkdtemp(prefix="gini_")
+    d = str(tmp_path)
     e.write.mode("overwrite").parquet(os.path.join(d, "events.parquet"))
     out = {r.event_type: r.gini for r in QUERIES["value_gini_by_type"](spark, d).collect()}
     assert out["flat"] == 0.0

@@ -509,7 +509,7 @@ def test_cms_wide_sketch_is_exact_on_small_vocab(spark):
 # --- event analytics additions ---------------------------------------------
 
 
-def test_event_sequence_match_hand_case(spark):
+def test_event_sequence_match_hand_case(spark, tmp_path):
     from finance_data_pipeline_spark.registry import QUERIES
     import pandas as pd
 
@@ -530,8 +530,7 @@ def test_event_sequence_match_hand_case(spark):
     df = spark.createDataFrame(
         rows, "event_id long, user_id long, event_type string, ts string"
     ).withColumn("ts", F.col("ts").cast("timestamp"))
-    import tempfile
-    d = tempfile.mkdtemp(prefix="seq_ev_")
+    d = str(tmp_path)
     df.write.mode("overwrite").parquet(f"{d}/events.parquet")
     out = QUERIES["event_sequence_match"](spark, d).collect()
     assert [r.user_id for r in out] == [1]
@@ -588,10 +587,9 @@ def test_zipf_slope_is_negative_and_sane(spark):
     assert -3.0 < r.zipf_slope <= 0.0
 
 
-def test_zipf_slope_on_true_zipf_corpus(spark):
+def test_zipf_slope_on_true_zipf_corpus(spark, tmp_path):
     """A corpus with freq(rank) ∝ rank^-1 fits slope ~ -1."""
     from finance_data_pipeline_spark.registry import QUERIES
-    import tempfile
 
     words = []
     for rank in range(1, 51):
@@ -599,7 +597,7 @@ def test_zipf_slope_on_true_zipf_corpus(spark):
     df = spark.createDataFrame(
         [(1, " ".join(words))], "doc_id long, text string"
     )
-    d = tempfile.mkdtemp(prefix="zipf_")
+    d = str(tmp_path)
     df.write.mode("overwrite").parquet(f"{d}/documents.parquet")
     r = QUERIES["gram_zipf_fit"](spark, d).first()
     assert abs(r.zipf_slope - (-1.0)) < 0.05
