@@ -177,7 +177,7 @@ def main() -> None:
         .select("id_a", "id_b")
         .localCheckpoint()
     )
-    shared_clusters = _dedup.connected_components(shared_pairs).localCheckpoint()
+    shared_clusters = _graph.connected_components(shared_pairs).localCheckpoint()
     OVERRIDES = {
         "near_dup_pairs": lambda s, d: _dedup.near_dup_pairs(docs, **_fast),
         "dup_clusters": lambda s, d: _dedup.dup_clusters(docs, pairs=shared_pairs),

@@ -342,151 +342,18 @@ def near_dup_pairs(
 # --- X2f: duplicate clusters (connected components) -----------------------
 
 
-def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
-    """Connected components over an undirected pair graph by min-label
-    propagation: every node repeatedly adopts the smallest label among
-    itself and its neighbors until fixpoint. Converges in O(diameter)
-    rounds — near-dup clusters are shallow (dense cliques chained by a
-    few bridges), so a handful of rounds suffice; ``max_iter`` bounds
-    adversarial chains.
-
-    Each round is two shuffles (join + min-aggregate) plus a scalar
-    convergence check; ``localCheckpoint`` cuts the iterative lineage so
-    the plan does not grow per round (at cluster scale, use
-    ``spark.sparkContext.setCheckpointDir`` + ``checkpoint`` for
-    fault-tolerant truncation). For graphs with huge components the
-    O(log n)-round alternating large-star/small-star algorithm
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC 2014) drops in with the same (id, label) contract.
-
-    Returns (doc_id, cluster_id) for every node appearing in ``pairs``,
-    cluster_id = min doc_id of the component. Raises ValueError when
-    ``max_iter`` rounds end before a fixpoint (the labels would be a
-    partial propagation, not components).
-    """
-    # Row-local symmetrization: each pair emits both orientations via
-    # one explode — the former two-branch union evaluated the upstream
-    # pair pipeline (often the whole MinHash/LSH/verify cascade) twice
-    # past its reused exchanges.
-    edges = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-                F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
-            )
-        ).alias("_e")
-    ).select("_e.src", "_e.dst")
-    edges = edges.localCheckpoint(eager=True)
-    labels = (
-        edges.select(F.col("src").alias("id")).distinct().withColumn("label", F.col("id"))
-    )
-    for _ in range(max_iter):
-        nbr = edges.join(labels, edges["dst"] == labels["id"]).select(
-            F.col("src").alias("id"), "label"
-        )
-        new_labels = (
-            nbr.unionByName(labels)
-            .groupBy("id")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        raise ValueError(
-            f"connected_components: labels still changing after max_iter={max_iter}"
-        )
-    return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
-
-
-def connected_components_star(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
-    """Connected components by alternating large-star/small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC 2014) — the O(log n)-round algorithm for graphs with HUGE
-    components, where min-label propagation's O(diameter) rounds are
-    the bottleneck. Same contract as connected_components:
-    (doc_id, cluster_id = component min) for every node in ``pairs``.
-
-    Per round (all bounded-key shuffles):
-      large-star: every node links its strictly-larger neighbors to
-        the minimum of its closed neighborhood;
-      small-star: every node links its smaller-or-equal neighbors
-        (and itself) to that minimum.
-    Each phase strictly lowers edge endpoints toward component minima;
-    at fixpoint the edge set IS the star {(root, v)}. Convergence is
-    detected by an order-independent edge-set fingerprint (sum of
-    per-edge hashes + count) — one tiny aggregate per round. Raises
-    ValueError when ``max_iter`` rounds end before that fixpoint.
-    """
-    E = (
-        pairs.select(
-            F.least("id_a", "id_b").alias("a"), F.greatest("id_a", "id_b").alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def fingerprint(edges: DataFrame):
-        row = edges.agg(
-            F.count("*").alias("n"),
-            # decimal sum: long hashes overflow an ANSI bigint sum
-            F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")).alias("h"),
-        ).first()
-        return (row["n"], row["h"])
-
-    def star(edges: DataFrame, large: bool) -> DataFrame:
-        nbrs = edges.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
-            edges.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-        mins = nbrs.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        joined = nbrs.join(mins, "u")
-        cond = (F.col("v") > F.col("u")) if large else (F.col("v") <= F.col("u"))
-        emitted = joined.filter(cond).select(F.col("v").alias("x"), F.col("m"))
-        if not large:
-            emitted = emitted.unionAll(mins.select(F.col("u").alias("x"), F.col("m")))
-        return (
-            emitted.filter(F.col("x") != F.col("m"))
-            .select(F.least("x", "m").alias("a"), F.greatest("x", "m").alias("b"))
-            .distinct()
-        )
-
-    fp = fingerprint(E)
-    for _ in range(max_iter):
-        E = star(E, large=True).localCheckpoint(eager=True)
-        E = star(E, large=False).localCheckpoint(eager=True)
-        new_fp = fingerprint(E)
-        if new_fp == fp:
-            break
-        fp = new_fp
-    else:
-        raise ValueError(
-            f"connected_components_star: edges still changing after max_iter={max_iter}"
-        )
-    # At fixpoint every edge is (root, member); roots label themselves.
-    members = E.select(F.col("b").alias("doc_id"), F.col("a").alias("cluster_id"))
-    roots = E.select(F.col("a").alias("doc_id"), F.col("a").alias("cluster_id")).distinct()
-    return members.unionByName(roots).distinct()
-
-
 def dup_clusters(
     docs: DataFrame, threshold: float = 0.7, pairs: DataFrame | None = None
 ) -> DataFrame:
-    """X2f end-to-end: verified near-dup pairs → connected components.
-    Deterministic because the pair set is (exact Jaccard ≥ t decides).
+    """X2f end-to-end: verified near-dup pairs → connected components
+    (graph.connected_components). Deterministic because the pair set is (exact Jaccard ≥ t decides).
 
     ``pairs`` accepts a precomputed verified pair set (id_a, id_b) so a
     pipeline that already ran near_dup_pairs doesn't re-derive the
     MinHash/LSH/verify stream (mirrors shingle_pairs_jaccard's
     ``candidates=``). Default (None) computes it from ``docs``."""
+    from finance_data_pipeline_spark.extensions.graph import connected_components
+
     if pairs is None:
         pairs = near_dup_pairs(docs, threshold=threshold)
     return connected_components(pairs.select("id_a", "id_b"))

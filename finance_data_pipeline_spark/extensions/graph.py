@@ -1,4 +1,9 @@
-"""Graph centrality over entity graphs (SURVEY.md §2.11 extension).
+"""Vertex programs over entity graphs (SURVEY.md §2.11 extension):
+PageRank and personalized PageRank, triangle counts, k-core peeling,
+label propagation and connected components. Pairs become directed
+edges through one row-local symmetrization (_symmetric), and every
+per-round edge ⋈ vertex-vector join goes through one broadcast gate
+(_vector_join).
 
 PageRank is the corpus-curation centrality signal: web-scale pretraining
 pipelines rank hosts/pages by link centrality to drive crawl frontiers
@@ -26,10 +31,46 @@ from finance_data_pipeline_spark.extensions.dedup import _spread
 # counts never reach it, and iters ≫ 6 still cannot stack deep plans.
 _CHECKPOINT_EVERY = 6
 
-# Bytes per row of pagerank's per-round (src, q) vector as Spark's
-# planner sizes it (8-byte row header + two longs) — what its
-# broadcast gate compares against spark.sql.autoBroadcastJoinThreshold.
+# Bytes per row of a per-round vertex vector (node, value) as Spark's
+# planner sizes it: an 8-byte row header plus two longs. _vector_join's
+# broadcast gate compares N rows of it against
+# spark.sql.autoBroadcastJoinThreshold.
 _VECTOR_ROW_BYTES = 24
+
+
+def _symmetric(pairs: DataFrame, a: str, b: str) -> DataFrame:
+    """(src, dst) in both orientations of every (a, b) row of
+    ``pairs``. Row-local: one explode of a two-struct array reads the
+    upstream pipeline once, where a two-branch union would evaluate it
+    twice past its reused exchanges; the row multiset is the union's."""
+    return pairs.select(
+        F.explode(
+            F.array(
+                F.struct(F.col(a).alias("src"), F.col(b).alias("dst")),
+                F.struct(F.col(b).alias("src"), F.col(a).alias("dst")),
+            )
+        ).alias("_e")
+    ).select("_e.src", "_e.dst")
+
+
+def _vector_join(
+    frame: DataFrame, vec: DataFrame, on: str, n_nodes: int, how: str = "inner"
+) -> DataFrame:
+    """``frame`` joined to a per-round vertex vector ``vec`` of at most
+    ``n_nodes`` rows — the one join every vertex loop runs per round.
+
+    Broadcast gate: ``vec`` is broadcast when n_nodes ×
+    _VECTOR_ROW_BYTES fits the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` (-1 turns it off) — at the
+    10 MB default that is up to ~437,000 nodes. Then the round moves
+    only the vertex vector and ``frame`` (the materialized edge list,
+    or the N-row node frame) stays where it is (the Pregel/GraphX
+    rule). Above the threshold the same plan runs the planner's own
+    join, which shuffles ``frame`` every round."""
+    conf = frame.sparkSession._jsparkSession.sessionState().conf()
+    if n_nodes * _VECTOR_ROW_BYTES <= conf.autoBroadcastJoinThreshold():
+        vec = F.broadcast(vec)
+    return frame.join(vec, on, how)
 
 
 def pagerank(
@@ -64,31 +105,30 @@ def triangles(pairs: DataFrame, a: str = "id_a", b: str = "id_b") -> DataFrame:
 
     Returns (node, n_triangles) for nodes in at least one triangle.
 
-    Materialization seams: the deduped pair set and the oriented edge
-    frame are localCheckpoint()ed — ``und`` is consumed twice (both
-    directions of ``sym``) and ``e`` three times (both wedge sides plus
-    the closing join), and without the seams Catalyst re-derives the
-    ENTIRE upstream pipeline (e.g. the MinHash/LSH near-dup cascade)
-    once per reference: the static plan for dup_triangles was 265
-    shuffles before, ~10 after. The edge list of a similarity graph is
-    orders of magnitude smaller than the corpus it came from, so
-    materializing it is the same safe trade pagerank() and the
-    fixed-point Lloyd trainer make.
+    Materialization seams: the symmetrized pair set and the oriented
+    edge frame are localCheckpoint()ed — ``sym`` is consumed twice (the
+    degrees and the orientation join) and ``e`` three times (both wedge
+    sides plus the closing join), and without the seams Catalyst
+    re-derives the ENTIRE upstream pipeline (e.g. the MinHash/LSH
+    near-dup cascade) once per reference: the static plan for
+    dup_triangles was 265 shuffles before, ~10 after. The edge list of
+    a similarity graph is orders of magnitude smaller than the corpus
+    it came from, so materializing it is the same safe trade pagerank()
+    and the fixed-point Lloyd trainer make.
     """
-    und = pairs.select(F.col(a).alias("u"), F.col(b).alias("v")).distinct().localCheckpoint()
-    sym = und.union(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = sym.groupBy("u").agg(F.count("*").alias("d"))
+    sym = _symmetric(pairs.select(a, b).distinct(), a, b).localCheckpoint()
+    deg = sym.groupBy("src").agg(F.count("*").alias("d"))
     # orient by (degree, id): u→v iff (d_u, u) < (d_v, v)
     e = (
-        sym.join(deg, "u")
+        sym.join(deg, "src")
         .join(
-            deg.select(F.col("u").alias("v"), F.col("d").alias("dv")), "v"
+            deg.select(F.col("src").alias("dst"), F.col("d").alias("dv")), "dst"
         )
         .filter(
             (F.col("d") < F.col("dv"))
-            | ((F.col("d") == F.col("dv")) & (F.col("u") < F.col("v")))
+            | ((F.col("d") == F.col("dv")) & (F.col("src") < F.col("dst")))
         )
-        .select("u", "v", "d", "dv")
+        .select(F.col("src").alias("u"), F.col("dst").alias("v"), "d", "dv")
         .localCheckpoint()
     )
     e1 = e.select(F.col("u").alias("x"), F.col("v").alias("y"), F.col("dv").alias("dy"))
@@ -135,34 +175,28 @@ def kcore(
     pagerank's fixed iterations and the Lloyd trainer); peeling
     removes at least one node per non-converged round inside any
     finite component, and the semantics tests assert the default has
-    converged on the test graphs. Per-round localCheckpoint truncates
-    lineage — degrees and the edge filter are re-aggregated from the
-    materialized edge list (tiny next to the corpus), never re-derived
-    through the upstream pipeline (the dup_triangles lesson).
+    converged on the test graphs. The symmetrized edge list and every
+    round's survivors are localCheckpoint()ed, so degrees and the edge
+    filter are re-aggregated from the materialized edge list (tiny next
+    to the corpus), never re-derived through the upstream pipeline (the
+    dup_triangles lesson).
     """
-    edges = (
-        pairs.select(F.col(a).alias("u"), F.col(b).alias("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    edges = edges.union(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint()
+    edges = _symmetric(pairs.select(a, b).distinct(), a, b).localCheckpoint()
     for _ in range(rounds):
         keep = (
-            edges.groupBy("u")
+            edges.groupBy("src")
             .agg(F.count("*").alias("d"))
             .filter(F.col("d") >= k)
-            .select("u")
+            .select("src")
         )
         edges = (
-            edges.join(keep, "u")
-            .join(keep.select(F.col("u").alias("v")), "v")
+            edges.join(keep, "src")
+            .join(keep.select(F.col("src").alias("dst")), "dst")
             .localCheckpoint()
         )
-    return edges.groupBy("u").agg(
+    return edges.groupBy("src").agg(
         F.count("*").cast("long").alias("core_degree")
-    ).select(F.col("u").alias("node"), "core_degree")
+    ).select(F.col("src").alias("node"), "core_degree")
 
 
 def label_propagation(
@@ -173,7 +207,7 @@ def label_propagation(
 ) -> DataFrame:
     """Synchronous frequency label propagation over an undirected pair
     graph — community detection that, unlike connected components
-    (dedup.connected_components: min-label flood = one community per
+    (connected_components: min-label flood = one community per
     component), splits a component along its dense regions: each node
     repeatedly adopts the label held by the MOST of its neighbors. On
     the near-dup graph this separates two template farms that a single
@@ -189,44 +223,37 @@ def label_propagation(
     every node in a pair graph has degree ≥ 1, so the argmax is
     always defined.
 
-    Scale shape per round: one shuffle join of the edge list against
-    the N-row label vector (keyed on the neighbor endpoint), one
-    map-side-combined (node, label) count, and one per-node window
-    whose partition size is bounded by the node's degree — never by
-    graph size. The symmetrized edge list is localCheckpoint()ed once
-    up front so `rounds` iterations re-read a materialized frame
-    instead of re-deriving the upstream near-dup cascade per round
-    (the dup_triangles lesson). Rounds CHAIN LAZILY — each round
-    references the previous label vector exactly once, so the former
-    per-round eager localCheckpoint (one blocking job per round) is
-    pure overhead (pagerank's r9 lesson, guide §2.4/§1.2); a
-    localCheckpoint every _CHECKPOINT_EVERY rounds bounds lineage for
-    rounds ≫ the default.
+    Scale shape per round: the N-row label vector is joined to the
+    edge list on the neighbor endpoint through _vector_join (broadcast
+    while it fits the gate, so the edge list stays put), then one
+    map-side-combined (node, label) count and one per-node window whose
+    partition size is bounded by the node's degree — never by graph
+    size. The symmetrized edge list and the initial label vector are
+    localCheckpoint()ed once up front, so `rounds` iterations re-read a
+    materialized frame instead of re-deriving the upstream near-dup
+    cascade per round (the dup_triangles lesson), and N is one count of
+    the checkpointed labels. Rounds CHAIN LAZILY — each round references
+    the previous label vector exactly once, so the former per-round
+    eager localCheckpoint (one blocking job per round) is pure overhead
+    (pagerank's r9 lesson, guide §2.4/§1.2); a localCheckpoint every
+    _CHECKPOINT_EVERY rounds bounds lineage for rounds ≫ the default.
 
     Returns (node, community) for every node in the pair graph.
     """
-    # Row-local symmetrization (explode) — one pass over the upstream
-    # pair pipeline instead of two union branches.
-    sym = _spread(
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(a).alias("u"), F.col(b).alias("v")),
-                    F.struct(F.col(b).alias("u"), F.col(a).alias("v")),
-                )
-            ).alias("_e")
-        ).select("_e.u", "_e.v")
-    ).localCheckpoint()
+    sym = _spread(_symmetric(pairs, a, b)).localCheckpoint()
     labels = (
-        sym.select(F.col("u").alias("node"))
+        sym.select(F.col("src").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("lbl"))
         .localCheckpoint()
     )
+    n_nodes = labels.count()
     for i in range(rounds):
         votes = (
-            sym.join(labels, sym["v"] == labels["node"])
-            .select(F.col("u").alias("node"), "lbl")
+            _vector_join(
+                sym, labels.select(F.col("node").alias("dst"), "lbl"), "dst", n_nodes
+            )
+            .select(F.col("src").alias("node"), "lbl")
             .groupBy("node", "lbl")
             .agg(F.count("*").alias("c"))
         )
@@ -239,6 +266,132 @@ def label_propagation(
         if (i + 1) % _CHECKPOINT_EVERY == 0 and (i + 1) < rounds:
             labels = labels.localCheckpoint()
     return labels.select("node", F.col("lbl").alias("community"))
+
+
+def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
+    """Connected components over an undirected (id_a, id_b) pair graph
+    by min-label propagation: every node repeatedly adopts the smallest
+    label among itself and its neighbors until fixpoint. Converges in
+    O(diameter) rounds — near-dup clusters are shallow (dense cliques
+    chained by a few bridges), so a handful of rounds suffice;
+    ``max_iter`` bounds adversarial chains.
+
+    Scale shape per round: the N-row label vector is joined to the
+    materialized edge list through _vector_join (broadcast while it
+    fits the gate, so the edges stay put), and ONE min-aggregate per
+    node yields both the new label and the old one — the union carries
+    each node's own label, so the min of the own-label rows is the
+    label it held. The round's frame is localCheckpoint()ed (cutting
+    the iterative lineage; at cluster scale, use
+    ``spark.sparkContext.setCheckpointDir`` + ``checkpoint`` for
+    fault-tolerant truncation), and the driver decides convergence from
+    a filter on it — no second join against the previous labels. N is
+    one count of the checkpointed initial labels. For graphs with huge
+    components the O(log n)-round connected_components_star drops in
+    with the same (id, label) contract.
+
+    Returns (doc_id, cluster_id) for every node appearing in ``pairs``,
+    cluster_id = min doc_id of the component. Raises ValueError when
+    ``max_iter`` rounds end before a fixpoint (the labels would be a
+    partial propagation, not components).
+    """
+    edges = _symmetric(pairs, "id_a", "id_b").localCheckpoint(eager=True)
+    labels = (
+        edges.select(F.col("src").alias("id"))
+        .distinct()
+        .withColumn("label", F.col("id"))
+        .localCheckpoint(eager=True)
+    )
+    n_nodes = labels.count()
+    for _ in range(max_iter):
+        nbr = _vector_join(
+            edges, labels.select(F.col("id").alias("dst"), "label"), "dst", n_nodes
+        ).select(F.col("src").alias("id"), "label", F.lit(False).alias("_own"))
+        step = (
+            nbr.unionByName(labels.withColumn("_own", F.lit(True)))
+            .groupBy("id")
+            .agg(
+                F.min("label").alias("label"),
+                F.min(F.when(F.col("_own"), F.col("label"))).alias("_old"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        labels = step.select("id", "label")
+        if step.filter(F.col("label") != F.col("_old")).isEmpty():
+            break
+    else:
+        raise ValueError(
+            f"connected_components: labels still changing after max_iter={max_iter}"
+        )
+    return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
+
+
+def connected_components_star(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
+    """Connected components by alternating large-star/small-star
+    (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    SoCC 2014) — the O(log n)-round algorithm for graphs with HUGE
+    components, where min-label propagation's O(diameter) rounds are
+    the bottleneck. Same contract as connected_components:
+    (doc_id, cluster_id = component min) for every node in ``pairs``.
+
+    Per round (all bounded-key shuffles):
+      large-star: every node links its strictly-larger neighbors to
+        the minimum of its closed neighborhood;
+      small-star: every node links its smaller-or-equal neighbors
+        (and itself) to that minimum.
+    Each phase strictly lowers edge endpoints toward component minima;
+    at fixpoint the edge set IS the star {(root, v)}. Convergence is
+    detected by an order-independent edge-set fingerprint (sum of
+    per-edge hashes + count) — one tiny aggregate per round. Raises
+    ValueError when ``max_iter`` rounds end before that fixpoint.
+    """
+    E = (
+        pairs.select(
+            F.least("id_a", "id_b").alias("a"), F.greatest("id_a", "id_b").alias("b")
+        )
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+    def fingerprint(edges: DataFrame):
+        row = edges.agg(
+            F.count("*").alias("n"),
+            # decimal sum: long hashes overflow an ANSI bigint sum
+            F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")).alias("h"),
+        ).first()
+        return (row["n"], row["h"])
+
+    def star(edges: DataFrame, large: bool) -> DataFrame:
+        nbrs = _symmetric(edges, "a", "b")
+        mins = nbrs.groupBy("src").agg(F.least(F.min("dst"), F.first("src")).alias("m"))
+        joined = nbrs.join(mins, "src")
+        cond = (F.col("dst") > F.col("src")) if large else (F.col("dst") <= F.col("src"))
+        emitted = joined.filter(cond).select(F.col("dst").alias("x"), F.col("m"))
+        if not large:
+            emitted = emitted.unionAll(mins.select(F.col("src").alias("x"), F.col("m")))
+        return (
+            emitted.filter(F.col("x") != F.col("m"))
+            .select(F.least("x", "m").alias("a"), F.greatest("x", "m").alias("b"))
+            .distinct()
+        )
+
+    fp = fingerprint(E)
+    for _ in range(max_iter):
+        E = star(E, large=True).localCheckpoint(eager=True)
+        E = star(E, large=False).localCheckpoint(eager=True)
+        new_fp = fingerprint(E)
+        if new_fp == fp:
+            break
+        fp = new_fp
+    else:
+        raise ValueError(
+            f"connected_components_star: edges still changing after max_iter={max_iter}"
+        )
+    # At fixpoint every edge is (root, member); roots label themselves.
+    members = E.select(F.col("b").alias("doc_id"), F.col("a").alias("cluster_id"))
+    roots = E.select(F.col("a").alias("doc_id"), F.col("a").alias("cluster_id")).distinct()
+    return members.unionByName(roots).distinct()
 
 
 def personalized_pagerank(
@@ -282,8 +435,11 @@ def personalized_pagerank(
     N-row vector — ``q = r div deg`` per node with out-degree > 0, the
     integer each of that node's out-edges contributes — joins it to
     the materialized edge list on src, sums the contributions
-    into dst (map-side combined) and left-joins the sums back onto the
-    nodes. Rounds CHAIN LAZILY — each round references the previous
+    into dst (map-side combined) and left-joins the at most N sums back
+    onto the nodes. Both joins go through _vector_join, so while N fits
+    its broadcast gate no round shuffles the edge list or the node
+    frame; above the gate both run the planner's shuffle join. Rounds
+    CHAIN LAZILY — each round references the previous
     rank vector exactly once, so the plan grows linearly, and running
     all rounds as ONE job lets the scheduler pipeline stages instead
     of paying a blocking materialization barrier per round (guide
@@ -298,14 +454,6 @@ def personalized_pagerank(
     Overflow headroom: Σ contribs ≤ N·scale and the damping multiply
     stays < 2^63 while N·scale·damping_pct < 9.2e18 — at scale=1e9
     that is ~10⁸ nodes; shrink ``scale`` for larger graphs.
-
-    Broadcast gate: the per-round vector (src, q) is broadcast when
-    N × _VECTOR_ROW_BYTES fits the session's
-    ``spark.sql.autoBroadcastJoinThreshold`` (-1 turns it off) — at
-    the 10 MB default that is N up to ~437,000 nodes. Then no round
-    shuffles the edge list. Above the threshold the same plan runs
-    the planner's own join, which shuffles the E-row edge list to
-    meet the vector every round.
     """
     # The edge list is materialized ONCE up front (guide §1.2 — don't
     # compute things twice): nd and the seed set are eager
@@ -369,8 +517,6 @@ def personalized_pagerank(
         )
     if seeds is not None:
         base = base.localCheckpoint()
-    conf = edges.sparkSession._jsparkSession.sessionState().conf()
-    broadcast = n_nodes * _VECTOR_ROW_BYTES <= conf.autoBroadcastJoinThreshold()
     teleport = ((100 - damping_pct) * scale // 100) // n_seeds
 
     ranks = base.select(
@@ -382,11 +528,11 @@ def personalized_pagerank(
             F.col("node").alias("src"), F.expr("r div deg").alias("q")
         )
         sums = (
-            ed.join(F.broadcast(vec) if broadcast else vec, "src")
+            _vector_join(ed, vec, "src", n_nodes)
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("q").alias("s"))
         )
-        ranks = base.join(sums, "node", "left").select(
+        ranks = _vector_join(base, sums, "node", n_nodes, "left").select(
             "node",
             "deg",
             (

@@ -34,6 +34,7 @@ from finance_data_pipeline_spark import functions as fx
 from finance_data_pipeline_spark.extensions import (
     chunking,
     dedup,
+    graph,
     multimodal,
     sampling,
     similarity,
@@ -3190,7 +3191,7 @@ def q_dup_clusters_star(spark, sf_dir):
     path) instead of min-label propagation (O(diameter)); both held to
     the identical transitive-closure oracle."""
     pairs = dedup.near_dup_pairs(table(spark, sf_dir, "documents"), threshold=0.7)
-    return dedup.connected_components_star(pairs.select("id_a", "id_b"))
+    return graph.connected_components_star(pairs.select("id_a", "id_b"))
 
 
 @query(
@@ -4215,6 +4216,24 @@ def q_ann_topk_pq_rerank(spark, sf_dir):
     return similarity.ann_topk_pq_rerank(vecs, vecs.filter(F.col("vec_id") < 5))
 
 
+def _trade_edges(spark, sf_dir):
+    """The symmetrized supplier↔customer trade graph of the pagerank
+    queries: distinct lineitem⋈orders pairs, suppliers on even node ids
+    (2·suppkey) and customers on odd ones (2·custkey + 1), each pair in
+    both orientations as (src, dst)."""
+    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    e0 = (
+        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
+        .select(
+            (F.col("l_suppkey") * 2).alias("s"),
+            (F.col("o_custkey") * 2 + 1).alias("c"),
+        )
+        .distinct()
+    )
+    return graph._symmetric(e0, "s", "c")
+
+
 def _pr_round(prev: str) -> str:
     """One integer-PageRank round over CTEs edges/deg/nodes/params."""
     return f"""SELECT n.node,
@@ -4256,30 +4275,7 @@ def q_supplier_customer_pagerank(spark, sf_dir):
     computation of crawl pipelines, held to a full 5-round SQL replay —
     possible because every division is integer floor division. See
     graph.pagerank."""
-    from finance_data_pipeline_spark.extensions import graph
-
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    e0 = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .select(
-            (F.col("l_suppkey") * 2).alias("s"),
-            (F.col("o_custkey") * 2 + 1).alias("c"),
-        )
-        .distinct()
-    )
-    # Row-local symmetrization (explode of both orientations) — the
-    # former union of two e0 branches evaluated the distinct-join
-    # subtree twice past its reused exchange; identical row multiset.
-    edges = e0.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("s").alias("src"), F.col("c").alias("dst")),
-                F.struct(F.col("c").alias("src"), F.col("s").alias("dst")),
-            )
-        ).alias("_e")
-    ).select("_e.src", "_e.dst")
-    pr = graph.pagerank(edges, iters=5)
+    pr = graph.pagerank(_trade_edges(spark, sf_dir), iters=5)
     # Tie-break on the raw node id (NOT entity_key: supplier 2k and
     # customer 2k+1 share an entity_key) so the top-20 SET matches the
     # oracle's ORDER BY r DESC, node cut exactly.
@@ -5405,8 +5401,6 @@ def q_dup_triangles(spark, sf_dir):
     finds each triangle exactly once with wedge streams bounded by
     m^1.5 — the scalable formulation, held to a full SQL oracle over
     the exact near-dup edge set."""
-    from finance_data_pipeline_spark.extensions import graph
-
     pairs = dedup.near_dup_pairs(
         table(spark, sf_dir, "documents"), threshold=0.7
     ).select("id_a", "id_b")
@@ -7751,8 +7745,6 @@ def q_dup_kcore(spark, sf_dir):
     closure worries about) peel away. Same determinism contract as
     pagerank: fixed rounds → exact SQL replay; per-round
     localCheckpoint keeps the plan linear (graph.kcore)."""
-    from finance_data_pipeline_spark.extensions import graph
-
     pairs = dedup.near_dup_pairs(
         table(spark, sf_dir, "documents"), threshold=0.7
     ).select("id_a", "id_b")
@@ -8027,8 +8019,6 @@ def q_label_prop_communities(spark, sf_dir):
     verified pair set is derived once (localCheckpoint seam, the
     dup_triangles lesson) and the oracle replays the identical three
     rounds as unrolled SQL. See graph.label_propagation."""
-    from finance_data_pipeline_spark.extensions import graph
-
     pairs = dedup.near_dup_pairs(
         table(spark, sf_dir, "documents"), threshold=0.7
     ).select("id_a", "id_b")
@@ -8688,27 +8678,7 @@ def q_personalized_pagerank(spark, sf_dir):
     suppliers" expansion. Integer fixed-point, full 5-round SQL
     replay; zero-rank nodes (unreached under floor division) are
     excluded on both sides. See graph.personalized_pagerank."""
-    from finance_data_pipeline_spark.extensions import graph
-
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    e0 = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .select(
-            (F.col("l_suppkey") * 2).alias("s"),
-            (F.col("o_custkey") * 2 + 1).alias("c"),
-        )
-        .distinct()
-    )
-    # Row-local symmetrization — see q_supplier_customer_pagerank.
-    edges = e0.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("s").alias("src"), F.col("c").alias("dst")),
-                F.struct(F.col("c").alias("src"), F.col("s").alias("dst")),
-            )
-        ).alias("_e")
-    ).select("_e.src", "_e.dst")
+    edges = _trade_edges(spark, sf_dir)
     seeds = (
         edges.select(F.col("src").alias("node"))
         .filter((F.col("node") % 2 == 0) & (F.expr("node div 2") <= 3))

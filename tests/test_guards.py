@@ -53,3 +53,88 @@ def test_registry_queries_use_the_returns_owners():
         assert source.count(oracle_return) == 1, (
             f"{oracle_return!r} is spelled outside its shared constant"
         )
+
+
+def _aliases(args):
+    """(source, name) source text of each ``<column>.alias(<name>)``
+    argument, or None when any argument is something else."""
+    out = []
+    for node in args:
+        if not (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "alias"
+            and len(node.args) == 1
+        ):
+            return None
+        out.append((ast.unparse(node.func.value), ast.unparse(node.args[0])))
+    return out
+
+
+def _symmetrizations(tree: ast.AST):
+    """Hand-written "both orientations" of a pair: ``struct(a AS src, b
+    AS dst)`` next to ``struct(b AS src, a AS dst)``, the union form's
+    ``select(a AS u, b AS v)`` next to ``select(b AS u, a AS v)``, or
+    its swapped branch ``select(col(v) AS u, col(u) AS v)`` alone.
+    Yields the enclosing function's name and the line."""
+    for func in ast.walk(tree):
+        if not isinstance(func, ast.FunctionDef):
+            continue
+        seen = {}
+        for node in ast.walk(func):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("struct", "select")
+                and len(node.args) == 2
+            ):
+                continue
+            pair = _aliases(node.args)
+            if pair is None:
+                continue
+            (s1, n1), (s2, n2) = pair
+            kind = node.func.attr
+            swapped = (kind, ((s2, n1), (s1, n2)))
+            if s1 != s2 and swapped in seen:
+                yield func.name, seen[swapped]
+            elif kind == "select" and (s1, s2) == (f"F.col({n2})", f"F.col({n1})"):
+                yield func.name, node.lineno
+            seen[(kind, tuple(pair))] = node.lineno
+
+
+def test_graph_loops_use_the_vertex_loop_owners():
+    """Emitting both orientations of a pair has one owner,
+    graph._symmetric, and the vertex-vector broadcast gate has one,
+    graph._vector_join: a hand-written symmetrization or a second read
+    of spark.sql.autoBroadcastJoinThreshold is a graph loop that can
+    drift from the rule every other loop follows."""
+    found = sorted(
+        {
+            f"{rel}:{line}"
+            for rel in ("extensions/graph.py", "extensions/dedup.py", "registry.py")
+            for name, line in _symmetrizations(ast.parse((PACKAGE / rel).read_text()))
+            if (rel, name) != ("extensions/graph.py", "_symmetric")
+        }
+    )
+    assert not found, f"pairs symmetrized outside graph._symmetric: {found}"
+    readers = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        owner = {
+            id(node)
+            for func in ast.walk(tree)
+            if isinstance(func, ast.FunctionDef) and func.name == "_vector_join"
+            for node in ast.walk(func)
+        }
+        rel = str(path.relative_to(PACKAGE))
+        for node in ast.walk(tree):
+            reads = (
+                isinstance(node, ast.Attribute)
+                and node.attr == "autoBroadcastJoinThreshold"
+            ) or (
+                isinstance(node, ast.Constant)
+                and node.value == "spark.sql.autoBroadcastJoinThreshold"
+            )
+            if reads and not (rel == "extensions/graph.py" and id(node) in owner):
+                readers.append(f"{rel}:{node.lineno}")
+    assert not readers, f"autoBroadcastJoinThreshold read outside graph._vector_join: {readers}"

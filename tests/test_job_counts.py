@@ -10,21 +10,25 @@ runs: before the rank loop and the Lloyd trainer were each folded into
 one implementation, before the decontamination operators moved onto
 the shared shingle-hash and benchmark-split definitions, before the
 bar fixtures were memoized, before the return-based queries moved onto
-the shared returns owners, and, for ``ivf_topk`` (8 cells, 2 probes,
-2 Lloyd rounds), the count of ``ivf_topk_deterministic`` with the same
-arguments before the two IVF paths were merged into one. A change that
-adds an eager job or an AQE query stage to one of these kernels fails
-here.
+the shared returns owners, before the graph loops moved onto one
+symmetrization and one gated vertex-vector join (the graph kernels run
+on the sf0.001 near-dup pair set, collected once into a local frame),
+and, for ``ivf_topk`` (8 cells, 2 probes, 2 Lloyd rounds), the count of
+``ivf_topk_deterministic`` with the same arguments before the two IVF
+paths were merged into one. A change that adds an eager job or an AQE
+query stage to one of these kernels fails here.
 """
 
 from __future__ import annotations
+
+import functools
 
 import pytest
 from pyspark.sql import functions as F
 
 from finance_data_pipeline_spark.extensions import dedup, graph, similarity
 from finance_data_pipeline_spark.io import table
-from finance_data_pipeline_spark.registry import QUERIES
+from finance_data_pipeline_spark.registry import QUERIES, _trade_edges
 from tests.conftest import SF_SMALL as SF_DIR
 from tests.conftest import spark_jobs
 
@@ -36,12 +40,17 @@ _MAX_JOBS = {
     "pq_codebooks": 15,
     "bloom_decontaminate": 11,
     "decontaminate": 8,
+    "connected_components": 23,
+    "label_propagation": 16,
+    "kcore": 25,
+    "triangles": 13,
 }
 
-# Registry queries over the daily and hourly bar fixtures: ma_warmup
+# Registry queries: over the daily and hourly bar fixtures, ma_warmup
 # and sma measured before the fixtures were memoized, the return-based
 # queries before their returns, exact sums and market return moved onto
-# one owner each (highest of 3 runs).
+# one owner each; the near-dup graph queries before the graph loops
+# moved onto one symmetrization and one gated join (highest of 3 runs).
 _MAX_QUERY_JOBS = {
     "ma_warmup": 4,
     "sma": 4,
@@ -50,34 +59,25 @@ _MAX_QUERY_JOBS = {
     "rolling_beta_30": 5,
     "var_cvar_95": 8,
     "volatility_30": 2,
+    "dup_clusters": 34,
+    "label_prop_communities": 28,
 }
 
 
-def _edges(spark):
-    """The symmetrized supplier↔customer trade graph of the registry's
-    pagerank queries."""
-    li = table(spark, SF_DIR, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = table(spark, SF_DIR, "orders").select("o_orderkey", "o_custkey")
-    e0 = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .select(
-            (F.col("l_suppkey") * 2).alias("s"),
-            (F.col("o_custkey") * 2 + 1).alias("c"),
-        )
-        .distinct()
+@functools.cache
+def _dup_pairs(spark):
+    """The sf0.001 near-dup pair set as a local frame, so a graph
+    kernel's count holds only its own jobs."""
+    rows = (
+        dedup.near_dup_pairs(table(spark, SF_DIR, "documents"), threshold=0.7)
+        .select("id_a", "id_b")
+        .collect()
     )
-    return e0.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("s").alias("src"), F.col("c").alias("dst")),
-                F.struct(F.col("c").alias("src"), F.col("s").alias("dst")),
-            )
-        ).alias("_e")
-    ).select("_e.src", "_e.dst")
+    return spark.createDataFrame(rows, "id_a long, id_b long")
 
 
 def _personalized(spark):
-    edges = _edges(spark)
+    edges = _trade_edges(spark, SF_DIR)
     seeds = (
         edges.select(F.col("src").alias("node"))
         .filter((F.col("node") % 2 == 0) & (F.expr("node div 2") <= 3))
@@ -95,7 +95,7 @@ def _ivf(spark):
 
 
 _KERNELS = {
-    "pagerank": lambda spark: graph.pagerank(_edges(spark)),
+    "pagerank": lambda spark: graph.pagerank(_trade_edges(spark, SF_DIR)),
     "personalized_pagerank": _personalized,
     "kmeans_centroids": lambda spark: similarity.kmeans_centroids(
         table(spark, SF_DIR, "embeddings")
@@ -110,11 +110,18 @@ _KERNELS = {
     "decontaminate": lambda spark: dedup.decontaminate(
         table(spark, SF_DIR, "documents")
     ),
+    "connected_components": lambda spark: graph.connected_components(
+        _dup_pairs(spark)
+    ),
+    "label_propagation": lambda spark: graph.label_propagation(_dup_pairs(spark)),
+    "kcore": lambda spark: graph.kcore(_dup_pairs(spark)),
+    "triangles": lambda spark: graph.triangles(_dup_pairs(spark)),
 }
 
 
 @pytest.mark.parametrize("name", sorted(_MAX_JOBS))
 def test_kernel_job_count_does_not_grow(spark, name):
+    _dup_pairs(spark)  # collected before the count starts
     rows, jobs = spark_jobs(spark, name, lambda: _KERNELS[name](spark).collect())
     assert rows
     assert jobs <= _MAX_JOBS[name], (
@@ -124,8 +131,9 @@ def test_kernel_job_count_does_not_grow(spark, name):
 
 @pytest.mark.parametrize("name", sorted(_MAX_QUERY_JOBS))
 def test_fixture_query_job_count_does_not_grow(spark, name):
-    """A registry query over the memoized bar fixtures, built and
-    collected once the memo is warm, as on a dashboard's second chart."""
+    """A registry query built and collected a second time: for the
+    queries over the memoized bar fixtures, once the memo is warm, as
+    on a dashboard's second chart."""
     QUERIES[name](spark, SF_DIR).collect()
     rows, jobs = spark_jobs(spark, name, lambda: QUERIES[name](spark, SF_DIR).collect())
     assert rows

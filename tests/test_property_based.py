@@ -177,7 +177,7 @@ def test_containment_self_and_bounds(spark, texts):
 def test_star_cc_equals_label_propagation(spark, edges):
     """Property: large-star/small-star and min-label propagation agree
     on every random graph — same nodes, same component minima."""
-    from finance_data_pipeline_spark.extensions.dedup import (
+    from finance_data_pipeline_spark.extensions.graph import (
         connected_components,
         connected_components_star,
     )

@@ -745,12 +745,14 @@ def test_pagerank_mass_bounds(spark):
     assert sum(r.rank_scaled for r in out) <= scale
 
 
-def test_pagerank_broadcast_gate_open_and_closed(spark):
-    """Both sides of the vertex-vector broadcast gate: under the session
-    default the per-round vector is broadcast (one BroadcastExchange per
-    round), with spark.sql.autoBroadcastJoinThreshold=-1 the same rounds
-    run the planner's shuffle join — and both return the same integer
-    ranks, for pagerank and personalized_pagerank."""
+def test_pagerank_broadcast_gate_open_and_closed(spark, monkeypatch):
+    """Both sides of the vertex-vector broadcast gate for every kernel
+    whose rounds join through graph._vector_join — pagerank,
+    personalized_pagerank, label_propagation and connected_components:
+    under the session default every such join broadcasts its vector,
+    with spark.sql.autoBroadcastJoinThreshold=-1 none does and the
+    rounds run the planner's shuffle join — and both sides return the
+    same rows."""
     from finance_data_pipeline_spark import plans
     from finance_data_pipeline_spark.extensions import graph
 
@@ -758,29 +760,55 @@ def test_pagerank_broadcast_gate_open_and_closed(spark):
     rows = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 3), (4, 5)]
     edges = spark.createDataFrame(rows, "src long, dst long")
     seeds = spark.createDataFrame([(1,), (4,)], "node long")
+    # Two triangles bridged by 3-4, and a disjoint pair.
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6), (4, 6), (7, 8)],
+        "id_a long, id_b long",
+    )
+    # The broadcasts the returned frame's plan holds with the gate open:
+    # per pagerank round the (src, q) vector and the at most N sums, per
+    # label-propagation round the label vector. connected_components
+    # returns a localCheckpoint()ed frame, whose plan holds none.
     kernels = {
-        "pagerank": lambda: graph.pagerank(edges),
-        "personalized_pagerank": lambda: graph.personalized_pagerank(edges, seeds),
+        "pagerank": (lambda: graph.pagerank(edges), 10),
+        "personalized_pagerank": (
+            lambda: graph.personalized_pagerank(edges, seeds),
+            10,
+        ),
+        "label_propagation": (lambda: graph.label_propagation(pairs, rounds=3), 3),
+        "connected_components": (lambda: graph.connected_components(pairs), 0),
     }
+    joins = []
+    vector_join = graph._vector_join
+
+    def spy(*args, **kwargs):
+        out = vector_join(*args, **kwargs)
+        joins.append("BroadcastExchange" in plans.physical_plan(out))
+        return out
+
+    monkeypatch.setattr(graph, "_vector_join", spy)
 
     def run(build):
+        joins.clear()
         # Count on the built frame: once it has run, the adaptive plan
         # repeats query-stage subtrees.
         df = build()
-        return plans.broadcast_count(df), sorted(df.collect())
+        return list(joins), plans.broadcast_count(df), sorted(df.collect())
 
     key = "spark.sql.autoBroadcastJoinThreshold"
-    opened = {name: run(build) for name, build in kernels.items()}
+    opened = {name: run(build) for name, (build, _) in kernels.items()}
     old = spark.conf.get(key)
     spark.conf.set(key, "-1")
     try:
-        closed = {name: run(build) for name, build in kernels.items()}
+        closed = {name: run(build) for name, (build, _) in kernels.items()}
     finally:
         spark.conf.set(key, old)
-    for name in kernels:
-        assert opened[name][0] == 5, name
-        assert closed[name][0] == 0, name
-        assert opened[name][1] == closed[name][1], name
+    for name, (_, want_open) in kernels.items():
+        assert opened[name][0] and all(opened[name][0]), name
+        assert closed[name][0] and not any(closed[name][0]), name
+        assert opened[name][1] == want_open, name
+        assert closed[name][1] == 0, name
+        assert opened[name][2] == closed[name][2], name
 
 
 # --- weighted sampling / feature hashing ----------------------------------

@@ -11,7 +11,7 @@ import hashlib
 from pyspark.sql import functions as F
 
 from finance_data_pipeline_spark.extensions import graph, sampling, text
-from finance_data_pipeline_spark.extensions.dedup import connected_components
+from finance_data_pipeline_spark.extensions.graph import connected_components
 
 
 def _pairs(spark, edges):

@@ -193,7 +193,7 @@ def test_connected_components_chain_cliques_and_isolated_pair(spark):
     """Min-label propagation: a 4-node chain (diameter forces multiple
     rounds), a triangle clique, and a disjoint 2-node component must
     each collapse to their min-id label."""
-    from finance_data_pipeline_spark.extensions.dedup import connected_components
+    from finance_data_pipeline_spark.extensions.graph import connected_components
 
     pairs = spark.createDataFrame(
         # chain 10-11-12-13; triangle 20-21-22; pair 30-31
@@ -209,7 +209,7 @@ def test_connected_components_chain_cliques_and_isolated_pair(spark):
 def test_connected_components_long_chain_converges(spark):
     """A 12-node path needs ~diameter rounds; the label of the far end
     must still reach the min id within the iteration cap."""
-    from finance_data_pipeline_spark.extensions.dedup import connected_components
+    from finance_data_pipeline_spark.extensions.graph import connected_components
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(100, 112)], "id_a long, id_b long"
@@ -228,7 +228,7 @@ def _path_pairs(spark, n):
 def test_connected_components_raises_when_max_iter_runs_out(spark):
     """An 8-node path needs more than 2 propagation rounds: stopping
     there would leave node 7 outside cluster 0, so it must raise."""
-    from finance_data_pipeline_spark.extensions.dedup import connected_components
+    from finance_data_pipeline_spark.extensions.graph import connected_components
 
     with pytest.raises(ValueError, match="max_iter=2"):
         connected_components(_path_pairs(spark, 8), max_iter=2)
@@ -237,7 +237,7 @@ def test_connected_components_raises_when_max_iter_runs_out(spark):
 def test_connected_components_star_raises_when_max_iter_runs_out(spark):
     """One large-star/small-star round leaves an 8-node path's middle
     nodes in two clusters each, so it must raise."""
-    from finance_data_pipeline_spark.extensions.dedup import (
+    from finance_data_pipeline_spark.extensions.graph import (
         connected_components_star,
     )
 
