@@ -138,3 +138,31 @@ def test_graph_loops_use_the_vertex_loop_owners():
             if reads and not (rel == "extensions/graph.py" and id(node) in owner):
                 readers.append(f"{rel}:{node.lineno}")
     assert not readers, f"autoBroadcastJoinThreshold read outside graph._vector_join: {readers}"
+
+
+def test_parity_gates_use_the_parity_owners():
+    """The frame compare (``_canon``) and the DuckDB view over each
+    input table have one owner, tools/parity_compare.py; a copy in a
+    gate can drift from the value-hash compare. perfbench/ keeps its own
+    copy because the benchmark owns it."""
+    owner = PACKAGE.parent / "tools" / "parity_compare.py"
+    found = []
+    for path in sorted(
+        p for d in ("tools", "tests") for p in (PACKAGE.parent / d).glob("*.py")
+    ):
+        if path == owner:
+            continue
+        rel = path.relative_to(PACKAGE.parent)
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.FunctionDef) and node.name == "_canon":
+                found.append(f"{rel}:{node.lineno} _canon defined")
+            loops = (
+                [node.iter]
+                if isinstance(node, ast.For)
+                else [g.iter for g in getattr(node, "generators", ())]
+            )
+            if any("DRIVER_TABLES" in ast.unparse(it) for it in loops) and (
+                "CREATE VIEW" in ast.unparse(node)
+            ):
+                found.append(f"{rel}:{node.lineno} DRIVER_TABLES view loop")
+    assert not found, f"parity code outside tools/parity_compare.py: {found}"

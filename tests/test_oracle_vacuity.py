@@ -17,11 +17,10 @@ nations_customers_only is non-empty ONLY at sf0.001.
 
 from __future__ import annotations
 
-import duckdb
 import pandas as pd
 import pytest
 
-from finance_data_pipeline_spark.schemas import DRIVER_TABLES
+from tools.parity_compare import oracle_connection
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 
@@ -89,9 +88,7 @@ def sf_frames(request):
     from finance_data_pipeline_spark.registry import ORACLES
 
     sf_dir = request.param
-    con = duckdb.connect()
-    for t in DRIVER_TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = oracle_connection(sf_dir)
     return sf_dir, {name: con.sql(sql).df() for name, sql in ORACLES.items()}
 
 

@@ -16,9 +16,9 @@ zero, or a negative quantity rounding to zero at the output precision)
 must either be written in a sign-safe form (``williams_r`` uses
 ``100·(close − HH)`` instead of ``−100·(HH − close)``) or carry a
 terminal ``+ 0.0`` on BOTH engines (``force_index_eom`` does). The
-local parity comparator (tests/test_oracle_parity.py::_values_match)
-is signbit-sensitive so the pre-validation gate has the driver's
-sensitivity, not Python's.
+local parity comparator (tools/parity_compare.py: ``values_match`` per
+cell, ``mismatch`` per frame) is signbit-sensitive so the
+pre-validation gate is as strict as a byte-level value hash, not Python's ``==``.
 """
 
 from __future__ import annotations
@@ -26,8 +26,12 @@ from __future__ import annotations
 import math
 
 import duckdb
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+
+from tools.parity_compare import mismatch, values_match
 
 
 def _signbit(x: float) -> bool:
@@ -102,41 +106,84 @@ def test_parity_comparator_is_signbit_sensitive():
     is a mismatch (scalar and inside arrays), matching signs pass,
     NaN == NaN, and NULL/NaN sentinels are mutually equal (pandas
     erases the distinction differently per engine)."""
-    from tests.test_oracle_parity import _values_match
-
-    assert not _values_match(-0.0, 0.0)
-    assert not _values_match(0.0, -0.0)
-    assert _values_match(0.0, 0.0)
-    assert _values_match(-0.0, -0.0)
-    assert _values_match(1.5, 1.5)
-    assert not _values_match(1.5, 1.5000001)
+    assert not values_match(-0.0, 0.0)
+    assert not values_match(0.0, -0.0)
+    assert values_match(0.0, 0.0)
+    assert values_match(-0.0, -0.0)
+    assert values_match(1.5, 1.5)
+    assert not values_match(1.5, 1.5000001)
     nan = float("nan")
-    assert _values_match(nan, nan)
-    assert _values_match(None, None)
-    assert _values_match(None, nan) and _values_match(nan, None)
-    assert not _values_match(None, 0.0) and not _values_match(nan, 0.0)
+    assert values_match(nan, nan)
+    assert values_match(None, None)
+    assert values_match(None, nan) and values_match(nan, None)
+    assert not values_match(None, 0.0) and not values_match(nan, 0.0)
     # arrays: element-wise, not str() (str truncates long numpy arrays)
-    assert not _values_match([1.0, -0.0], [1.0, 0.0])
-    assert _values_match([1.0, -0.0], [1.0, -0.0])
-    assert not _values_match([1.0], [1.0, 2.0])
-    assert not _values_match([1.0], 1.0)
-    import numpy as np
-
+    assert not values_match([1.0, -0.0], [1.0, 0.0])
+    assert values_match([1.0, -0.0], [1.0, -0.0])
+    assert not values_match([1.0], [1.0, 2.0])
+    assert not values_match([1.0], 1.0)
     big_a = np.zeros(600)
     big_b = np.zeros(600)
     big_b[599] = 1e-12  # str() of both truncates to the same "[0. 0. ... 0.]"
-    assert not _values_match(big_a, big_b)
+    assert not values_match(big_a, big_b)
+
+
+_TS = pd.Series(pd.to_datetime(["2024-01-02", "2024-01-01"]))
+
+
+@pytest.mark.parametrize(
+    "got, want, error",
+    [
+        (pd.DataFrame({"a": [1, 2]}), pd.DataFrame({"a": [1, 2, 3]}), "rows"),
+        (pd.DataFrame({"a": [1], "b": [2]}), pd.DataFrame({"a": [1], "c": [2]}), "cols"),
+        (pd.DataFrame({"A": [1]}), pd.DataFrame({"a": [1]}), None),
+        # DuckDB sum() over integers is HUGEINT, materialized as float64
+        (pd.DataFrame({"n": [1, 2]}), pd.DataFrame({"n": [1.0, 2.0]}), "dtype-kind"),
+        (
+            pd.DataFrame({"s": ["x", None]}, dtype=object),
+            pd.DataFrame({"s": ["x", np.nan]}, dtype=object),
+            None,
+        ),
+        (pd.DataFrame({"z": [-0.0]}), pd.DataFrame({"z": [0.0]}), "value"),
+        (
+            pd.DataFrame({"ts": _TS.astype("datetime64[ns]")}),
+            pd.DataFrame({"ts": [t.to_pydatetime() for t in _TS]}, dtype=object),
+            None,
+        ),
+        (
+            pd.DataFrame({"k": [1, 2, 3], "v": ["a", "b", "c"]}),
+            pd.DataFrame({"k": [3, 1, 2], "v": ["c", "a", "b"]}),
+            None,
+        ),
+    ],
+    ids=[
+        "row-count",
+        "column-set",
+        "column-case",
+        "int-vs-float",
+        "none-vs-nan",
+        "signed-zero",
+        "datetime-vs-python",
+        "row-order",
+    ],
+)
+def test_parity_mismatch_frames(got, want, error):
+    """The frame compare every parity gate shares: row count and column
+    set (case-insensitive), dtype kind, NULL/NaN unification, temporal
+    normalization and order-insensitivity, cell by cell through the
+    signbit-sensitive values_match."""
+    errs = mismatch(got, want)
+    if error is None:
+        assert errs == []
+    else:
+        assert errs and errs[0].startswith(error), errs
 
 
 def test_pairwise_correlation_tiny_negative_corr_is_plus_zero(spark, tmp_path):
     """A return correlation in (-5e-5, 0) rounds to -0.0 in DuckDB and
     +0.0 in Spark; the registry query and its oracle both carry the
     terminal ``+ 0.0``, so the two engines hash-equal on it."""
-    import pandas as pd
-
     from finance_data_pipeline_spark.registry import ORACLES, QUERIES
-    from tests.test_oracle_parity import _values_match
-
     # Designed hourly returns: a alternates, b is orthogonal to a with
     # zero mean, minus eps·a — so corr(a, b) ≈ -eps, a tiny negative.
     eps = 2e-5
@@ -167,4 +214,4 @@ def test_pairwise_correlation_tiny_negative_corr_is_plus_zero(spark, tmp_path):
     want = con.sql(ORACLES["pairwise_correlation"]).fetchall()
     assert len(got) == len(want) == 1
     assert got[0].corr_ab == 0.0 and not _signbit(got[0].corr_ab)
-    assert _values_match(got[0].corr_ab, want[0][2])
+    assert values_match(got[0].corr_ab, want[0][2])

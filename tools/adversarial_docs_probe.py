@@ -29,14 +29,11 @@ text/dedup/similarity expressions:
 from __future__ import annotations
 
 import os
-import shutil
 import sys
-import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-REAL_SF = "/root/testdata/sf0.001"
 LANGS = ["en", "de", "zh", "fr", "es"]
 WORDS = (
     "the fast key order sort table scan merge part window small hash "
@@ -210,90 +207,41 @@ def build_embeddings_pdf():
     )
 
 
-def main() -> int:
-    import duckdb
+def build_embeddings_table():
+    """``build_embeddings_pdf`` as arrow, so the list column is float32
+    like the real corpus (pandas would default to float64)."""
+    import pandas as pd
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
+    epdf = build_embeddings_pdf()
+    return pa.table(
+        {
+            "vec_id": pa.array(epdf["vec_id"], pa.int64()),
+            "embedding": pa.array(epdf["embedding"], pa.list_(pa.float32())),
+            "label": pa.array(
+                [None if pd.isna(v) else int(v) for v in epdf["label"]],
+                pa.int32(),
+            ),
+        }
+    )
+
+
+def main(wanted) -> int:
     from finance_data_pipeline_spark.registry import ORACLES
-    from finance_data_pipeline_spark.schemas import DRIVER_TABLES
-    from finance_data_pipeline_spark.session import get_spark
-    from tools.mini_driver import check_one
+    from tools.mini_driver import run_probe
 
-    wanted = sys.argv[1:]
     names = sorted(
         n
         for n, sql in ORACLES.items()
         if ("documents" in sql or "embeddings" in sql)
         and (not wanted or n in wanted)
     )
-    print(f"{len(names)} documents/embeddings-based oracle queries")
-
-    tmp = tempfile.mkdtemp(prefix="adversarial_docs_")
-    try:
-        dpdf = build_documents_pdf()
-        dpdf.to_parquet(os.path.join(tmp, "documents.parquet"), index=False)
-        epdf = build_embeddings_pdf()
-        # write embeddings via arrow so the list column is float32 like
-        # the real corpus (pandas would default to float64)
-        tbl = pa.table(
-            {
-                "vec_id": pa.array(epdf["vec_id"], pa.int64()),
-                "embedding": pa.array(
-                    epdf["embedding"], pa.list_(pa.float32())
-                ),
-                "label": pa.array(
-                    [None if pd_NA(v) else int(v) for v in epdf["label"]],
-                    pa.int32(),
-                ),
-            }
-        )
-        pq.write_table(tbl, os.path.join(tmp, "embeddings.parquet"))
-        print(
-            f"adversarial docs: {len(dpdf)} rows, embeddings: {len(epdf)}"
-            f" rows -> {tmp}"
-        )
-        for t in DRIVER_TABLES:
-            if t not in ("documents", "embeddings"):
-                shutil.copy(
-                    os.path.join(REAL_SF, f"{t}.parquet"),
-                    os.path.join(tmp, f"{t}.parquet"),
-                )
-
-        spark = get_spark()
-        spark.sparkContext.setLogLevel("ERROR")
-        con = duckdb.connect()
-        for t in DRIVER_TABLES:
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{tmp}/{t}.parquet'")
-
-        n_fail = 0
-        for i, name in enumerate(names):
-            try:
-                errs, dt = check_one(spark, con, name, tmp)
-            except Exception as exc:  # noqa: BLE001
-                errs, dt = [f"EXC {type(exc).__name__}: {exc}"], 0.0
-            if errs:
-                n_fail += 1
-            print(
-                f"[{i+1}/{len(names)}] {'ok' if not errs else 'FAIL':4s} "
-                f"{name} ({dt:.1f}s)"
-                + (f" :: {'; '.join(errs)[:400]}" if errs else ""),
-                flush=True,
-            )
-        print(
-            f"\nsummary: {len(names) - n_fail}/{len(names)} ok on "
-            "adversarial docs/embeddings"
-        )
-        return 1 if n_fail else 0
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def pd_NA(v):
-    import pandas as pd
-
-    return pd.isna(v)
+    tables = {
+        "documents": build_documents_pdf(),
+        "embeddings": build_embeddings_table(),
+    }
+    return run_probe(tables, names, "adversarial docs/embeddings")
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(main(sys.argv[1:]))

@@ -36,14 +36,11 @@ event/session/attribution expressions:
 from __future__ import annotations
 
 import os
-import shutil
 import sys
-import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-REAL_SF = "/root/testdata/sf0.001"
 ETYPES = ["view", "click", "purchase", "signup", "error"]
 
 
@@ -157,15 +154,10 @@ def build_events_pdf():
     )
 
 
-def main() -> int:
-    import duckdb
-
+def main(wanted) -> int:
     from finance_data_pipeline_spark.registry import ORACLES
-    from finance_data_pipeline_spark.schemas import DRIVER_TABLES
-    from finance_data_pipeline_spark.session import get_spark
-    from tools.mini_driver import check_one
+    from tools.mini_driver import run_probe
 
-    wanted = sys.argv[1:]
     names = sorted(
         n
         for n, sql in ORACLES.items()
@@ -174,48 +166,8 @@ def main() -> int:
         and "stocks AS (" not in sql
         and (not wanted or n in wanted)
     )
-    print(f"{len(names)} non-bar events-based oracle queries")
-
-    tmp = tempfile.mkdtemp(prefix="adversarial_events_")
-    try:
-        pdf = build_events_pdf()
-        pdf.to_parquet(os.path.join(tmp, "events.parquet"), index=False)
-        print(f"adversarial events: {len(pdf)} rows -> {tmp}")
-        for t in DRIVER_TABLES:
-            if t != "events":
-                shutil.copy(
-                    os.path.join(REAL_SF, f"{t}.parquet"),
-                    os.path.join(tmp, f"{t}.parquet"),
-                )
-
-        spark = get_spark()
-        spark.sparkContext.setLogLevel("ERROR")
-        con = duckdb.connect()
-        for t in DRIVER_TABLES:
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{tmp}/{t}.parquet'")
-
-        n_fail = 0
-        for i, name in enumerate(names):
-            try:
-                errs, dt = check_one(spark, con, name, tmp)
-            except Exception as exc:  # noqa: BLE001
-                errs, dt = [f"EXC {type(exc).__name__}: {exc}"], 0.0
-            if errs:
-                n_fail += 1
-            print(
-                f"[{i+1}/{len(names)}] {'ok' if not errs else 'FAIL':4s} "
-                f"{name} ({dt:.1f}s)"
-                + (f" :: {'; '.join(errs)[:400]}" if errs else ""),
-                flush=True,
-            )
-        print(
-            f"\nsummary: {len(names) - n_fail}/{len(names)} ok on "
-            "adversarial events"
-        )
-        return 1 if n_fail else 0
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return run_probe({"events": build_events_pdf()}, names, "adversarial events")
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(main(sys.argv[1:]))

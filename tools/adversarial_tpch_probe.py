@@ -37,14 +37,11 @@ relational/ingest/quality expressions:
 from __future__ import annotations
 
 import os
-import shutil
 import sys
-import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-REAL_SF = "/root/testdata/sf0.001"
 SEGMENTS = ["AUTOMOBILE", "MACHINERY", "FURNITURE", "BUILDING", "HOUSEHOLD"]
 PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
 STATUSES = ["O", "F", "P"]
@@ -244,15 +241,10 @@ def build_tables():
     }
 
 
-def main() -> int:
-    import duckdb
-
+def main(wanted) -> int:
     from finance_data_pipeline_spark.registry import ORACLES
-    from finance_data_pipeline_spark.schemas import DRIVER_TABLES
-    from finance_data_pipeline_spark.session import get_spark
-    from tools.mini_driver import check_one
+    from tools.mini_driver import run_probe
 
-    wanted = sys.argv[1:]
     tpch = ("orders", "lineitem", "customer", "supplier", "part", "nation", "region")
     names = sorted(
         n
@@ -261,53 +253,8 @@ def main() -> int:
         and not any(t in sql for t in ("events", "documents", "embeddings"))
         and (not wanted or n in wanted)
     )
-    print(f"{len(names)} TPC-H-table oracle queries")
-
-    tmp = tempfile.mkdtemp(prefix="adversarial_tpch_")
-    try:
-        tables = build_tables()
-        for t, pdf in tables.items():
-            pdf.to_parquet(os.path.join(tmp, f"{t}.parquet"), index=False)
-        print(
-            "adversarial tables:",
-            {t: len(p) for t, p in tables.items()},
-            "->", tmp,
-        )
-        for t in DRIVER_TABLES:
-            if t not in tables:
-                shutil.copy(
-                    os.path.join(REAL_SF, f"{t}.parquet"),
-                    os.path.join(tmp, f"{t}.parquet"),
-                )
-
-        spark = get_spark()
-        spark.sparkContext.setLogLevel("ERROR")
-        con = duckdb.connect()
-        for t in DRIVER_TABLES:
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{tmp}/{t}.parquet'")
-
-        n_fail = 0
-        for i, name in enumerate(names):
-            try:
-                errs, dt = check_one(spark, con, name, tmp)
-            except Exception as exc:  # noqa: BLE001
-                errs, dt = [f"EXC {type(exc).__name__}: {exc}"], 0.0
-            if errs:
-                n_fail += 1
-            print(
-                f"[{i+1}/{len(names)}] {'ok' if not errs else 'FAIL':4s} "
-                f"{name} ({dt:.1f}s)"
-                + (f" :: {'; '.join(errs)[:400]}" if errs else ""),
-                flush=True,
-            )
-        print(
-            f"\nsummary: {len(names) - n_fail}/{len(names)} ok on "
-            "adversarial TPC-H tables"
-        )
-        return 1 if n_fail else 0
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return run_probe(build_tables(), names, "adversarial TPC-H tables")
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(main(sys.argv[1:]))

@@ -16,9 +16,9 @@ driver today and red-flag on a real cluster tomorrow.
 Baseline run: the session defaults (32 shuffle partitions, AQE on,
 128 MB splits). Hostile run: 7 shuffle partitions, 64 KB
 maxPartitionBytes (every parquet file shatters into many input
-splits), AQE partition coalescing off. Outputs are canonicalized
-(column-sorted, row-sorted) and compared with the strict
-signbit-sensitive comparator (tools/parity_compare.values_match).
+splits), AQE partition coalescing off. The two outputs are compared
+with the strict signbit-sensitive comparator
+(tools/parity_compare.mismatch).
 
     python tools/layout_invariance_probe.py            # all queries
     python tools/layout_invariance_probe.py q1 q2      # subset
@@ -42,16 +42,6 @@ HOSTILE = {
 }
 
 
-def _canon(pdf):
-    import pandas as pd
-
-    pdf = pdf.reindex(sorted(pdf.columns), axis=1)
-    for c in pdf.columns:
-        if pdf[c].dtype == object:
-            pdf[c] = pdf[c].where(pd.notna(pdf[c]), None).astype(str)
-    return pdf.sort_values(list(pdf.columns), ignore_index=True)
-
-
 def _run(spark, name, confs):
     """``name``'s output under ``confs``. Dropping Spark's cache first
     makes the memoized bar fixtures (fixtures.py) recompute under this
@@ -69,7 +59,7 @@ def main() -> int:
 
     from finance_data_pipeline_spark.registry import QUERIES
     from finance_data_pipeline_spark.session import get_spark
-    from tools.parity_compare import values_match
+    from tools.parity_compare import mismatch
 
     wanted = sys.argv[1:]
     names = sorted(n for n in QUERIES if not wanted or n in wanted)
@@ -82,24 +72,8 @@ def main() -> int:
     n_fail = 0
     for i, name in enumerate(names):
         t0 = time.time()
-        errs = []
         try:
-            a = _canon(_run(spark, name, defaults))
-            b = _canon(_run(spark, name, HOSTILE))
-            if list(a.columns) != list(b.columns):
-                errs.append(f"cols {list(a.columns)} vs {list(b.columns)}")
-            elif len(a) != len(b):
-                errs.append(f"rows {len(a)} vs {len(b)}")
-            else:
-                for col in a.columns:
-                    if errs:
-                        break
-                    for j, (x, y) in enumerate(
-                        zip(a[col].tolist(), b[col].tolist())
-                    ):
-                        if not values_match(x, y):
-                            errs.append(f"value {col}[{j}]: {x!r} vs {y!r}")
-                            break
+            errs = mismatch(_run(spark, name, defaults), _run(spark, name, HOSTILE))
         except Exception as exc:  # noqa: BLE001
             errs = [f"EXC {type(exc).__name__}: {str(exc)[:300]}"]
         finally:

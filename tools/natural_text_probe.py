@@ -27,14 +27,11 @@ queries still run.
 from __future__ import annotations
 
 import os
-import shutil
 import sys
-import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-REAL_SF = "/root/testdata/sf0.001"
 LANGS = ["en", "de", "zh", "fr", "es"]
 
 # Stopword-rich sentence vocabulary: subjects/verbs/objects plus the
@@ -132,62 +129,19 @@ def build_documents_pdf():
     )
 
 
-def main() -> int:
-    import duckdb
-
+def main(wanted) -> int:
     from finance_data_pipeline_spark.registry import ORACLES
-    from finance_data_pipeline_spark.schemas import DRIVER_TABLES
-    from finance_data_pipeline_spark.session import get_spark
-    from tools.mini_driver import check_one
+    from tools.mini_driver import run_probe
 
-    wanted = sys.argv[1:]
     names = sorted(
         n
         for n, sql in ORACLES.items()
         if "documents" in sql and (not wanted or n in wanted)
     )
-    print(f"{len(names)} documents-based oracle queries")
-
-    tmp = tempfile.mkdtemp(prefix="natural_text_")
-    try:
-        dpdf = build_documents_pdf()
-        dpdf.to_parquet(os.path.join(tmp, "documents.parquet"), index=False)
-        print(f"natural-text docs: {len(dpdf)} rows -> {tmp}")
-        for t in DRIVER_TABLES:
-            if t != "documents":
-                shutil.copy(
-                    os.path.join(REAL_SF, f"{t}.parquet"),
-                    os.path.join(tmp, f"{t}.parquet"),
-                )
-
-        spark = get_spark()
-        spark.sparkContext.setLogLevel("ERROR")
-        con = duckdb.connect()
-        for t in DRIVER_TABLES:
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{tmp}/{t}.parquet'")
-
-        n_fail = 0
-        for i, name in enumerate(names):
-            try:
-                errs, dt = check_one(spark, con, name, tmp)
-            except Exception as exc:  # noqa: BLE001
-                errs, dt = [f"EXC {type(exc).__name__}: {exc}"], 0.0
-            if errs:
-                n_fail += 1
-            print(
-                f"[{i+1}/{len(names)}] {'ok' if not errs else 'FAIL':4s} "
-                f"{name} ({dt:.1f}s)"
-                + (f" :: {'; '.join(errs)[:400]}" if errs else ""),
-                flush=True,
-            )
-        print(
-            f"\nsummary: {len(names) - n_fail}/{len(names)} ok on "
-            "natural punctuated text"
-        )
-        return 1 if n_fail else 0
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return run_probe(
+        {"documents": build_documents_pdf()}, names, "natural punctuated text"
+    )
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(main(sys.argv[1:]))
