@@ -135,18 +135,3 @@ def spark():
     yield s
     s.stop()
 
-
-def spark_jobs(spark, name, fn):
-    """(result of ``fn()``, number of Spark jobs it ran), counted by job
-    group."""
-    sc = spark.sparkContext
-    group = f"job-count-{name}"
-    sc.setJobGroup(group, name)
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup("job-count-idle", "")
-    # The status store is filled from the listener bus asynchronously,
-    # after the action has returned.
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))

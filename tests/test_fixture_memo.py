@@ -12,8 +12,9 @@ import pyarrow.parquet as pq
 from pyspark import StorageLevel
 
 from finance_data_pipeline_spark import fixtures
+from finance_data_pipeline_spark.profile import spark_counts
 from finance_data_pipeline_spark.registry import QUERIES
-from tests.conftest import SF_SMALL, spark_jobs
+from tests.conftest import SF_SMALL
 
 FIXTURES = (fixtures.stocks, fixtures.bars_hourly)
 
@@ -56,7 +57,7 @@ def test_uncached_frame_is_rebuilt(spark, tmp_path):
 def test_hit_builds_with_zero_jobs(spark):
     for f in FIXTURES:
         f(spark, SF_SMALL)
-    built, jobs = spark_jobs(
+    built, jobs, _ = spark_counts(
         spark,
         "memo-hit",
         lambda: [f(spark, SF_SMALL) for f in FIXTURES] + [QUERIES["sma"](spark, SF_SMALL)],

@@ -17,6 +17,10 @@ and, for ``ivf_topk`` (8 cells, 2 probes, 2 Lloyd rounds), the count of
 ``ivf_topk_deterministic`` with the same arguments before the two IVF
 paths were merged into one. A change that adds an eager job or an AQE
 query stage to one of these kernels fails here.
+
+The same reader counts the classes Janino compiles: a warm pass over
+the market chart queries must find its generated code in the codegen
+cache that ``session.get_spark`` sizes.
 """
 
 from __future__ import annotations
@@ -28,9 +32,9 @@ from pyspark.sql import functions as F
 
 from finance_data_pipeline_spark.extensions import dedup, graph, similarity
 from finance_data_pipeline_spark.io import table
+from finance_data_pipeline_spark.profile import spark_counts
 from finance_data_pipeline_spark.registry import QUERIES, _trade_edges
 from tests.conftest import SF_SMALL as SF_DIR
-from tests.conftest import spark_jobs
 
 _MAX_JOBS = {
     "pagerank": 30,
@@ -122,7 +126,7 @@ _KERNELS = {
 @pytest.mark.parametrize("name", sorted(_MAX_JOBS))
 def test_kernel_job_count_does_not_grow(spark, name):
     _dup_pairs(spark)  # collected before the count starts
-    rows, jobs = spark_jobs(spark, name, lambda: _KERNELS[name](spark).collect())
+    rows, jobs, _ = spark_counts(spark, name, lambda: _KERNELS[name](spark).collect())
     assert rows
     assert jobs <= _MAX_JOBS[name], (
         f"{name}: {jobs} Spark jobs to build and collect, bound {_MAX_JOBS[name]}"
@@ -135,8 +139,47 @@ def test_fixture_query_job_count_does_not_grow(spark, name):
     queries over the memoized bar fixtures, once the memo is warm, as
     on a dashboard's second chart."""
     QUERIES[name](spark, SF_DIR).collect()
-    rows, jobs = spark_jobs(spark, name, lambda: QUERIES[name](spark, SF_DIR).collect())
+    rows, jobs, _ = spark_counts(spark, name, lambda: QUERIES[name](spark, SF_DIR).collect())
     assert rows
     assert jobs <= _MAX_QUERY_JOBS[name], (
         f"{name}: {jobs} Spark jobs to build and collect, bound {_MAX_QUERY_JOBS[name]}"
+    )
+
+
+# The market workload's chart queries (perfbench/workloads.py
+# MARKET_QUERIES), spelled out so the tests do not import the benchmark.
+_MARKET_QUERIES = (
+    "stocks_fixture",
+    "sma",
+    "rsi_14",
+    "bollinger",
+    "ma_warmup",
+    "perf_summary",
+    "dashboard_frame",
+    "latest_close_per_symbol",
+    "vwap_daily",
+    "volatility_30",
+    "ema_macd",
+    "pairwise_correlation",
+    "max_drawdown",
+    "continuity_check",
+)
+_MAX_WARM_COMPILES = 2
+
+
+def test_warm_market_pass_compiles_at_most_two_classes(spark):
+    """The market queries built and sunk to ``noop`` twice back to back:
+    the second pass finds its generated classes in the codegen cache.
+    sf0.001 builds the same plans as sf0.1; at Spark's default of 100
+    cache entries the second pass recompiles most of them."""
+
+    def market_pass():
+        for name in _MARKET_QUERIES:
+            QUERIES[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+
+    market_pass()
+    _, _, compiles = spark_counts(spark, "market-warm", market_pass)
+    assert compiles <= _MAX_WARM_COMPILES, (
+        f"a warm pass over {len(_MARKET_QUERIES)} market queries compiled "
+        f"{compiles} classes, bound {_MAX_WARM_COMPILES}"
     )
